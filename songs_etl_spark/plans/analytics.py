@@ -4005,13 +4005,17 @@ def theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranks + exact integer offsets reproduce the global ranks and the
     # SELECTED VALUES are identical to the global sort's: same order
     # statistic, no single-partition stage over an unbounded relation.
+    # Fewer than 2 distinct dates: no pairs, so c == 0 and mn/mx are NULL.
+    # The short circuit keeps them out of the bucket expression; the empty
+    # selection below then averages to the NULL-median row, as the
+    # oracle's AVG over no rows does.
     k1, k2 = (c + 1) // 2, (c + 2) // 2
     bucket = (
         F.least(
             F.lit(_TS_BINS - 1),
             F.floor((F.col("slope") - F.lit(mn)) / F.lit(mx - mn) * _TS_BINS),
         )
-        if mx > mn
+        if c > 0 and mx > mn
         else F.lit(0)
     )
     binned = pairs.select("slope", bucket.cast("bigint").alias("bin"))

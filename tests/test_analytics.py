@@ -334,3 +334,28 @@ def test_bigram_logprob_closed_form(spark, tmp_path):
     assert out[1]["mean_logprob"] == pytest.approx(round(math.log(3 / 6), 6), abs=1e-9)
     assert out[3]["mean_logprob"] == pytest.approx(round(math.log(2 / 6), 6), abs=1e-9)
     assert out[1]["n_bigrams"] == 1
+
+
+# --- Theil-Sen on degenerate input -------------------------------------------
+
+
+def test_theilsen_single_order_date_is_null_trend(spark, tmp_path):
+    """One distinct order date leaves no day pairs: the query returns the
+    DuckDB oracle's null-median row (n_pairs 0, NULL slope and intercept)
+    instead of raising on its NULL slope bounds."""
+    import duckdb
+
+    from songs_etl_spark.plans.analytics import theilsen_revenue_trend
+    from songs_etl_spark.plans.registry import REGISTRY
+
+    d = str(tmp_path / "one_day")
+    spark.read.parquet(f"{SF_DIR}/orders.parquet").withColumn(
+        "o_orderdate", F.lit("1995-06-17 00:00:00").cast("timestamp")
+    ).write.parquet(d + "/orders.parquet")
+    got = [tuple(r) for r in theilsen_revenue_trend(spark, d).collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM '{d}/orders.parquet/*.parquet'"
+    )
+    want = con.execute(REGISTRY["theilsen_revenue_trend"].oracle).fetchall()
+    assert got == [(1, 0, None, None)] == [tuple(r) for r in want]
