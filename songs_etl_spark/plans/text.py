@@ -9,12 +9,14 @@ aggregation only where an aggregate is asked for.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from songs_etl_spark.functions.text import has_min_tokens, has_token, tokens, word_shingles
-from songs_etl_spark.plans._util import spread, t
+from songs_etl_spark.plans._util import spread, t, track_persist
 from songs_etl_spark.plans.registry import register
 
 #: Tiny per-language stopword inventories for the n-gram/stopword langid
@@ -773,18 +775,27 @@ _BPE_ROUNDS = 8
 #: encodings where replace misses every second occurrence of 'a b a b'.
 _BPE_END = "#"
 
+#: The one regex that splits a brace-encoded word back into its symbol
+#: list; Spark (``_symbols``) and DuckDB (``_sql_symbols``) read it alike.
+_SYM_RE = r"\{([^}]*)\}"
 
-def _duckdb_bpe_sql(rounds: int = _BPE_ROUNDS, final_select: str | None = None) -> str:
-    """Fixed-unroll DuckDB twin of the BPE trainer: per round, count
-    adjacent symbol pairs weighted by word frequency, pick the
-    (count DESC, pair ASC) argmax, and apply the merge to every word via
-    the brace-encoded literal replace. CTEs materialized (DuckDB 1.0
-    re-executes multiply-referenced CTEs — the unroll chains R deep).
-    Default final select emits the merge table (``bpe_train_merges``);
-    pass ``final_select`` to consume the fully-merged vocabulary ``w{R}``
-    instead (``bpe_segment_counts``)."""
-    parts = [
-        f"""
+
+def _symbols() -> F.Column:
+    """Symbol list of the brace-encoded ``p`` column."""
+    return F.regexp_extract_all("p", F.lit(_SYM_RE), 1)
+
+
+def _sql_symbols(col: str) -> str:
+    """DuckDB twin of ``_symbols``."""
+    return f"regexp_extract_all({col}, '{_SYM_RE}', 1)"
+
+
+# DuckDB fragments shared by the BPE and WordPiece unrolls: the corpus
+# word-frequency preamble (w0 = brace-encoded vocabulary), the per-round
+# frequency-weighted adjacent-pair count, and the per-round literal-replace
+# merge of best{r} into w{r+1}. CTEs materialized (DuckDB 1.0 re-executes
+# multiply-referenced CTEs — the unroll chains R deep).
+_SQL_W0 = f"""
         WITH wfreq AS MATERIALIZED (
             SELECT word, COUNT(*) AS freq FROM (
                 SELECT unnest({_DUCKDB_TOKENS}) AS word FROM documents
@@ -795,42 +806,83 @@ def _duckdb_bpe_sql(rounds: int = _BPE_ROUNDS, final_select: str | None = None) 
                    regexp_replace(word, '(.)', '{{\\1}}', 'g') || '{{{_BPE_END}}}' AS p
             FROM wfreq
         )"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f"""
-        , pairs{r} AS (
+
+
+def _sql_pairs(r: int) -> str:
+    return f"""pairs{r} AS (
             SELECT u.pr['a'] AS a, u.pr['b'] AS b, CAST(SUM(freq) AS BIGINT) AS cnt
             FROM (
                 SELECT freq,
                        unnest(list_transform(range(1, len(syms)),
                               i -> {{'a': syms[i], 'b': syms[i + 1]}})) AS pr
                 FROM (
-                    SELECT freq, regexp_extract_all(p, '\\{{([^}}]*)\\}}', 1) AS syms
+                    SELECT freq, {_sql_symbols('p')} AS syms
                     FROM w{r}
                 )
             ) u GROUP BY 1, 2
-        ),
-        best{r} AS MATERIALIZED (
-            SELECT a, b, cnt FROM pairs{r} ORDER BY cnt DESC, a, b LIMIT 1
-        ),
-        w{r + 1} AS MATERIALIZED (
+        )"""
+
+
+def _sql_merge_step(r: int) -> str:
+    return f"""w{r + 1} AS MATERIALIZED (
             SELECT w.word, w.freq,
                    replace(w.p, '{{' || t.a || '}}{{' || t.b || '}}',
                            '{{' || t.a || t.b || '}}') AS p
             FROM w{r} w, best{r} t
         )"""
-        )
+
+
+def _duckdb_merge_sql(rounds: int, round_ctes, extra_cols: str, final_select: str | None) -> str:
+    """Fixed-unroll DuckDB twin of ``_train_merges``: w0, then per round
+    the ``round_ctes(r)`` that end in the 1-row argmax ``best{r}``, then the
+    merge into w{r+1}. The default final select emits the merge table
+    (merge_rank, sym_a, sym_b, pair_count, ``extra_cols``, merged); pass
+    ``final_select`` to consume the fully-merged vocabulary ``w{R}``
+    instead."""
+    parts = [_SQL_W0]
+    for r in range(rounds):
+        parts.append("\n        , " + ",\n        ".join([*round_ctes(r), _sql_merge_step(r)]))
     if final_select is not None:
         parts.append("\n        " + final_select.replace("{R}", str(rounds)))
         return "".join(parts)
     selects = [
         f"SELECT {r + 1} AS merge_rank, a AS sym_a, b AS sym_b, "
-        f"cnt AS pair_count, a || b AS merged FROM best{r}"
+        f"cnt AS pair_count, {extra_cols}a || b AS merged FROM best{r}"
         for r in range(rounds)
     ]
     parts.append("\n        " + "\n        UNION ALL\n        ".join(selects))
     return "".join(parts)
+
+
+def _duckdb_bpe_sql(rounds: int = _BPE_ROUNDS, final_select: str | None = None) -> str:
+    """BPE unroll: per round, the frequency-weighted pair count and its
+    (count DESC, pair ASC) argmax."""
+
+    def round_ctes(r: int) -> list[str]:
+        best = f"""best{r} AS MATERIALIZED (
+            SELECT a, b, cnt FROM pairs{r} ORDER BY cnt DESC, a, b LIMIT 1
+        )"""
+        return [_sql_pairs(r), best]
+
+    return _duckdb_merge_sql(rounds, round_ctes, "", final_select)
+
+
+def _counts_final_select(out_col: str) -> str:
+    """Oracle tail of the segment-count encoders: per-document word and
+    segment counts joined to the fully-merged vocabulary w{R}."""
+    return f"""
+        , doc_words AS (
+            SELECT doc_id, unnest({_DUCKDB_TOKENS}) AS word FROM documents
+        )
+        SELECT d.doc_id,
+               CAST(COUNT(*) AS BIGINT) AS n_words,
+               CAST(SUM(len({_sql_symbols('w.p')})) AS BIGINT)
+                   AS {out_col}
+        FROM doc_words d JOIN w{{R}} w USING (word)
+        GROUP BY d.doc_id"""
+
+
+_MERGES_SCHEMA = "merge_rank int, sym_a string, sym_b string, pair_count bigint, merged string"
 
 
 @register(
@@ -849,22 +901,19 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — (merge_rank, sym_a, sym_b, pair_count, merged) — exactly what
     a BPE tokenizer ships as its model.
 
-    Spark shape per round: one explode + (pair)-keyed sum over the DISTINCT
-    word relation (vocabulary-sized, not corpus-sized — the standard BPE
-    trick of training on the word-frequency dict), a 1-row argmax collect
-    (model state on the driver, like Lloyd's centroids), and a map-side
-    literal replace. At 100 TB the corpus only ever contributes through the
-    one word-count aggregation up front; all R rounds run on the
-    vocabulary relation.
+    Spark shape per round (``_train_merges`` at k=1): one explode +
+    (pair)-keyed sum over the DISTINCT word relation (vocabulary-sized, not
+    corpus-sized — the standard BPE trick of training on the word-frequency
+    dict), an argmax collect (model state on the driver, like Lloyd's
+    centroids), and a map-side literal replace. At 100 TB the corpus only
+    ever contributes through the one word-count aggregation up front; all R
+    rounds run on the vocabulary relation.
 
     Cross-engine exactness: integer frequency sums, binary-collation
     string ordering for the tie-break, and the brace-encoded symbol
     strings make Spark's and DuckDB's literal ``replace`` the identical
     greedy merge (see _BPE_END note)."""
-    out_rows, _, _ = _train_bpe(spark, sf_dir)
-    return spark.createDataFrame(
-        out_rows, "merge_rank int, sym_a string, sym_b string, pair_count bigint, merged string"
-    )
+    return spark.createDataFrame(_train(spark, sf_dir)[0], _MERGES_SCHEMA)
 
 
 @register(
@@ -895,15 +944,7 @@ def bpe_train_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie/overlap-adversarial corpora in tests/test_bpe_batched.py and
     oracle-checked here against the SAME fully-sequential DuckDB unroll as
     ``bpe_train_merges``)."""
-    from songs_etl_spark.plans._util import track_persist
-
-    base = track_persist(_base_words(spark, sf_dir))
-    base.count()
-    out_rows, words, _ = _train_bpe_batched_core(base, _BPE_ROUNDS)
-    track_persist(words)
-    return spark.createDataFrame(
-        out_rows, "merge_rank int, sym_a string, sym_b string, pair_count bigint, merged string"
-    )
+    return spark.createDataFrame(_train(spark, sf_dir, k=_BPE_BATCH_K)[0], _MERGES_SCHEMA)
 
 
 @register(
@@ -927,15 +968,8 @@ def bpe_train_merges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Zipf tail). Production tokenizer runs (1M+ word vocabularies,
     R=30k) sit on the delta side of the crossover; the registered-corpus
     default stays recount."""
-    from songs_etl_spark.plans._util import track_persist
-
-    base = track_persist(_base_words(spark, sf_dir))
-    base.count()
-    out_rows, words, _ = _train_bpe_batched_core(base, _BPE_ROUNDS, incremental=True)
-    track_persist(words)
-    return spark.createDataFrame(
-        out_rows, "merge_rank int, sym_a string, sym_b string, pair_count bigint, merged string"
-    )
+    out_rows = _train(spark, sf_dir, k=_BPE_BATCH_K, incremental=True)[0]
+    return spark.createDataFrame(out_rows, _MERGES_SCHEMA)
 
 
 def _base_words(spark: SparkSession, sf_dir: str):
@@ -993,28 +1027,27 @@ def bpe_apply_merges(words: DataFrame, merges: list[tuple[str, str]]) -> DataFra
     return words.mapInPandas(apply_batches, schema=words.schema)
 
 
+def _adjacent_pairs(syms: F.Column) -> F.Column:
+    """(a, b) structs of the adjacent pairs of a symbol list. Callers guard
+    size >= 2: Spark's ``sequence(1, 0)`` DESCENDS instead of being empty,
+    so a 1-symbol word would index element_at out of bounds."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(syms) - 1),
+        lambda i: F.struct(
+            F.element_at(syms, i).alias("a"),
+            F.element_at(syms, i + 1).alias("b"),
+        ),
+    )
+
+
 def _pair_counts(words: DataFrame) -> DataFrame:
-    """Adjacent-symbol pair counts over a brace-encoded (freq, p) relation —
-    the shared per-round aggregation of both BPE trainers: explode each
-    word's adjacent (a, b) symbol pairs, frequency-weighted sum per pair.
-    Fully-merged single-symbol words are filtered first — Spark's
-    ``sequence(1, 0)`` DESCENDS instead of being empty, so a 1-symbol word
-    would index element_at out of bounds."""
-    syms = F.regexp_extract_all("p", F.lit(r"\{([^}]*)\}"), 1)
+    """BPE candidate relation: frequency-weighted (a, b, cnt) adjacent-pair
+    counts over a brace-encoded (freq, p) relation. Additive in ``cnt``,
+    which the incremental trainer's delta fold relies on."""
+    syms = _symbols()
     return (
         words.filter(F.size(syms) >= 2)
-        .select(
-            "freq",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(syms) - 1),
-                    lambda i: F.struct(
-                        F.element_at(syms, i).alias("a"),
-                        F.element_at(syms, i + 1).alias("b"),
-                    ),
-                )
-            ).alias("pr"),
-        )
+        .select("freq", F.explode(_adjacent_pairs(syms)).alias("pr"))
         .groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
         .agg(F.sum("freq").alias("cnt"))
     )
@@ -1024,53 +1057,6 @@ def _merge_replace(col: F.Column, a: str, b: str) -> F.Column:
     """One BPE merge as the brace-encoded literal replace (greedy
     left-to-right non-overlapping on both engines — see _BPE_END)."""
     return F.replace(col, F.lit("{" + a + "}{" + b + "}"), F.lit("{" + a + b + "}"))
-
-
-def _train_bpe_core(base: DataFrame, rounds: int):
-    """Sequential BPE trainer body over a prepared (word, freq, p) base:
-    one pair-count job + one 1-row argmax collect PER MERGE. Returns
-    (merge rows, final words relation — caller persists).
-
-    The per-round relation is materialized with ``localCheckpoint`` (NOT
-    persist): persist keeps the full logical lineage, so round r's plan
-    chains r projections and Catalyst re-analyzes the whole tree on every
-    action — measured on a 20k-word vocabulary, per-round wall time grows
-    from ~1 s to 40+ s by round 16 and the trainer can never reach
-    production round counts (30k merges). Checkpointing truncates the plan
-    to a leaf, making per-round cost CONSTANT in r; the data itself is
-    vocabulary-sized either way (tools/bpe_stress.py measures the R=512
-    curve)."""
-    words = base
-    out_rows = []
-    for r in range(rounds):
-        top = _pair_counts(words).orderBy(F.desc("cnt"), "a", "b").limit(1).collect()
-        if not top:  # vocabulary fully merged (degenerate tiny corpora)
-            break
-        best = top[0]
-        out_rows.append((r + 1, best["a"], best["b"], int(best["cnt"]), best["a"] + best["b"]))
-        # eager=False: the checkpoint materializes INSIDE the next round's
-        # argmax job (or the caller's first action), so each round is ONE
-        # Spark job instead of two — same truncated-plan discipline, half
-        # the driver barriers (guide §1.2/§5).
-        words = words.select(
-            "word", "freq", _merge_replace(F.col("p"), best["a"], best["b"]).alias("p")
-        ).localCheckpoint(eager=False)
-    return out_rows, words
-
-
-def _train_bpe(spark: SparkSession, sf_dir: str, rounds: int = _BPE_ROUNDS):
-    """Shared BPE trainer: returns (merge rows, final (word, freq, p)
-    vocabulary relation with all merges applied, pre-merge base relation).
-    The final relation's plan is self-contained (the merges are baked in as
-    literal replaces), so it stays valid for lazy consumers; final and base
-    are track_persisted for reuse (the Arrow encoder re-applies the merges
-    to the SAME base rather than re-aggregating the corpus)."""
-    from songs_etl_spark.plans._util import track_persist
-
-    base = track_persist(_base_words(spark, sf_dir))
-    base.count()
-    out_rows, words = _train_bpe_core(base, rounds)
-    return out_rows, track_persist(words), base
 
 
 #: Candidate window per batched-trainer round: the top (_BPE_BATCH_K + 1)
@@ -1104,7 +1090,8 @@ def _conflict_free_batch(cands: list, k: int) -> list:
     at every sub-step is exactly the next batch member in sorted order —
     non-overlapping merges commute, and nothing outside the batch can
     overtake them, ties included. Falls back to the plain argmax (the
-    sequential step verbatim) whenever truncation empties the batch."""
+    sequential step verbatim) whenever truncation empties the batch, so
+    k=1 always returns ``cands[0]``."""
     accepted: list = []
     used: set[str] = set()
     c_stop = None
@@ -1120,28 +1107,46 @@ def _conflict_free_batch(cands: list, k: int) -> list:
     return accepted or [cands[0]]
 
 
-def _train_bpe_batched_core(
+def _train_merges(
     base: DataFrame,
     rounds: int,
-    k: int = _BPE_BATCH_K,
+    candidates=_pair_counts,
+    rank: str = "cnt",
+    k: int = 1,
     on_round=None,
     incremental: bool = False,
 ):
-    """Batched BPE trainer body: ONE top-(k+1) collect per ROUND, applying
-    up to k conflict-free merges at a time — ~R/k driver barriers instead
-    of R. Bit-equal to ``_train_bpe_core`` by the ``_conflict_free_batch``
-    argument (property-tested on adversarial corpora; oracle-checked
-    against the sequential DuckDB unroll).
+    """The merge-trainer loop of the BPE and WordPiece families over a
+    prepared (word, freq, p) base. Each driver round ranks the
+    ``candidates(words)`` relation — (a, b, ``rank``, ...) rows — by
+    (``rank`` DESC, a, b), collects the top k+1, applies the
+    ``_conflict_free_batch`` of up to k merges in one map-side literal
+    replace, and records one merge row (merge_rank, *candidate row,
+    merged) per applied merge. At k=1 this is the plain sequential greedy
+    trainer; at k > 1 it needs ~R/k driver barriers and is bit-equal to k=1
+    by the ``_conflict_free_batch`` argument. That argument holds for the
+    count criterion only, as does the delta fold below, so a score-ranked
+    trainer (WordPiece) runs at k=1 without ``incremental``.
+
+    The per-round words relation is materialized with ``localCheckpoint``,
+    not persist: persist keeps the full logical lineage, so round r's plan
+    chains r projections and Catalyst re-analyzes the whole tree on every
+    action — measured on a 20k-word vocabulary, per-round wall time grows
+    from ~1 s to 40+ s by round 16 and the trainer can never reach
+    production round counts (30k merges). Checkpointing truncates the plan
+    to a leaf, making per-round cost CONSTANT in r (tools/bpe_stress.py
+    measures the R=512 curve). ``eager=False`` lets the checkpoint
+    materialize inside the next round's argmax job (or the caller's first
+    action), so each round is one Spark job instead of two.
 
     ``incremental`` selects the pair-count strategy; BOTH are exact and
     produce identical merge tables (asserted head-to-head in
     tools/bpe_stress.py --compare-incremental):
 
     - ``False`` (default): recount all pairs each round — one
-      vocabulary-sized explode + shuffle aggregation per round. NOTE the
-      relation is the DISTINCT-WORD vocabulary (corpus size enters only
-      through the ``freq`` weights), so the recount is vocab-sized, not
-      corpus-sized.
+      vocabulary-sized explode + shuffle aggregation per round over the
+      DISTINCT-WORD vocabulary (corpus size enters only through the
+      ``freq`` weights).
     - ``True``: delta maintenance — filter words to those CONTAINING a
       just-merged pair (literal ``contains``), recount only those before/
       after the merges, fold (negated-old + new) deltas into a
@@ -1151,40 +1156,36 @@ def _train_bpe_batched_core(
       vocabulary (BASELINE.md round 8): 151.9 s vs 100.6 s for the
       recount — SLOWER, because per-round wall is dominated by fixed
       job overhead and the state fold is as large as the recount at this
-      vocab size; the affected-word mass does shrink, but it was never
-      the binding term. Kept as the measured-crossover seam for
-      vocabularies where the pair state is much smaller than the word
-      relation.
+      vocab size. Kept as the measured-crossover seam for vocabularies
+      where the pair state is much smaller than the word relation.
 
-    Returns (merge rows, final words relation, driver-barrier count);
-    ``on_round(barrier_index, merges_done)`` is called after each round so
-    harnesses can record the per-round wall curve without touching the
-    trainer."""
-    from functools import reduce as _reduce
-
+    Returns (merge rows, final words relation — caller persists,
+    driver-barrier count); ``on_round(barrier_index, merges_done)`` is
+    called after each round so harnesses can record the per-round wall
+    curve without touching the trainer."""
+    assert rank == "cnt" or (k == 1 and not incremental), (
+        "batching and delta counts are exact for the count criterion only"
+    )
     words = base
-    counts = _pair_counts(base).localCheckpoint(eager=False) if incremental else None
+    counts = candidates(base).localCheckpoint(eager=False) if incremental else None
     out_rows: list = []
     n_barriers = 0
     while len(out_rows) < rounds:
-        pair_rel = counts if incremental else _pair_counts(words)
-        cands = pair_rel.orderBy(F.desc("cnt"), "a", "b").limit(k + 1).collect()
+        ranked = (counts if incremental else candidates(words)).orderBy(F.desc(rank), "a", "b")
+        cands = ranked.limit(k + 1).collect()
         n_barriers += 1
-        if not cands:
+        if not cands:  # vocabulary fully merged (degenerate tiny corpora)
             break
         batch = _conflict_free_batch(cands, k)[: rounds - len(out_rows)]
         col = F.col("p")
-        hits = []
         for row in batch:
-            out_rows.append(
-                (len(out_rows) + 1, row["a"], row["b"], int(row["cnt"]), row["a"] + row["b"])
-            )
+            out_rows.append((len(out_rows) + 1, *row, row["a"] + row["b"]))
             col = _merge_replace(col, row["a"], row["b"])
-            hits.append(F.col("p").contains("{%s}{%s}" % (row["a"], row["b"])))
         if incremental:
-            affected = words.filter(_reduce(lambda x, y: x | y, hits))
-            neg = _pair_counts(affected).select("a", "b", (-F.col("cnt")).alias("cnt"))
-            pos = _pair_counts(affected.select("word", "freq", col.alias("p")))
+            hits = [F.col("p").contains("{%s}{%s}" % (r["a"], r["b"])) for r in batch]
+            affected = words.filter(reduce(lambda x, y: x | y, hits))
+            neg = candidates(affected).select("a", "b", (-F.col("cnt")).alias("cnt"))
+            pos = candidates(affected.select("word", "freq", col.alias("p")))
             counts = (
                 counts.unionByName(neg)
                 .unionByName(pos)
@@ -1193,32 +1194,44 @@ def _train_bpe_batched_core(
                 .filter(F.col("cnt") != 0)
                 .localCheckpoint(eager=False)
             )
-        # localCheckpoint, not persist: constant-per-round plan (see
-        # _train_bpe_core — lineage growth is the production-R blocker);
-        # eager=False so the materialization rides the next round's argmax
-        # job instead of being its own driver barrier.
         words = words.select("word", "freq", col.alias("p")).localCheckpoint(eager=False)
         if on_round is not None:
             on_round(n_barriers, len(out_rows))
     return out_rows, words, n_barriers
 
 
-#: Shared oracle tail for both BPE apply-side registrations: per-document
-#: word + segment counts joined to the fully-merged vocabulary w{R}. ONE
-#: definition so the expression-form and Arrow-form oracles can never
-#: silently diverge (the brace-escape chain is fragile to hand-copying).
-_BPE_COUNTS_FINAL_SELECT = """
-        , doc_words AS (
-            SELECT doc_id, unnest({toks}) AS word FROM documents
+def _train(spark: SparkSession, sf_dir: str, rounds: int = _BPE_ROUNDS, **train_kw):
+    """Train on the corpus: returns (merge rows, final (word, freq, p)
+    vocabulary relation with all merges applied, pre-merge base relation).
+    The final relation's plan is self-contained (the merges are baked in as
+    literal replaces), so it stays valid for lazy consumers; final and base
+    are track_persisted for reuse (the Arrow encoder re-applies the merges
+    to the SAME base rather than re-aggregating the corpus).
+    ``train_kw`` goes to ``_train_merges``."""
+    base = track_persist(_base_words(spark, sf_dir))
+    base.count()
+    out_rows, words, _ = _train_merges(base, rounds, **train_kw)
+    return out_rows, track_persist(words), base
+
+
+def _segment_counts(
+    spark: SparkSession, sf_dir: str, vocab: DataFrame, out_col: str
+) -> DataFrame:
+    """Encoder tail: one broadcast join of a merged (word, p) vocabulary
+    onto the exploded token stream + a per-doc integer aggregation —
+    (doc_id, n_words, ``out_col``), the corpus-sized work being a single
+    map-side join + one doc-keyed sum."""
+    docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
+    flat = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
+    return (
+        flat.join(F.broadcast(vocab.select("word", "p")), "word")
+        .select("doc_id", F.size(_symbols()).alias("n_sym"))
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_words"),
+            F.sum("n_sym").cast("bigint").alias(out_col),
         )
-        SELECT d.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_words,
-               CAST(SUM(len(regexp_extract_all(w.p, '\\{{([^}}]*)\\}}', 1))) AS BIGINT)
-                   AS n_bpe_tokens
-        FROM doc_words d JOIN w{R} w USING (word)
-        GROUP BY d.doc_id""".replace("{toks}", _DUCKDB_TOKENS).replace("{{", "{").replace(
-    "}}", "}"
-)
+    )
 
 
 @register(
@@ -1226,7 +1239,7 @@ _BPE_COUNTS_FINAL_SELECT = """
     doc="tokenizer APPLY: per-document BPE segment counts under the learned "
     "merge table — the token-budget accounting a trained tokenizer feeds "
     "into packing/quota stages",
-    oracle=_duckdb_bpe_sql(final_select=_BPE_COUNTS_FINAL_SELECT),
+    oracle=_duckdb_bpe_sql(final_select=_counts_final_select("n_bpe_tokens")),
 )
 def bpe_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode step of the BPE pair: apply the ``bpe_train_merges`` model to
@@ -1237,22 +1250,8 @@ def bpe_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     real subword tokenizer instead of whitespace tokens.
 
     Plan: training as in ``bpe_train_merges`` (vocabulary relation only),
-    then one broadcast join of the merged vocabulary onto the exploded
-    token stream + a per-doc integer aggregation — the corpus-sized work is
-    a single map-side join + one doc-keyed sum."""
-    _, words, _ = _train_bpe(spark, sf_dir)
-    docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
-    flat = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
-    n_sym = F.size(F.regexp_extract_all("p", F.lit(r"\{([^}]*)\}"), 1))
-    return (
-        flat.join(F.broadcast(words.select("word", "p")), "word")
-        .select("doc_id", n_sym.alias("n_sym"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_sym").cast("bigint").alias("n_bpe_tokens"),
-        )
-    )
+    then the ``_segment_counts`` tail."""
+    return _segment_counts(spark, sf_dir, _train(spark, sf_dir)[1], "n_bpe_tokens")
 
 
 @register(
@@ -1260,7 +1259,7 @@ def bpe_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="tokenizer APPLY, production encoder path: per-document BPE segment "
     "counts with the merge table applied model-in-closure via Arrow "
     "(arbitrary merge-table size) instead of an R-deep replace chain",
-    oracle=_duckdb_bpe_sql(final_select=_BPE_COUNTS_FINAL_SELECT),
+    oracle=_duckdb_bpe_sql(final_select=_counts_final_select("n_bpe_tokens")),
 )
 def bpe_segment_counts_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``bpe_segment_counts`` with the encode step swapped to the
@@ -1273,21 +1272,9 @@ def bpe_segment_counts_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified per run, not assumed. This is the shape that survives a 30k+
     merge production tokenizer, where an O(R)-deep expression chain stops
     compiling; R here stays the oracle's unroll depth."""
-    merge_rows, _, base = _train_bpe(spark, sf_dir)
-    merges = [(m[1], m[2]) for m in merge_rows]
-    applied = bpe_apply_merges(base.select("word", "p"), merges)
-    docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
-    flat = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
-    n_sym = F.size(F.regexp_extract_all("p", F.lit(r"\{([^}]*)\}"), 1))
-    return (
-        flat.join(F.broadcast(applied), "word")
-        .select("doc_id", n_sym.alias("n_sym"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_sym").cast("bigint").alias("n_bpe_tokens"),
-        )
-    )
+    merge_rows, _, base = _train(spark, sf_dir)
+    applied = bpe_apply_merges(base.select("word", "p"), [(m[1], m[2]) for m in merge_rows])
+    return _segment_counts(spark, sf_dir, applied, "n_bpe_tokens")
 
 
 # ---------------------------------------------------------------------------
@@ -1302,164 +1289,67 @@ _WP_ROUNDS = 8
 
 
 def _duckdb_wordpiece_sql(rounds: int = _WP_ROUNDS, final_select: str | None = None) -> str:
-    """Fixed-unroll DuckDB twin of the WordPiece trainer: per round, count
-    adjacent symbol pairs AND individual symbol occurrences (both
-    frequency-weighted), score each pair by the likelihood criterion
-    ``count(ab) / (count(a) * count(b))``, pick the (score DESC, pair ASC)
-    argmax, and apply the merge via the same brace-encoded literal replace
-    as the BPE unroll. The score is the one double in the pipeline and it
-    is a deterministic per-row expression over exact int64 sums (both
-    engines' int64→double conversion and division are correctly rounded),
-    so the argmax — ties broken on binary string order — is bit-identical
-    cross-engine."""
-    parts = [
-        f"""
-        WITH wfreq AS MATERIALIZED (
-            SELECT word, COUNT(*) AS freq FROM (
-                SELECT unnest({_DUCKDB_TOKENS}) AS word FROM documents
-            ) GROUP BY word
-        ),
-        w0 AS MATERIALIZED (
-            SELECT word, freq,
-                   regexp_replace(word, '(.)', '{{\\1}}', 'g') || '{{{_BPE_END}}}' AS p
-            FROM wfreq
-        )"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f"""
-        , syms{r} AS MATERIALIZED (
+    """WordPiece unroll: per round, count adjacent symbol pairs AND
+    individual symbol occurrences (both frequency-weighted), score each
+    pair by the likelihood criterion ``count(ab) / (count(a) * count(b))``
+    and pick the (score DESC, pair ASC) argmax. The score is the one double
+    in the pipeline and it is a deterministic per-row expression over exact
+    int64 sums (both engines' int64→double conversion and division are
+    correctly rounded), so the argmax — ties broken on binary string order
+    — is bit-identical cross-engine."""
+
+    def round_ctes(r: int) -> list[str]:
+        syms = f"""syms{r} AS MATERIALIZED (
             SELECT s AS sym, CAST(SUM(freq) AS BIGINT) AS c
             FROM (
-                SELECT freq, unnest(regexp_extract_all(p, '\\{{([^}}]*)\\}}', 1)) AS s
+                SELECT freq, unnest({_sql_symbols('p')}) AS s
                 FROM w{r}
             ) GROUP BY s
-        ),
-        pairs{r} AS (
-            SELECT u.pr['a'] AS a, u.pr['b'] AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-            FROM (
-                SELECT freq,
-                       unnest(list_transform(range(1, len(syms)),
-                              i -> {{'a': syms[i], 'b': syms[i + 1]}})) AS pr
-                FROM (
-                    SELECT freq, regexp_extract_all(p, '\\{{([^}}]*)\\}}', 1) AS syms
-                    FROM w{r}
-                )
-            ) u GROUP BY 1, 2
-        ),
-        best{r} AS MATERIALIZED (
+        )"""
+        best = f"""best{r} AS MATERIALIZED (
             SELECT p.a, p.b, p.cnt, sa.c AS ca, sb.c AS cb,
                    CAST(p.cnt AS DOUBLE) / CAST(sa.c * sb.c AS DOUBLE) AS score
             FROM pairs{r} p
             JOIN syms{r} sa ON sa.sym = p.a
             JOIN syms{r} sb ON sb.sym = p.b
             ORDER BY score DESC, p.a, p.b LIMIT 1
-        ),
-        w{r + 1} AS MATERIALIZED (
-            SELECT w.word, w.freq,
-                   replace(w.p, '{{' || t.a || '}}{{' || t.b || '}}',
-                           '{{' || t.a || t.b || '}}') AS p
-            FROM w{r} w, best{r} t
         )"""
-        )
-    if final_select is not None:
-        parts.append("\n        " + final_select.replace("{R}", str(rounds)))
-        return "".join(parts)
-    selects = [
-        f"SELECT {r + 1} AS merge_rank, a AS sym_a, b AS sym_b, "
-        f"cnt AS pair_count, ca AS count_a, cb AS count_b, score, "
-        f"a || b AS merged FROM best{r}"
-        for r in range(rounds)
-    ]
-    parts.append("\n        " + "\n        UNION ALL\n        ".join(selects))
-    return "".join(parts)
+        return [syms, _sql_pairs(r), best]
+
+    extra_cols = "ca AS count_a, cb AS count_b, score, "
+    return _duckdb_merge_sql(rounds, round_ctes, extra_cols, final_select)
 
 
-def _symbol_counts(words: DataFrame) -> DataFrame:
-    """Frequency-weighted occurrence count per symbol over a brace-encoded
-    (freq, p) relation — the denominator relation of the WordPiece score.
-    Vocabulary-sized aggregation; output is alphabet+merges-sized (tiny)."""
-    syms = F.regexp_extract_all("p", F.lit(r"\{([^}]*)\}"), 1)
+def _wordpiece_scores(words: DataFrame) -> DataFrame:
+    """WordPiece candidate relation: (a, b, cnt, ca, cb, score) with score =
+    cnt / (ca · cb). ONE vocabulary-sized explode + aggregation tallies
+    adjacent pairs and symbol occurrences together (a pair row is (a, b), a
+    symbol row is (a, NULL) — disjoint key spaces, one shuffle), checkpointed
+    so the score join's two broadcast reads of the symbol slice do not each
+    re-run the explode. Counts are exact integer sums; the score is one
+    correctly-rounded division."""
+    syms = _symbols()
+    pairs = F.when(F.size(syms) >= 2, _adjacent_pairs(syms)).otherwise(F.array())
+    singles = F.transform(
+        syms, lambda s: F.struct(s.alias("a"), F.lit(None).cast("string").alias("b"))
+    )
+    tallies = (
+        words.select("freq", F.explode(F.concat(pairs, singles)).alias("pr"))
+        .groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
+        .agg(F.sum("freq").alias("cnt"))
+    ).localCheckpoint(eager=False)
+    sc = tallies.filter(F.col("b").isNull())
+    score = F.col("cnt").cast("double") / (F.col("ca") * F.col("cb")).cast("double")
     return (
-        words.select("freq", F.explode(syms).alias("sym"))
-        .groupBy("sym")
-        .agg(F.sum("freq").alias("c"))
+        tallies.filter(F.col("b").isNotNull())
+        .join(F.broadcast(sc.select("a", F.col("cnt").alias("ca"))), "a")
+        .join(F.broadcast(sc.select(F.col("a").alias("b"), F.col("cnt").alias("cb"))), "b")
+        .select("a", "b", "cnt", "ca", "cb", score.alias("score"))
     )
 
 
-def _train_wordpiece_core(base: DataFrame, rounds: int):
-    """Sequential WordPiece trainer body over a prepared (word, freq, p)
-    base: per round, ONE vocabulary-sized explode+aggregation that counts
-    adjacent pairs and symbol occurrences together (a pair row is
-    (a, b), a symbol row is (a, NULL) — disjoint key spaces, one shuffle),
-    checkpointed so the score join's two broadcast reads of the symbol
-    slice do not re-run the explode; then a 1-row argmax collect and a
-    map-side literal replace. Previously the round ran the explode THREE
-    times (the pair count once and the un-materialized symbol count once
-    per broadcast side — guide §2.4). Counts are identical integer sums;
-    the score expression is unchanged. Same localCheckpoint-per-round
-    discipline as ``_train_bpe_core`` (constant per-round plan depth)."""
-    words = base
-    out_rows = []
-    for r in range(rounds):
-        syms = F.regexp_extract_all("p", F.lit(r"\{([^}]*)\}"), 1)
-        pair_structs = F.when(
-            F.size(syms) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(syms) - 1),
-                lambda i: F.struct(
-                    F.element_at(syms, i).alias("a"),
-                    F.element_at(syms, i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array())
-        sym_structs = F.transform(
-            syms,
-            lambda s: F.struct(
-                s.alias("a"), F.lit(None).cast("string").alias("b")
-            ),
-        )
-        tallies = (
-            words.select(
-                "freq",
-                F.explode(F.concat(pair_structs, sym_structs)).alias("pr"),
-            )
-            .groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
-            .agg(F.sum("freq").alias("cnt"))
-        ).localCheckpoint(eager=False)
-        sc = tallies.filter(F.col("b").isNull()).select(
-            F.col("a").alias("sym"), F.col("cnt").alias("c")
-        )
-        scored = (
-            tallies.filter(F.col("b").isNotNull())
-            .join(F.broadcast(sc.select(F.col("sym").alias("a"), F.col("c").alias("ca"))), "a")
-            .join(F.broadcast(sc.select(F.col("sym").alias("b"), F.col("c").alias("cb"))), "b")
-            .withColumn(
-                "score",
-                F.col("cnt").cast("double")
-                / (F.col("ca") * F.col("cb")).cast("double"),
-            )
-        )
-        top = scored.orderBy(F.desc("score"), "a", "b").limit(1).collect()
-        if not top:  # vocabulary fully merged (degenerate tiny corpora)
-            break
-        best = top[0]
-        out_rows.append(
-            (
-                r + 1,
-                best["a"],
-                best["b"],
-                int(best["cnt"]),
-                int(best["ca"]),
-                int(best["cb"]),
-                float(best["score"]),
-                best["a"] + best["b"],
-            )
-        )
-        words = words.select(
-            "word", "freq", _merge_replace(F.col("p"), best["a"], best["b"]).alias("p")
-        ).localCheckpoint(eager=False)
-    return out_rows, words
+#: ``_train`` arguments of the WordPiece trainer.
+_WP_TRAIN = dict(rounds=_WP_ROUNDS, candidates=_wordpiece_scores, rank="score")
 
 
 @register(
@@ -1474,20 +1364,19 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the first ``_WP_ROUNDS`` WordPiece merges on the corpus
     word-frequency table. Identical mechanics to ``bpe_train_merges``
     (brace-encoded symbol sequences, greedy literal-replace merge,
-    vocabulary-sized per-round state) with one change — the merge
-    criterion: BPE merges the most FREQUENT adjacent pair; WordPiece merges
-    the pair maximizing ``count(ab) / (count(a) * count(b))``, the
-    likelihood gain of the merge under a unigram model. That denominator
-    is what makes WordPiece prefer gluing rare-but-predictive symbol pairs
-    over merely common ones — the criterion BERT's tokenizer ships.
+    vocabulary-sized per-round state, the same ``_train_merges`` loop at
+    k=1) with one change — the merge criterion: BPE merges the most
+    FREQUENT adjacent pair; WordPiece merges the pair maximizing
+    ``count(ab) / (count(a) * count(b))``, the likelihood gain of the merge
+    under a unigram model. That denominator is what makes WordPiece prefer
+    gluing rare-but-predictive symbol pairs over merely common ones — the
+    criterion BERT's tokenizer ships.
 
-    Spark shape per round: the same explode+sum pair count as BPE PLUS one
-    symbol-occurrence aggregation (both vocabulary-sized, never
-    corpus-sized — the corpus contributes only through the word-frequency
-    aggregation up front), the tiny symbol relation broadcast into the
-    score join, one 1-row argmax collect (model state on the driver), one
-    map-side replace. At 100 TB all R rounds run on the checkpointed
-    vocabulary relation, exactly like the BPE family.
+    Spark shape per round: the ``_wordpiece_scores`` tally (vocabulary-
+    sized, never corpus-sized — the corpus contributes only through the
+    word-frequency aggregation up front), the tiny symbol slice broadcast
+    into the score join, one argmax collect (model state on the driver),
+    one map-side replace.
 
     Cross-engine exactness: all counts are integer sums; the score is a
     single correctly-rounded division of int64-exact doubles (registry
@@ -1495,31 +1384,11 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break selects the identical merge on both engines. Completes the
     tokenizer-trainer trio: BPE (frequency), WordPiece (likelihood),
     unigram-LM (EM + prune)."""
-    from songs_etl_spark.plans._util import track_persist
-
-    base = track_persist(_base_words(spark, sf_dir))
-    base.count()
-    out_rows, words = _train_wordpiece_core(base, _WP_ROUNDS)
-    track_persist(words)
     return spark.createDataFrame(
-        out_rows,
+        _train(spark, sf_dir, **_WP_TRAIN)[0],
         "merge_rank int, sym_a string, sym_b string, pair_count bigint, "
         "count_a bigint, count_b bigint, score double, merged string",
     )
-
-
-_WP_COUNTS_FINAL_SELECT = """
-        , doc_words AS (
-            SELECT doc_id, unnest({toks}) AS word FROM documents
-        )
-        SELECT d.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_words,
-               CAST(SUM(len(regexp_extract_all(w.p, '\\{{([^}}]*)\\}}', 1))) AS BIGINT)
-                   AS n_wp_tokens
-        FROM doc_words d JOIN w{R} w USING (word)
-        GROUP BY d.doc_id""".replace("{toks}", _DUCKDB_TOKENS).replace("{{", "{").replace(
-    "}}", "}"
-)
 
 
 @register(
@@ -1527,7 +1396,7 @@ _WP_COUNTS_FINAL_SELECT = """
     doc="tokenizer APPLY, WordPiece: per-document segment counts under the "
     "likelihood-learned merge table — train+apply parity with the BPE "
     "family for the third tokenizer",
-    oracle=_duckdb_wordpiece_sql(final_select=_WP_COUNTS_FINAL_SELECT),
+    oracle=_duckdb_wordpiece_sql(final_select=_counts_final_select("n_wp_tokens")),
 )
 def wordpiece_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode step of the WordPiece pair: apply the
@@ -1536,30 +1405,10 @@ def wordpiece_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface ``bpe_segment_counts`` gives the frequency-trained model.
     Comparing the two columns on the same corpus is the standard
     tokenizer-selection diff (likelihood merges buy better compression on
-    rare-morphology text; frequency merges on head-heavy text).
-
-    Plan identical to the BPE encoder: training touches only the
-    vocabulary relation; the corpus-sized work is one broadcast join of
-    the merged vocabulary onto the exploded token stream plus a per-doc
-    integer aggregation."""
-    from songs_etl_spark.plans._util import track_persist
-
-    base = track_persist(_base_words(spark, sf_dir))
-    base.count()
-    _, words = _train_wordpiece_core(base, _WP_ROUNDS)
-    words = track_persist(words)
-    docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
-    flat = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
-    n_sym = F.size(F.regexp_extract_all("p", F.lit(r"\{([^}]*)\}"), 1))
-    return (
-        flat.join(F.broadcast(words.select("word", "p")), "word")
-        .select("doc_id", n_sym.alias("n_sym"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_sym").cast("bigint").alias("n_wp_tokens"),
-        )
-    )
+    rare-morphology text; frequency merges on head-heavy text). Plan
+    identical to the BPE encoder."""
+    words = _train(spark, sf_dir, **_WP_TRAIN)[1]
+    return _segment_counts(spark, sf_dir, words, "n_wp_tokens")
 
 
 #: Unigram-LM tokenizer geometry: candidate pieces are ALL substrings of
@@ -2305,26 +2154,23 @@ def kneser_ney_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Fertility oracle tail: per-language word/char/subword totals under the
-#: learned merges. Single-brace literals — ``_duckdb_bpe_sql`` only
-#: substitutes the {R} placeholder.
-_BPE_FERTILITY_FINAL_SELECT = (
-    """
+#: learned merges.
+_BPE_FERTILITY_FINAL_SELECT = f"""
         , doc_words AS (
-            SELECT lang, unnest(TOKS) AS word FROM documents
+            SELECT lang, unnest({_DUCKDB_TOKENS}) AS word FROM documents
         )
         SELECT d.lang,
                CAST(COUNT(*) AS BIGINT) AS n_words,
                CAST(SUM(LENGTH(d.word)) AS BIGINT) AS n_chars,
-               CAST(SUM(len(regexp_extract_all(w.p, '\\{([^}]*)\\}', 1))) AS BIGINT)
+               CAST(SUM(len({_sql_symbols('w.p')})) AS BIGINT)
                    AS n_bpe_tokens,
-               CAST(SUM(len(regexp_extract_all(w.p, '\\{([^}]*)\\}', 1))) AS DOUBLE)
+               CAST(SUM(len({_sql_symbols('w.p')})) AS DOUBLE)
                    / CAST(COUNT(*) AS DOUBLE) AS fertility,
                CAST(SUM(LENGTH(d.word)) AS DOUBLE)
-                   / CAST(SUM(len(regexp_extract_all(w.p, '\\{([^}]*)\\}', 1))) AS DOUBLE)
+                   / CAST(SUM(len({_sql_symbols('w.p')})) AS DOUBLE)
                    AS chars_per_token
-        FROM doc_words d JOIN w{R} w USING (word)
-        GROUP BY d.lang""".replace("TOKS", _DUCKDB_TOKENS)
-)
+        FROM doc_words d JOIN w{{R}} w USING (word)
+        GROUP BY d.lang"""
 
 
 @register(
@@ -2345,17 +2191,16 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines).
 
     Plan shape: training touches only the vocabulary-sized word-frequency
-    relation (``_train_bpe``); the audit is one broadcast join of the
+    relation (``_train``); the audit is one broadcast join of the
     merged vocabulary onto the exploded (lang, word) stream plus a
     per-language integer aggregation — exact integer totals, ratios as one
     double division each."""
-    _, words, _ = _train_bpe(spark, sf_dir)
+    words = _train(spark, sf_dir)[1]
     docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
     flat = docs.select("lang", F.explode(tokens("text")).alias("word"))
-    n_sym = F.size(F.regexp_extract_all("p", F.lit(r"\{([^}]*)\}"), 1))
     agg = (
         flat.join(F.broadcast(words.select("word", "p")), "word")
-        .select("lang", F.length("word").alias("wlen"), n_sym.alias("n_sym"))
+        .select("lang", F.length("word").alias("wlen"), F.size(_symbols()).alias("n_sym"))
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_words"),
@@ -2677,8 +2522,6 @@ def _nb_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the relation both ``naive_bayes_langid`` (argmax → confusion matrix)
     and ``langid_confidence_margin`` (top1−top2 → abstain decision)
     consume; the twin of the oracle's ``sc`` CTE (_NB_SQL_PREFIX)."""
-    from songs_etl_spark.plans._util import track_persist
-
     def lq(col: F.Column) -> F.Column:
         return F.floor(F.round(F.log(col), 9) * F.lit(1_000_000)).cast("bigint")
 
@@ -2907,8 +2750,6 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the Heaps-sublinear vocabulary graph, and each round is one
     edge⋈rank equi-join + integer sum — the LPA/PageRank round shape.
     The edge relation persists across rounds."""
-    from songs_etl_spark.plans._util import track_persist
-
     docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
     tok = F.filter(tokens("text"), lambda x: F.length(x) >= 3)
     toks = docs.select(tok.alias("tok")).filter(F.size("tok") >= 2)
@@ -3192,8 +3033,6 @@ def greedy_bigram_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Lloyd/BPE discipline. A production decode batches B prompts per
     step (the argmax becomes a per-prompt window) without changing the
     per-step plan."""
-    from songs_etl_spark.plans._util import track_persist
-
     docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
     tok = docs.filter(has_min_tokens("text", 2)).select(tokens("text").alias("tok"))
     big = track_persist(
@@ -3478,8 +3317,6 @@ def ngram_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("v", F.lag("w", 1).over(wd))
         .withColumn("u", F.lag("w", 2).over(wd))
     )
-    from songs_etl_spark.plans._util import track_persist
-
     seq = track_persist(seq)
     tr = seq.filter(F.col("source") == _SB_TRAIN_SOURCE)
     c1 = tr.groupBy("w").agg(F.count("*").alias("c"))

@@ -1,14 +1,14 @@
-"""Property tests: the batched BPE trainer (top-K conflict-free merges per
-driver round, plans/text._train_bpe_batched_core) is bit-equal to sequential
-greedy BPE on adversarial corpora — ties, overlapping pairs ('abab'), shared
-symbols — where a wrong batch-selection rule would diverge.
+"""Property tests: the merge-trainer loop (plans/text._train_merges) is
+bit-equal to sequential greedy BPE at k=1 and with top-K conflict-free
+merges per driver round (k > 1) on adversarial corpora — ties, overlapping
+pairs ('abab'), shared symbols — where a wrong batch-selection rule would
+diverge.
 
 The independent reference below is a ~20-line pure-Python sequential BPE
 over the same brace encoding (greedy left-to-right str.replace — the exact
 semantics of Spark's F.replace and DuckDB's replace on brace-encoded
-strings), so the equality pins batched-Spark against a third implementation,
-not merely against the Spark sequential core (which is also cross-checked on
-two corpora)."""
+strings), so the equality pins the Spark loop against an independent
+implementation at every k."""
 
 from __future__ import annotations
 
@@ -20,8 +20,7 @@ import pytest
 from songs_etl_spark.plans.text import (
     _BPE_END,
     _conflict_free_batch,
-    _train_bpe_batched_core,
-    _train_bpe_core,
+    _train_merges,
     bpe_encode_base,
 )
 
@@ -54,7 +53,7 @@ def _spark_batched(spark, wordfreq, rounds, k):
     base = bpe_encode_base(
         spark.createDataFrame(wordfreq, "word string, freq bigint")
     ).localCheckpoint(eager=True)
-    rows, words, _ = _train_bpe_batched_core(base, rounds, k=k)
+    rows, words, _ = _train_merges(base, rounds, k=k)
     words.unpersist()
     return rows
 
@@ -70,11 +69,13 @@ CORPORA = {
     "self_pair": [("aaaa", 3), ("aaa", 2)],
     # merge-creates-winner: after (a,b)->ab, pair (ab,c) should win next
     "created_winner": [("abc", 6), ("ab", 1), ("xy", 4)],
+    # zero-row vocabulary: no candidates, no merge rows, no error
+    "empty": [],
 }
 
 
 @pytest.mark.parametrize("name", sorted(CORPORA))
-@pytest.mark.parametrize("k", [2, 4])
+@pytest.mark.parametrize("k", [1, 2, 4])
 def test_batched_equals_reference_adversarial(spark, name, k):
     wf = CORPORA[name]
     assert _spark_batched(spark, wf, 6, k) == _py_sequential_bpe(wf, 6)
@@ -83,7 +84,7 @@ def test_batched_equals_reference_adversarial(spark, name, k):
 def test_random_corpora_three_way(spark):
     """Randomized small-alphabet corpora (maximal tie/conflict density):
     batched == python reference for several seeds and K values, and the
-    Spark sequential core agrees on one of them (three-way consistency)."""
+    sequential (k=1) loop agrees on one of them (three-way consistency)."""
     rng = random.Random(1234)
     for trial in range(4):
         n_words = rng.randint(3, 7)
@@ -99,7 +100,7 @@ def test_random_corpora_three_way(spark):
             base = bpe_encode_base(
                 spark.createDataFrame(wf, "word string, freq bigint")
             ).localCheckpoint(eager=True)
-            rows, words = _train_bpe_core(base, 5)
+            rows, words, _ = _train_merges(base, 5)
             words.unpersist()
             assert rows == ref
 

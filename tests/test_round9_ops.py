@@ -22,8 +22,8 @@ from songs_etl_spark.plans.ranges import (
 from songs_etl_spark.plans.text import (
     _BPE_END as _WP_END,
     _ULM_PIECE_MAX,
-    _train_bpe_core,
-    _train_wordpiece_core,
+    _train_merges,
+    _wordpiece_scores,
     bpe_encode_base,
     unigram_em_expected_arrow,
 )
@@ -361,6 +361,8 @@ WP_CORPORA = {
     "self_pair_wp": [("aaaa", 3), ("aab", 2)],
     # chain where an early merge changes later symbol counts
     "count_shift": [("abc", 6), ("bcd", 4), ("ab", 1), ("cd", 1)],
+    # zero-row vocabulary: no candidates, no merge rows, no error
+    "empty": [],
 }
 
 
@@ -370,7 +372,7 @@ def test_wordpiece_matches_python_reference(spark, name):
     base = bpe_encode_base(
         spark.createDataFrame(corpus, "word string, freq bigint")
     ).localCheckpoint(eager=True)
-    rows, words = _train_wordpiece_core(base, rounds=6)
+    rows, words, _ = _train_merges(base, 6, _wordpiece_scores, "score")
     words.unpersist()
     assert rows == _py_wordpiece(corpus, rounds=6)
 
@@ -382,8 +384,8 @@ def test_wordpiece_diverges_from_bpe_when_likelihood_says_so(spark):
     base = bpe_encode_base(
         spark.createDataFrame(corpus, "word string, freq bigint")
     ).localCheckpoint(eager=True)
-    wp_rows, wp_words = _train_wordpiece_core(base, rounds=1)
-    bpe_rows, bpe_words = _train_bpe_core(base, rounds=1)
+    wp_rows, wp_words, _ = _train_merges(base, 1, _wordpiece_scores, "score")
+    bpe_rows, bpe_words, _ = _train_merges(base, 1)
     wp_words.unpersist()
     bpe_words.unpersist()
     assert (wp_rows[0][1], wp_rows[0][2]) != (bpe_rows[0][1], bpe_rows[0][2])

@@ -1,26 +1,27 @@
 """BPE trainer stress at PRODUCTION round counts (round-6 verdict task 2).
 
 The batched trainer's argument is driver-barrier count: a production
-tokenizer is 30k+ merges, and `bpe_train_merges` pays one Spark job + one
-collect PER MERGE while `bpe_train_merges_batched` pays ~R/K. The
+tokenizer is 30k+ merges, and `bpe_train_merges` (the trainer loop
+`_train_merges` at k=1) pays one Spark job + one collect PER MERGE while
+`bpe_train_merges_batched` (k=K) pays ~R/K. The
 registered oracle regime (R=8) cannot show that, and the TESTDATA corpus
 cannot either — its synthetic text holds only ~31 distinct words, so the
 vocabulary exhausts after a few dozen merges. This harness therefore trains
 on a deterministic ZIPFIAN synthetic vocabulary (hash-composed words, freq
 = 1e6/(rank+1)) through the PUBLIC encoding seam (bpe_encode_base), at
-R>=512 for both trainers and several K values, recording wall time, the
+R>=512 for k=1 and several K values, recording wall time, the
 MEASURED barrier count (which bakes in the conflict/tie truncation rate)
 and bit-equality of the full merge tables.
 
 Round-7 finding this harness exposed: with per-round persist() the logical
 plan chained one projection per round and Catalyst re-analysis made round
-cost grow without bound (~1 s -> 40+ s by round 16 on a 20k vocab); both
-trainer cores now localCheckpoint per round, making per-round cost constant
+cost grow without bound (~1 s -> 40+ s by round 16 on a 20k vocab); the
+trainer loop localCheckpoints per round, making per-round cost constant
 — the fix that actually unlocks production R, independent of K.
 
 Usage:
     python tools/bpe_stress.py [--rounds 512] [--vocab 100000]
-        [--ks 4,16,64,256] [--skip-sequential]
+        [--ks 4,16,64,256] [--skip-sequential] [--compare-incremental]
 """
 
 from __future__ import annotations
@@ -65,7 +66,7 @@ def main() -> int:
     ap.add_argument(
         "--skip-sequential",
         action="store_true",
-        help="measure only the batched legs (the sequential leg is ~R jobs)",
+        help="measure only the batched legs (the sequential k=1 leg is ~R jobs)",
     )
     ap.add_argument(
         "--compare-incremental",
@@ -77,11 +78,7 @@ def main() -> int:
     args = ap.parse_args()
     ks = [int(k) for k in args.ks.split(",")]
 
-    from songs_etl_spark.plans.text import (
-        _train_bpe_batched_core,
-        _train_bpe_core,
-        bpe_encode_base,
-    )
+    from songs_etl_spark.plans.text import _train_merges, bpe_encode_base
     from songs_etl_spark.session import get_spark
 
     spark = get_spark("bpe-stress")
@@ -93,14 +90,14 @@ def main() -> int:
     seq_rows = None
     if not args.skip_sequential:
         t0 = time.perf_counter()
-        seq_rows, seq_words = _train_bpe_core(base, args.rounds)
+        seq_rows, _, seq_barriers = _train_merges(base, args.rounds)
         secs = round(time.perf_counter() - t0, 2)
         results["sequential"] = {
             "secs": secs,
-            "barriers": len(seq_rows),
+            "barriers": seq_barriers,
             "merges": len(seq_rows),
         }
-        print(f"   sequential        {secs:8.2f} s  {len(seq_rows)} barriers", flush=True)
+        print(f"   sequential        {secs:8.2f} s  {seq_barriers} barriers", flush=True)
 
     modes = [False, True] if args.compare_incremental else [False]
     tables: dict = {}
@@ -116,7 +113,7 @@ def main() -> int:
                 round_walls.append(now - last[0])
                 last[0] = now
 
-            rows, words, barriers = _train_bpe_batched_core(
+            rows, _, barriers = _train_merges(
                 base, args.rounds, k=k, on_round=on_round, incremental=incremental
             )
             secs = round(time.perf_counter() - t0, 2)

@@ -12,9 +12,15 @@ documents, embeddings) is replicated ``--mult`` times with deterministic
 id offsets (replica k of a row gets pk + k·(max_pk+1); orders/lineitem
 offset o_orderkey consistently so the star joins keep their fan-out), then
 written as a 32-file parquet directory — multi-file, multi-row-group, so a
-scan yields 32 splits. Dimensions (region/nation/customer/supplier/part)
-are copied unreplicated. No RNG anywhere; the corpus is a pure function of
-the base SF.
+scan yields 32 splits. Replica content is perturbed as in
+tools/scale_stress.py, so the leg measures scan parallelism rather than
+duplicate-group skew: replica k's document text is the base text with its
+tokens reordered by a per-replica hash (``scale_stress._scrambled`` — same
+vocabulary, disjoint shingles), and events.user_id is offset like a key
+(user_id + k·(max_user_id+1)), so replicas add users instead of making
+each user ``--mult`` times denser. Dimensions
+(region/nation/customer/supplier/part) are copied unreplicated. No RNG
+anywhere; the corpus is a pure function of the base SF.
 
 Measurement (``run``): same methodology as bench.py — warm-up pass at
 sf0.001 for codegen, shingle/persist caches cleared before each timed
@@ -44,15 +50,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from songs_etl_spark.session import get_spark
+from tools.scale_stress import _scrambled
 
-#: Tables replicated with id offsets; (table, primary key column).
-HEAVY = [
-    ("lineitem", None),  # keyed off o_orderkey; handled with orders below
-    ("orders", "o_orderkey"),
-    ("events", "event_id"),
-    ("documents", "doc_id"),
-    ("embeddings", "vec_id"),
-]
 DIMS = ["region", "nation", "customer", "supplier", "part"]
 OUT_FILES = 32
 
@@ -61,39 +60,46 @@ def build(base: str, out: str, mult: int) -> None:
     spark = get_spark("scanleg-build")
     os.makedirs(out, exist_ok=True)
 
-    orders = spark.read.parquet(f"{base}/orders.parquet")
-    lineitem = spark.read.parquet(f"{base}/lineitem.parquet")
-    n_ord = orders.agg(F.max("o_orderkey")).first()[0] + 1
+    def read(table: str):
+        return spark.read.parquet(f"{base}/{table}.parquet")
 
-    def replicate(df, key: str, step: int):
-        parts = [df]
+    def step(df, col: str) -> int:
+        return df.agg(F.max(col)).first()[0] + 1
+
+    def write(df, table: str) -> None:
+        df.repartition(OUT_FILES).write.mode("overwrite").parquet(f"{out}/{table}.parquet")
+
+    def replicate(df, offsets: dict[str, int], perturb=lambda k: {}):
+        """Union of ``mult`` replicas; replica k shifts each ``offsets``
+        column by k·step and overrides the columns ``perturb(k)`` returns."""
+        outdf = df
         for k in range(1, mult):
-            parts.append(df.withColumn(key, F.col(key) + F.lit(k * step)))
-        outdf = parts[0]
-        for p in parts[1:]:
-            outdf = outdf.unionByName(p)
+            cols = {c: F.col(c) + F.lit(k * n) for c, n in offsets.items()}
+            outdf = outdf.unionByName(df.withColumns({**cols, **perturb(k)}))
         return outdf
 
     # orders + lineitem share the o_orderkey offset so the star fan-out is
     # preserved per replica.
-    replicate(orders, "o_orderkey", n_ord).repartition(OUT_FILES).write.mode(
-        "overwrite"
-    ).parquet(f"{out}/orders.parquet")
-    replicate(lineitem, "l_orderkey", n_ord).repartition(OUT_FILES).write.mode(
-        "overwrite"
-    ).parquet(f"{out}/lineitem.parquet")
+    orders, lineitem = read("orders"), read("lineitem")
+    n_ord = step(orders, "o_orderkey")
+    write(replicate(orders, {"o_orderkey": n_ord}), "orders")
+    write(replicate(lineitem, {"l_orderkey": n_ord}), "lineitem")
 
-    for table, key in HEAVY[2:]:
-        df = spark.read.parquet(f"{base}/{table}.parquet")
-        step = df.agg(F.max(key)).first()[0] + 1
-        replicate(df, key, step).repartition(OUT_FILES).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{table}.parquet")
+    events = read("events")
+    offsets = {c: step(events, c) for c in ("event_id", "user_id")}
+    write(replicate(events, offsets), "events")
+
+    docs = read("documents")
+    docs = replicate(
+        docs, {"doc_id": step(docs, "doc_id")}, lambda k: {"text": _scrambled(F.col("text"), k)}
+    )
+    write(docs, "documents")
+
+    emb = read("embeddings")
+    write(replicate(emb, {"vec_id": step(emb, "vec_id")}), "embeddings")
 
     for table in DIMS:
-        spark.read.parquet(f"{base}/{table}.parquet").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{table}.parquet")
+        read(table).repartition(4).write.mode("overwrite").parquet(f"{out}/{table}.parquet")
     spark.stop()
 
 
