@@ -31,6 +31,14 @@ from songs_etl_spark.operators.clustering import (
 )
 from songs_etl_spark.plans._util import spread, t, track_persist
 from songs_etl_spark.plans.registry import register
+from songs_etl_spark.plans.similarity import (
+    _duck_ivf_probes,
+    _exact_head,
+    _exact_topk,
+    _ivf_probes,
+    _recall_tail,
+    _top_k,
+)
 
 #: PQ geometry for the registered query: 64-dim vectors → M=4 subspaces of
 #: 16 dims, k=8 codewords per subspace (codes fit 3 bits each — 12 bits per
@@ -309,15 +317,21 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall/memory dial every PQ deployment tunes); the oracle checks the
     COMPUTATION exactly, training included, so quantization error is the
     algorithm's, never the engine's."""
-    emb = track_persist(
+    emb = _micro_emb(spark, sf_dir)
+    return pq_adc_topk(emb, query_max_id=10, topk=_PQ_TOPK)
+
+
+def _micro_emb(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The persisted (vec_id, *cols, emb) embeddings relation, components
+    quantized to integer micro-units."""
+    return track_persist(
         spread(
             t(spark, sf_dir, "embeddings").select(
-                "vec_id", quantize_micro("embedding").alias("emb")
+                "vec_id", *cols, quantize_micro("embedding").alias("emb")
             ),
             key="vec_id",
         )
     )
-    return pq_adc_topk(emb, query_max_id=10, topk=_PQ_TOPK)
 
 
 def pq_adc_topk(
@@ -332,22 +346,9 @@ def pq_adc_topk(
     books = train_pq_codebooks(emb)
     codes = pq_encode_arrow(emb.filter(F.col("vec_id") >= query_max_id), books)
 
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < query_max_id).collect(), key=lambda r: r["vec_id"]
-    )
+    q_rows = _query_rows(emb, query_max_id)
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["emb"] for r in q_rows], dtype=np.float64)
-    # ADC tables: tabs[j] maps codeword id -> per-query exact distance
-    # (fold order), dense-indexed by cluster id for O(1) lookup.
-    tabs = []
-    for j, book in enumerate(books):
-        cmat = np.array([c for _, c in book], dtype=np.float64)
-        cids = [cid for cid, _ in book]
-        d = _fold_d2(q_mat[:, j * _PQ_DSUB : (j + 1) * _PQ_DSUB], cmat)
-        dense = np.full((len(q_rows), max(cids) + 1), np.inf)
-        for col, cid in enumerate(cids):
-            dense[:, cid] = d[:, col]
-        tabs.append(dense)
+    tabs = _adc_tables(books, [r["emb"] for r in q_rows])
     nq, m = len(q_rows), len(books)
 
     def score(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -370,21 +371,76 @@ def pq_adc_topk(
             )
 
     scored = codes.mapInPandas(score, "query_id long, neighbor_id long, adc_dist double")
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
+    return _top_k(scored, topk, "adc_dist", "neighbor_id").select(
+        "query_id", "neighbor_id", "adc_dist", "rank"
+    )
+
+
+def _query_rows(emb: DataFrame, query_max_id: int = 10) -> list:
+    """The query vectors (vec_id < query_max_id) of a (vec_id, emb)
+    relation, collected in vec_id order."""
+    return sorted(
+        emb.filter(F.col("vec_id") < query_max_id).select("vec_id", "emb").collect(),
+        key=lambda r: r["vec_id"],
+    )
+
+
+def _adc_tables(books: list[list[tuple[int, list[float]]]], q_vecs: list) -> list:
+    """Driver-side ADC tables: ``tabs[j][qi, cid]`` is the exact fold-order
+    distance from query ``qi``'s subspace-j slice to codeword ``cid``,
+    dense-indexed by cluster id (inf where no codeword has that id) for
+    O(1) lookup. Geometry-sized (|queries| × M × k); an empty query set
+    or codebook gives empty tables, not an error."""
+    import numpy as np
+
+    q_mat = np.array(q_vecs, dtype=np.float64).reshape(len(q_vecs), len(books) * _PQ_DSUB)
+    tabs = []
+    for j, book in enumerate(books):
+        cmat = np.array([c for _, c in book], dtype=np.float64).reshape(len(book), _PQ_DSUB)
+        cids = [cid for cid, _ in book]
+        dense = np.full((len(q_vecs), max(cids, default=0) + 1), np.inf)
+        dense[:, cids] = _fold_d2(q_mat[:, j * _PQ_DSUB : (j + 1) * _PQ_DSUB], cmat)
+        tabs.append(dense)
+    return tabs
+
+
+def _ivf_adc_scored(
+    codes: DataFrame,
+    probes: DataFrame,
+    books: list[list[tuple[int, list[float]]]],
+    q_rows: list,
+    tabs: list,
+) -> DataFrame:
+    """Join-based ADC inside the probed cells, the JVM twin of
+    :func:`pq_adc_topk`'s closure-based scoring: candidates (vec_id,
+    label, code_0..code_{M-1}) meet the broadcast (query_id, probe_label)
+    probe set on their cell, pick up their M partial distances from one
+    broadcast (query_id, code_j, d_j) table per subspace, and sum them
+    left-to-right in one codegen'd projection — the oracle's
+    ((t0+t1)+t2)+t3 order. Returns (query_id, probe_label, neighbor_id,
+    adc_dist)."""
+    scored = codes.join(F.broadcast(probes), codes["label"] == probes["probe_label"])
+    for j, book in enumerate(books):
+        rows = [
+            (int(r["vec_id"]), int(cid), float(tabs[j][qi, cid]))
+            for qi, r in enumerate(q_rows)
+            for cid, _ in book
+        ]
+        tab = codes.sparkSession.createDataFrame(rows, f"query_id long, code_{j} int, d{j} double")
+        scored = scored.join(F.broadcast(tab), ["query_id", f"code_{j}"])
+    adc = ((F.col("d0") + F.col("d1")) + F.col("d2")) + F.col("d3")
+    return scored.select(
+        "query_id",
+        "probe_label",
+        F.col("vec_id").alias("neighbor_id"),
+        adc.alias("adc_dist"),
     )
 
 
 def _ivfpq_tail() -> str:
     """The IVF-PQ final stage appended to the shared PQ chain: coarse-cell
-    probe (ann_ivf_probe's medoid-representative CTEs, raw-float cosine)
-    restricts each query's candidates to ONE cell; ADC ranks within it."""
-    duck_cos = (
-        "round(list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])), 6)"
-    )
+    probe (:func:`_duck_ivf_probes`: min-vec_id representatives, raw-float
+    cosine) restricts each query's candidates to ONE cell; ADC ranks within it."""
     adc = "((t0.d + t1.d) + t2.d) + t3.d"
     code_joins = "\n            ".join(
         f"JOIN code{m} c{m} ON c{m}.vec_id = c0.vec_id" for m in range(1, _PQ_M)
@@ -395,22 +451,7 @@ def _ivfpq_tail() -> str:
         for m in range(_PQ_M)
     )
     return f"""
-        , reps AS (
-            SELECT label, embedding AS rep_emb FROM (
-                SELECT label, embedding,
-                       ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-                FROM embeddings
-            ) WHERE rn = 1
-        ), probes AS MATERIALIZED (
-            SELECT query_id, probe_label FROM (
-                SELECT q.vec_id AS query_id, r.label AS probe_label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {duck_cos.format(a='q.embedding', b='r.rep_emb')} DESC, r.label
-                       ) AS rn
-                FROM embeddings q CROSS JOIN reps r WHERE q.vec_id < 10
-            ) WHERE rn = 1
-        ), labels AS (
+        , {_duck_ivf_probes(1, materialized=True)}, labels AS (
             SELECT vec_id, label FROM embeddings
         ), scored AS (
             SELECT p.query_id, p.probe_label, c0.vec_id AS neighbor_id, {adc} AS adc_dist
@@ -439,95 +480,29 @@ def _ivfpq_tail() -> str:
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ — the index layout a billion-vector deployment actually
     ships: (1) each query picks its coarse cell against the broadcast
-    one-representative-per-label table (ann_ivf_probe's bit-reproducible
-    medoid stand-in, raw-float cosine); (2) candidates carry their M PQ
-    codes (pq_encode_arrow — at rest, the 64×-compressed index); (3) ADC
-    here is JOIN-based, the JVM twin of ann_pq_adc_topk's closure-based
-    scoring: the per-query lookup tables (geometry-sized, built driver-side
-    with the shared fold) become a broadcast relation per subspace, each
-    candidate row picks up its M partial distances via (query_id, code)
-    equi-joins, and the total sums left-to-right in one codegen'd
-    projection. Cell probe + broadcast lookups means per-query work is one
-    cell's codes — no full-corpus scan, no float vectors at query time.
+    one-representative-per-label table (:func:`_ivf_probes`, raw-float
+    cosine); (2) candidates carry their M PQ codes (pq_encode_arrow — at
+    rest, the 64×-compressed index); (3) ADC here is JOIN-based
+    (:func:`_ivf_adc_scored`), the JVM twin of ann_pq_adc_topk's
+    closure-based scoring. Cell probe + broadcast lookups means per-query
+    work is one cell's codes — no full-corpus scan, no float vectors at
+    query time.
 
     Two ADC formulations, one oracle family: closure-based (Arrow, zero
     join — best when every candidate is scored) and join-based (codegen,
     composes with any candidate-restricting join — best under IVF pruning).
     Both are exact-value-checked against the same unrolled training SQL."""
-    import numpy as np
-
-    emb_raw = t(spark, sf_dir, "embeddings")
-    rep_w = Window.partitionBy("label").orderBy("vec_id")
-    reps = (
-        emb_raw.withColumn("rn", F.row_number().over(rep_w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("rep_label"), F.col("embedding").alias("rep_emb"))
-    )
-    from songs_etl_spark.functions.vectors import cosine_similarity
-
-    q_raw = emb_raw.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.round(cosine_similarity("q_emb", "rep_emb"), 6).desc(), F.col("rep_label")
-    )
-    probes = (
-        q_raw.crossJoin(F.broadcast(reps))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("rep_label").alias("probe_label"))
-    )
-
-    emb = track_persist(
-        spread(
-            emb_raw.select("vec_id", "label", quantize_micro("embedding").alias("emb")),
-            key="vec_id",
-        )
-    )
+    probes = _ivf_probes(t(spark, sf_dir, "embeddings"), 1).select("query_id", "probe_label")
+    emb = _micro_emb(spark, sf_dir, "label")
     books = train_pq_codebooks(emb.select("vec_id", "emb"))
     codes = pq_encode_arrow(
         emb.filter(F.col("vec_id") >= 10).select("vec_id", "emb"), books
     ).join(emb.select("vec_id", "label"), "vec_id")
-
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < 10).select("vec_id", "emb").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    q_mat = np.array([r["emb"] for r in q_rows], dtype=np.float64)
-    spark_tabs = []
-    for j, book in enumerate(books):
-        cmat = np.array([c for _, c in book], dtype=np.float64)
-        cids = [cid for cid, _ in book]
-        d = _fold_d2(q_mat[:, j * _PQ_DSUB : (j + 1) * _PQ_DSUB], cmat)
-        rows = [
-            (int(r["vec_id"]), int(cid), float(d[qi, col]))
-            for qi, r in enumerate(q_rows)
-            for col, cid in enumerate(cids)
-        ]
-        spark_tabs.append(
-            emb.sparkSession.createDataFrame(
-                rows, f"query_id long, code_{j} int, d{j} double"
-            )
-        )
-
-    scored = codes.join(
-        F.broadcast(probes), codes["label"] == probes["probe_label"]
-    )
-    for j in range(_PQ_M):
-        scored = scored.join(F.broadcast(spark_tabs[j]), ["query_id", f"code_{j}"])
-    adc = ((F.col("d0") + F.col("d1")) + F.col("d2")) + F.col("d3")
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        scored.select(
-            "query_id",
-            "probe_label",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "probe_label", "neighbor_id", "adc_dist", "rank")
-    )
+    q_rows = _query_rows(emb)
+    tabs = _adc_tables(books, [r["emb"] for r in q_rows])
+    return _top_k(
+        _ivf_adc_scored(codes, probes, books, q_rows, tabs), _PQ_TOPK, "adc_dist", "neighbor_id"
+    ).select("query_id", "probe_label", "neighbor_id", "adc_dist", "rank")
 
 
 def _pq_recall_oracle() -> str:
@@ -574,28 +549,11 @@ def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings PQ recall rises steeply with structure; the point of this
     query is that the number is MEASURED and pinned, not assumed."""
     pq = ann_pq_adc_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    from songs_etl_spark.plans.similarity import ann_bruteforce_topk
-
-    ex = (
-        ann_bruteforce_topk(spark, sf_dir)
-        .filter(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-    matched = pq.join(ex, ["query_id", "neighbor_id"])
-    return (
-        ex.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count("*").alias("n_exact"),
-        )
-        .crossJoin(pq.agg(F.count("*").alias("n_pq")))
-        .crossJoin(matched.agg(F.count("*").alias("n_matched")))
-        .select(
-            "n_queries",
-            "n_exact",
-            "n_pq",
-            "n_matched",
-            (F.col("n_matched").cast("double") / F.col("n_exact")).alias("recall_at_3"),
-        )
+    ex = _exact_topk(spark, sf_dir, _PQ_TOPK)
+    return _recall_tail(
+        _exact_head(ex),
+        {"n_pq": pq, "n_matched": pq.join(ex, ["query_id", "neighbor_id"])},
+        {"recall_at_3": ("n_matched", "n_exact")},
     )
 
 
@@ -639,9 +597,6 @@ def _ivfpq_residual_tail(refine_c: int | None = None) -> str:
     against the stored vectors (the ``raw`` CTE), emitting the final top-k
     by exact distance — the FAISS refine composition
     (ann_ivfpq_refine_topk)."""
-    duck_cos = (
-        "round(list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])), 6)"
-    )
     adc = "((t0.d + t1.d) + t2.d) + t3.d"
     code_joins = "\n            ".join(
         f"JOIN code{m} c{m} ON c{m}.vec_id = c0.vec_id" for m in range(1, _PQ_M)
@@ -691,22 +646,7 @@ def _ivfpq_residual_tail(refine_c: int | None = None) -> str:
             FROM refined
         ) WHERE rank <= {_PQ_TOPK}"""
     return f"""
-        , rreps AS (
-            SELECT label, embedding AS rep_emb FROM (
-                SELECT label, embedding,
-                       ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-                FROM embeddings
-            ) WHERE rn = 1
-        ), probes AS MATERIALIZED (
-            SELECT query_id, probe_label FROM (
-                SELECT q.vec_id AS query_id, r.label AS probe_label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {duck_cos.format(a='q.embedding', b='r.rep_emb')} DESC, r.label
-                       ) AS rn
-                FROM embeddings q CROSS JOIN rreps r WHERE q.vec_id < 10
-            ) WHERE rn = 1
-        ), qres AS MATERIALIZED (
+        , {_duck_ivf_probes(1, reps="rreps", materialized=True)}, qres AS MATERIALIZED (
             SELECT p.query_id,
                    list_transform(range(1, len(q.emb) + 1),
                                   j -> q.emb[j] - r.rep_emb[j]) AS emb
@@ -736,34 +676,9 @@ def _ivfpq_residual_scored(spark: SparkSession, sf_dir: str):
     ``ann_ivfpq_refine_topk`` (top-C then exact-distance refine)."""
     import numpy as np
 
-    emb_raw = t(spark, sf_dir, "embeddings")
+    probes = _ivf_probes(t(spark, sf_dir, "embeddings"), 1).select("query_id", "probe_label")
+    emb = _micro_emb(spark, sf_dir, "label")
     rep_w = Window.partitionBy("label").orderBy("vec_id")
-    from songs_etl_spark.functions.vectors import cosine_similarity
-
-    reps_raw = (
-        emb_raw.withColumn("rn", F.row_number().over(rep_w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("rep_label"), F.col("embedding").alias("rep_emb"))
-    )
-    q_raw = emb_raw.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.round(cosine_similarity("q_emb", "rep_emb"), 6).desc(), F.col("rep_label")
-    )
-    probes = (
-        q_raw.crossJoin(F.broadcast(reps_raw))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("rep_label").alias("probe_label"))
-    )
-
-    emb = track_persist(
-        spread(
-            emb_raw.select("vec_id", "label", quantize_micro("embedding").alias("emb")),
-            key="vec_id",
-        )
-    )
     mreps = (
         emb.withColumn("rn", F.row_number().over(rep_w))
         .filter(F.col("rn") == 1)
@@ -783,47 +698,15 @@ def _ivfpq_residual_scored(spark: SparkSession, sf_dir: str):
 
     # Per-(query, probed-cell) residuals: ≤ |queries| rows of driver state.
     probe_map = {r["query_id"]: r["probe_label"] for r in probes.collect()}
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < 10).select("vec_id", "emb").collect(),
-        key=lambda r: r["vec_id"],
-    )
+    q_rows = _query_rows(emb)
     rep_map = {r["label"]: np.asarray(r["rep_emb"], dtype=np.float64)
                for r in mreps.collect()}
-    q_mat = np.array(
+    tabs = _adc_tables(
+        books,
         [np.asarray(r["emb"], dtype=np.float64) - rep_map[probe_map[r["vec_id"]]]
-         for r in q_rows]
+         for r in q_rows],
     )
-    spark_tabs = []
-    for j, book in enumerate(books):
-        cmat = np.array([c for _, c in book], dtype=np.float64)
-        cids = [cid for cid, _ in book]
-        d = _fold_d2(q_mat[:, j * _PQ_DSUB : (j + 1) * _PQ_DSUB], cmat)
-        rows = [
-            (int(r["vec_id"]), int(cid), float(d[qi, col]))
-            for qi, r in enumerate(q_rows)
-            for col, cid in enumerate(cids)
-        ]
-        spark_tabs.append(
-            emb.sparkSession.createDataFrame(
-                rows, f"query_id long, code_{j} int, d{j} double"
-            )
-        )
-
-    scored = codes.join(
-        F.broadcast(probes), codes["label"] == probes["probe_label"]
-    )
-    for j in range(_PQ_M):
-        scored = scored.join(F.broadcast(spark_tabs[j]), ["query_id", f"code_{j}"])
-    adc = ((F.col("d0") + F.col("d1")) + F.col("d2")) + F.col("d3")
-    return (
-        scored.select(
-            "query_id",
-            "probe_label",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        ),
-        emb,
-    )
+    return _ivf_adc_scored(codes, probes, books, q_rows, tabs), emb
 
 
 @register(
@@ -854,11 +737,8 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside 2^53, so every ADC value is EXACT integer-derived arithmetic —
     no rounding boundary anywhere below the final double output."""
     scored, _ = _ivfpq_residual_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "probe_label", "neighbor_id", "adc_dist", "rank")
+    return _top_k(scored, _PQ_TOPK, "adc_dist", "neighbor_id").select(
+        "query_id", "probe_label", "neighbor_id", "adc_dist", "rank"
     )
 
 
@@ -900,11 +780,8 @@ def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (left-to-right fold, the oracle's list_reduce order) and
     the value hash matches bit-for-bit."""
     scored, emb = _ivfpq_residual_scored(spark, sf_dir)
-    w_adc = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    topc = (
-        scored.withColumn("rank", F.row_number().over(w_adc))
-        .filter(F.col("rank") <= _REFINE_C)
-        .select("query_id", "probe_label", "neighbor_id")
+    topc = _top_k(scored, _REFINE_C, "adc_dist", "neighbor_id").select(
+        "query_id", "probe_label", "neighbor_id"
     )
     qvec = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
@@ -920,11 +797,8 @@ def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(qvec), "query_id")
         .select("query_id", "probe_label", "neighbor_id", exact.alias("exact_dist"))
     )
-    w_exact = Window.partitionBy("query_id").orderBy("exact_dist", "neighbor_id")
-    return (
-        refined.withColumn("rank", F.row_number().over(w_exact))
-        .filter(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "probe_label", "neighbor_id", "exact_dist", "rank")
+    return _top_k(refined, _PQ_TOPK, "exact_dist", "neighbor_id").select(
+        "query_id", "probe_label", "neighbor_id", "exact_dist", "rank"
     )
 
 
@@ -997,8 +871,9 @@ def opq_rotate(emb: DataFrame) -> DataFrame:
             F.sum(F.col("v").cast("bigint") * F.col("v").cast("bigint")).alias("energy")
         )
     )
-    ranked = sorted(dime.collect(), key=lambda r: (-r["energy"], r["dim"]))
-    order = [r["dim"] for r in ranked]
+    # A dim absent from the aggregate (zero rows) ranks with energy 0.
+    energy = {r["dim"]: r["energy"] for r in dime.collect()}
+    order = sorted(range(1, _OPQ_NDIM + 1), key=lambda d: (-energy.get(d, 0), d))
     entries: dict[int, F.Column] = {}
     for p in range(_OPQ_NDIM // 2):
         da, db = order[p], order[_OPQ_NDIM - 1 - p]
@@ -1038,14 +913,7 @@ def ann_opq_rotated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim aggregation (64 output rows — model-sized) and one map-side array
     projection; the rotation adds NO shuffle and no Python to the corpus
     path."""
-    emb = track_persist(
-        spread(
-            t(spark, sf_dir, "embeddings").select(
-                "vec_id", quantize_micro("embedding").alias("emb")
-            ),
-            key="vec_id",
-        )
-    )
+    emb = _micro_emb(spark, sf_dir)
     return pq_adc_topk(opq_rotate(emb), query_max_id=10, topk=_PQ_TOPK)
 
 
@@ -1087,30 +955,14 @@ def opq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     point. Either way the number is MEASURED and hash-pinned every run —
     a silent regression in the rotation (a wrong pairing, a non-orthogonal
     mix) shows up as a recall change and fails correctness."""
-    from songs_etl_spark.plans.similarity import ann_bruteforce_topk
-
     pq = ann_pq_adc_topk(spark, sf_dir).select("query_id", "neighbor_id")
     opq = ann_opq_rotated_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ex = (
-        ann_bruteforce_topk(spark, sf_dir)
-        .filter(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-    mp = pq.join(ex, ["query_id", "neighbor_id"]).agg(F.count("*").alias("n_matched_pq"))
-    mo = opq.join(ex, ["query_id", "neighbor_id"]).agg(
-        F.count("*").alias("n_matched_opq")
-    )
-    return (
-        ex.agg(F.count("*").alias("n_exact"))
-        .crossJoin(F.broadcast(mp))
-        .crossJoin(F.broadcast(mo))
-        .select(
-            "n_exact",
-            "n_matched_pq",
-            "n_matched_opq",
-            (F.col("n_matched_pq").cast("double") / F.col("n_exact")).alias("recall_pq"),
-            (F.col("n_matched_opq").cast("double") / F.col("n_exact")).alias(
-                "recall_opq"
-            ),
-        )
+    ex = _exact_topk(spark, sf_dir, _PQ_TOPK)
+    return _recall_tail(
+        ex.agg(F.count(F.lit(1)).alias("n_exact")),
+        {
+            "n_matched_pq": pq.join(ex, ["query_id", "neighbor_id"]),
+            "n_matched_opq": opq.join(ex, ["query_id", "neighbor_id"]),
+        },
+        {"recall_pq": ("n_matched_pq", "n_exact"), "recall_opq": ("n_matched_opq", "n_exact")},
     )

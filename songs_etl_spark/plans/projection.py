@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from songs_etl_spark.plans._util import spread, t
 from songs_etl_spark.plans.registry import register
+from songs_etl_spark.plans.similarity import _DUCK_COS
 
 #: JL geometry: d=64 → d'=16 sign-projection, 8 query vectors, recall@10.
 _JL_D = 64
@@ -640,9 +641,6 @@ def fisher_score_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MRL_DIM = 16
 _MRL_TOPK = 3
 
-_MRL_COS = (
-    "round(list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])), 6)"
-)
 _MRL_COS_TR = (
     f"round(list_cosine_similarity(list_slice(CAST({{a}} AS DOUBLE[]), 1, {_MRL_DIM}),"
     f" list_slice(CAST({{b}} AS DOUBLE[]), 1, {_MRL_DIM})), 6)"
@@ -662,7 +660,7 @@ _MRL_COS_TR = (
                 SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                        ROW_NUMBER() OVER (
                            PARTITION BY q.vec_id
-                           ORDER BY {_MRL_COS.format(a='q.embedding', b='c.embedding')}
+                           ORDER BY {_DUCK_COS.format(a='q.embedding', b='c.embedding')}
                                     DESC, c.vec_id) AS rank
                 FROM embeddings q JOIN embeddings c
                   ON q.vec_id < 10 AND c.vec_id >= 10

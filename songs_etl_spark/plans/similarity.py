@@ -33,6 +33,119 @@ def _cos_r(a: str, b: str) -> F.Column:
     return F.round(cosine_similarity(a, b), 6)
 
 
+def _top_k(scored: DataFrame, k: int, *order) -> DataFrame:
+    """Numbers each query's rows by ``order`` as ``rank`` and keeps the
+    first ``k``."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _ivf_probes(emb: DataFrame, n_probe: int) -> DataFrame:
+    """IVF coarse probe: (query_id, q_emb, probe_label), the ``n_probe``
+    best cells of every query vector (vec_id < 10). Each cell is scored by
+    one deterministic representative, its min-vec_id member — a medoid
+    stand-in that, unlike a float centroid mean, is bit-reproducible
+    across engines; ties go to the lower label. The representative table
+    (one row per label) is broadcast, so the probe never scans pairs."""
+    rep_w = Window.partitionBy("label").orderBy("vec_id")
+    reps = (
+        emb.withColumn("rn", F.row_number().over(rep_w))
+        .filter(F.col("rn") == 1)
+        .select(F.col("label").alias("rep_label"), F.col("embedding").alias("rep_emb"))
+    )
+    q = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+    return _top_k(
+        q.crossJoin(F.broadcast(reps)).withColumnRenamed("rep_label", "probe_label"),
+        n_probe,
+        _cos_r("q_emb", "rep_emb").desc(),
+        F.col("probe_label"),
+    ).select("query_id", "q_emb", "probe_label")
+
+
+def _duck_ivf_probes(n_probe: int, reps: str = "reps", materialized: bool = False) -> str:
+    """DuckDB twin of :func:`_ivf_probes`: the ``{reps}`` and ``probes``
+    CTEs (``reps AS (...), probes AS (...)``), without a leading WITH or
+    comma."""
+    return f"""{reps} AS (
+            SELECT label, embedding AS rep_emb FROM (
+                SELECT label, embedding,
+                       ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
+                FROM embeddings
+            ) WHERE rn = 1
+        ), probes AS{' MATERIALIZED' if materialized else ''} (
+            SELECT query_id, probe_label FROM (
+                SELECT q.vec_id AS query_id, r.label AS probe_label,
+                       ROW_NUMBER() OVER (
+                           PARTITION BY q.vec_id
+                           ORDER BY {_DUCK_COS.format(a='q.embedding', b='r.rep_emb')} DESC, r.label
+                       ) AS rn
+                FROM embeddings q CROSS JOIN {reps} r WHERE q.vec_id < 10
+            ) WHERE rn {'= 1' if n_probe == 1 else f'<= {n_probe}'}
+        )"""
+
+
+def _ivf_cell_scan(emb: DataFrame, n_probe: int) -> DataFrame:
+    """(query_id, probe_label, neighbor_id, cos_sim) for every candidate
+    (vec_id >= 10) in each query's ``n_probe`` probed cells. The broadcast
+    probe set meets the candidates through the cell equi-join, so a query
+    touches n_probe/n_labels of the corpus, never an all-pairs scan."""
+    c = spread(
+        emb.filter(F.col("vec_id") >= 10).select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("label").alias("c_label"),
+            F.col("embedding").alias("c_emb"),
+        )
+    , key="neighbor_id")
+    return (
+        F.broadcast(_ivf_probes(emb, n_probe))
+        .join(c, F.col("probe_label") == F.col("c_label"))
+        .select("query_id", "probe_label", "neighbor_id", _cos_r("q_emb", "c_emb").alias("cos_sim"))
+    )
+
+
+def _exact_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """(query_id, neighbor_id) of the exact cosine top-k (k <= 5): the
+    reference the ANN recall contracts score against."""
+    return (
+        ann_bruteforce_topk(spark, sf_dir)
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id")
+    )
+
+
+def _exact_head(ex: DataFrame) -> DataFrame:
+    """(n_queries, n_exact) of an :func:`_exact_topk` reference."""
+    return ex.agg(
+        F.countDistinct("query_id").alias("n_queries"), F.count(F.lit(1)).alias("n_exact")
+    )
+
+
+def _recall_tail(
+    head: DataFrame,
+    counts: dict[str, DataFrame],
+    ratios: dict[str, tuple[str, str | F.Column]],
+) -> DataFrame:
+    """One-row recall report shared by the ``*_recall_*`` contracts.
+    ``head`` is a one-row aggregate of the exact side; each ``counts``
+    entry appends the row count of its relation (hits are the approximate
+    result joined to the exact one) under that name; each ``ratios`` entry
+    divides the named count by its denominator. Counts are exact ints and
+    each ratio is one int/int division — bit-stable. A zero denominator
+    gives NULL, as in the DuckDB oracles, instead of raising."""
+    row = head
+    for name, rel in counts.items():
+        row = row.crossJoin(F.broadcast(rel.agg(F.count(F.lit(1)).alias(name))))
+    return row.select(
+        "*",
+        *[
+            F.try_divide(F.col(num).cast("double"), den).alias(name)
+            for name, (num, den) in ratios.items()
+        ],
+    )
+
+
 @register(
     "ann_bruteforce_topk",
     tags=("bcast-const",),
@@ -76,11 +189,8 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_from_norms("q_emb", "c_emb", F.col("q_norm"), F.col("c_norm")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _top_k(scored, 5, F.col("cos_sim").desc(), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -89,22 +199,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bcast-const",),
     doc="similarity search scale path: coarse-quantized (IVF-style) 1-probe top-k",
     oracle=f"""
-        WITH reps AS (
-            SELECT label, embedding AS rep_emb FROM (
-                SELECT label, embedding,
-                       ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-                FROM embeddings
-            ) WHERE rn = 1
-        ), probes AS (
-            SELECT query_id, probe_label FROM (
-                SELECT q.vec_id AS query_id, r.label AS probe_label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {_DUCK_COS.format(a='q.embedding', b='r.rep_emb')} DESC, r.label
-                       ) AS rn
-                FROM embeddings q CROSS JOIN reps r WHERE q.vec_id < 10
-            ) WHERE rn = 1
-        )
+        WITH {_duck_ivf_probes(1)}
         SELECT query_id, probe_label, neighbor_id, cos_sim, rank FROM (
             SELECT p.query_id, p.probe_label, c.vec_id AS neighbor_id,
                    {_DUCK_COS.format(a='q.embedding', b='c.embedding')} AS cos_sim,
@@ -119,48 +214,14 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage IVF-style search: (1) pick the best coarse cell per query by
-    scoring against one deterministic representative per label (min vec_id —
-    a medoid stand-in that, unlike a float centroid mean, is bit-reproducible
-    across engines); (2) exact top-3 within that cell only. The candidate
-    scan touches 1/n_labels of the data — the 100 TB path, where cells map to
-    partitions and the representative table is broadcast."""
-    emb = t(spark, sf_dir, "embeddings")
-    rep_w = Window.partitionBy("label").orderBy("vec_id")
-    reps = (
-        emb.withColumn("rn", F.row_number().over(rep_w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("rep_label"), F.col("embedding").alias("rep_emb"))
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        _cos_r("q_emb", "rep_emb").desc(), F.col("rep_label")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(reps))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "q_emb", F.col("rep_label").alias("probe_label"))
-    )
-    c = spread(
-        emb.filter(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("c_label"),
-            F.col("embedding").alias("c_emb"),
-        )
-    , key="neighbor_id")
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        F.broadcast(probes)
-        .join(c, F.col("probe_label") == F.col("c_label"))
-        .select("query_id", "probe_label", "neighbor_id", _cos_r("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "probe_label", "neighbor_id", "cos_sim", "rank")
+    """Two-stage IVF-style search: (1) pick the best coarse cell per query
+    (:func:`_ivf_probes`); (2) exact top-3 within that cell only
+    (:func:`_ivf_cell_scan`). The candidate scan touches 1/n_labels of the
+    data — the 100 TB path, where cells map to partitions and the
+    representative table is broadcast."""
+    scan = _ivf_cell_scan(t(spark, sf_dir, "embeddings"), 1)
+    return _top_k(scan, 3, F.col("cos_sim").desc(), F.col("neighbor_id")).select(
+        "query_id", "probe_label", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -170,22 +231,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="IVF 2-probe top-k: scan the two best coarse cells per query — the "
     "recall/cost dial every IVF deployment tunes",
     oracle=f"""
-        WITH reps AS (
-            SELECT label, embedding AS rep_emb FROM (
-                SELECT label, embedding,
-                       ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-                FROM embeddings
-            ) WHERE rn = 1
-        ), probes AS (
-            SELECT query_id, probe_label FROM (
-                SELECT q.vec_id AS query_id, r.label AS probe_label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {_DUCK_COS.format(a='q.embedding', b='r.rep_emb')} DESC, r.label
-                       ) AS rn
-                FROM embeddings q CROSS JOIN reps r WHERE q.vec_id < 10
-            ) WHERE rn <= 2
-        )
+        WITH {_duck_ivf_probes(2)}
         SELECT query_id, neighbor_id, cos_sim, rank FROM (
             SELECT p.query_id, c.vec_id AS neighbor_id,
                    {_DUCK_COS.format(a='q.embedding', b='c.embedding')} AS cos_sim,
@@ -200,49 +246,16 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with n_probe=2: same two-stage plan as ``ann_ivf_probe`` but each
+    """IVF with n_probe=2: the two-stage plan of ``ann_ivf_probe``, but each
     query scans its two closest coarse cells — the standard recall knob
     (1-probe misses neighbors that quantize into the runner-up cell; more
     probes converge on brute force at proportional cost: n_probe/n_labels of
     the candidate scan per query). The probe set stays a broadcast relation
     (2 rows per query); candidates are still touched via the cell equi-join,
     never an all-pairs scan."""
-    emb = t(spark, sf_dir, "embeddings")
-    rep_w = Window.partitionBy("label").orderBy("vec_id")
-    reps = (
-        emb.withColumn("rn", F.row_number().over(rep_w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("rep_label"), F.col("embedding").alias("rep_emb"))
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        _cos_r("q_emb", "rep_emb").desc(), F.col("rep_label")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(reps))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", "q_emb", F.col("rep_label").alias("probe_label"))
-    )
-    c = spread(
-        emb.filter(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("c_label"),
-            F.col("embedding").alias("c_emb"),
-        )
-    , key="neighbor_id")
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        F.broadcast(probes)
-        .join(c, F.col("probe_label") == F.col("c_label"))
-        .select("query_id", "neighbor_id", _cos_r("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    scan = _ivf_cell_scan(t(spark, sf_dir, "embeddings"), 2)
+    return _top_k(scan, 3, F.col("cos_sim").desc(), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -1203,18 +1216,10 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     not to run at scale."""
     lsh = embedding_neardup_lsh(spark, sf_dir).select("da", "db")
     exact = embedding_neardup_pairs(spark, sf_dir).select("da", "db")
-    matched = lsh.join(exact, ["da", "db"])
-    return (
-        exact.agg(F.count("*").alias("n_exact"))
-        .crossJoin(lsh.agg(F.count("*").alias("n_lsh")))
-        .crossJoin(matched.agg(F.count("*").alias("n_matched")))
-        .select(
-            "n_exact",
-            "n_lsh",
-            "n_matched",
-            (F.col("n_matched").cast("double") / F.col("n_exact")).alias("recall"),
-            (F.col("n_matched").cast("double") / F.col("n_lsh")).alias("precision"),
-        )
+    return _recall_tail(
+        exact.agg(F.count(F.lit(1)).alias("n_exact")),
+        {"n_lsh": lsh, "n_matched": lsh.join(exact, ["da", "db"])},
+        {"recall": ("n_matched", "n_exact"), "precision": ("n_matched", "n_lsh")},
     )
 
 
@@ -1325,22 +1330,7 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     "coarse-cell probe (1/n_labels of the corpus per query) instead of a "
     "full scan, then the same rank + token-budget prefix packing",
     oracle=f"""
-        WITH reps AS (
-            SELECT label, embedding AS rep_emb FROM (
-                SELECT label, embedding,
-                       ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-                FROM embeddings
-            ) WHERE rn = 1
-        ), probes AS (
-            SELECT query_id, probe_label FROM (
-                SELECT q.vec_id AS query_id, r.label AS probe_label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {_DUCK_COS.format(a='q.embedding', b='r.rep_emb')} DESC, r.label
-                       ) AS rn
-                FROM embeddings q CROSS JOIN reps r WHERE q.vec_id < 10
-            ) WHERE rn = 1
-        ), cand AS (
+        WITH {_duck_ivf_probes(1)}, cand AS (
             SELECT e.vec_id, e.label, e.embedding,
                    len(list_filter(regexp_split_to_array(lower(d.text), '[^a-z0-9]+'),
                                    x -> x <> '')) AS n_tokens
@@ -1373,10 +1363,10 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rag_context_pack_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``rag_context_pack`` fed by the IVF probe instead of a full corpus
     scan — the billion-vector serving shape: (1) pick each query's best
-    coarse cell by scoring against the broadcast one-representative-per-
-    label table (``ann_ivf_probe``'s bit-reproducible min-vec_id medoid
-    stand-in); (2) rank ONLY that cell's candidates (1/n_labels of the
-    corpus, reached via the cell equi-join — never an all-pairs scan);
+    coarse cell against the broadcast one-representative-per-label table
+    (:func:`_ivf_probes`, bit-reproducible min-vec_id medoids); (2) rank
+    ONLY that cell's candidates (1/n_labels of the corpus, reached via the
+    cell equi-join — never an all-pairs scan);
     (3) pack ranked prefixes into the token budget with the same
     rank + running-sum windows. The probe set stays a broadcast relation
     (one row per query), so the candidate pass is map-side; the only
@@ -1391,26 +1381,7 @@ def rag_context_pack_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     from songs_etl_spark.functions.text import tokens as _tokens
 
-    rep_w = Window.partitionBy("label").orderBy("vec_id")
-    reps = (
-        emb.withColumn("rn", F.row_number().over(rep_w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("rep_label"), F.col("embedding").alias("rep_emb"))
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_norm"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        _cos_r("q_emb", "rep_emb").desc(), F.col("rep_label")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(reps))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "q_emb", "q_norm", F.col("rep_label").alias("probe_label"))
-    )
+    probes = _ivf_probes(emb, 1).withColumn("q_norm", l2_norm("q_emb"))
     cand = spread(
         emb.filter(F.col("vec_id") >= 10)
         .join(docs.select(F.col("doc_id").alias("vec_id"), "text"), "vec_id")
@@ -1880,12 +1851,9 @@ def knn_topk_within_cells(df: DataFrame, k: int = 3) -> DataFrame:
         .groupBy("cell")
         .applyInPandas(cell_candidates, "query_id long, neighbor_id long, cos_raw double")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        cand.select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    scored = cand.select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos_sim"))
+    return _top_k(scored, k, F.col("cos_sim").desc(), "neighbor_id").select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -2301,26 +2269,11 @@ def graph_ann_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops; the point of this query is that the number is MEASURED and
     pinned, not assumed."""
     g = ann_graph_beam_search(spark, sf_dir).select("query_id", "neighbor_id")
-    ex = (
-        ann_bruteforce_topk(spark, sf_dir)
-        .filter(F.col("rank") <= _GB_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = g.join(ex, ["query_id", "neighbor_id"])
-    return (
-        ex.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count("*").alias("n_exact"),
-        )
-        .crossJoin(g.agg(F.count("*").alias("n_graph")))
-        .crossJoin(matched.agg(F.count("*").alias("n_matched")))
-        .select(
-            "n_queries",
-            "n_exact",
-            "n_graph",
-            "n_matched",
-            (F.col("n_matched").cast("double") / F.col("n_exact")).alias("recall_at_3"),
-        )
+    ex = _exact_topk(spark, sf_dir, _GB_K)
+    return _recall_tail(
+        _exact_head(ex),
+        {"n_graph": g, "n_matched": g.join(ex, ["query_id", "neighbor_id"])},
+        {"recall_at_3": ("n_matched", "n_exact")},
     )
 
 
@@ -2332,22 +2285,7 @@ def graph_ann_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_ivf_multiprobe's top-k (retrieval filters and dedup probes ask "
     "'everything this similar', not 'the best k')",
     oracle=f"""
-        WITH reps AS (
-            SELECT label, embedding AS rep_emb FROM (
-                SELECT label, embedding,
-                       ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-                FROM embeddings
-            ) WHERE rn = 1
-        ), probes AS (
-            SELECT query_id, probe_label FROM (
-                SELECT q.vec_id AS query_id, r.label AS probe_label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {_DUCK_COS.format(a='q.embedding', b='r.rep_emb')} DESC, r.label
-                       ) AS rn
-                FROM embeddings q CROSS JOIN reps r WHERE q.vec_id < 10
-            ) WHERE rn <= 2
-        )
+        WITH {_duck_ivf_probes(2)}
         SELECT p.query_id, c.vec_id AS neighbor_id,
                {_DUCK_COS.format(a='q.embedding', b='c.embedding')} AS cos_sim
         FROM probes p
@@ -2367,37 +2305,10 @@ def ann_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     below the bound and truncates above it. Output rows round the cosine to
     6 decimals BEFORE the threshold compare (registry float discipline), so
     the boundary can't flip on an ulp."""
-    emb = t(spark, sf_dir, "embeddings")
-    rep_w = Window.partitionBy("label").orderBy("vec_id")
-    reps = (
-        emb.withColumn("rn", F.row_number().over(rep_w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("rep_label"), F.col("embedding").alias("rep_emb"))
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        _cos_r("q_emb", "rep_emb").desc(), F.col("rep_label")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(reps))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", "q_emb", F.col("rep_label").alias("probe_label"))
-    )
-    c = spread(
-        emb.filter(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("c_label"),
-            F.col("embedding").alias("c_emb"),
-        )
-    , key="neighbor_id")
     return (
-        F.broadcast(probes)
-        .join(c, F.col("probe_label") == F.col("c_label"))
-        .select("query_id", "neighbor_id", _cos_r("q_emb", "c_emb").alias("cos_sim"))
+        _ivf_cell_scan(t(spark, sf_dir, "embeddings"), 2)
         .filter(F.col("cos_sim") >= 0.3)
+        .select("query_id", "neighbor_id", "cos_sim")
     )
 
 
@@ -2971,25 +2882,14 @@ def nndescent_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = nndescent_edges(emb).select(
         F.col("query_id").alias("q"), F.col("neighbor_id").alias("nb")
     )
-    np_ = probes.agg(F.count("*").alias("n_probes"))
-    hc = exact.join(cell, ["q", "nb"]).agg(F.count("*").alias("hits_cell"))
-    hn = exact.join(nd, ["q", "nb"]).agg(F.count("*").alias("hits_nndescent"))
-    return (
-        np_.crossJoin(F.broadcast(hc))
-        .crossJoin(F.broadcast(hn))
-        .select(
-            F.col("n_probes").cast("bigint").alias("n_probes"),
-            F.col("hits_cell").cast("bigint").alias("hits_cell"),
-            F.col("hits_nndescent").cast("bigint").alias("hits_nndescent"),
-            (
-                F.col("hits_cell").cast("double")
-                / (F.lit(_ND_K) * F.col("n_probes"))
-            ).alias("recall_cell"),
-            (
-                F.col("hits_nndescent").cast("double")
-                / (F.lit(_ND_K) * F.col("n_probes"))
-            ).alias("recall_nndescent"),
-        )
+    n_exact = F.lit(_ND_K) * F.col("n_probes")
+    return _recall_tail(
+        probes.agg(F.count(F.lit(1)).alias("n_probes")),
+        {
+            "hits_cell": exact.join(cell, ["q", "nb"]),
+            "hits_nndescent": exact.join(nd, ["q", "nb"]),
+        },
+        {"recall_cell": ("hits_cell", n_exact), "recall_nndescent": ("hits_nndescent", n_exact)},
     )
 
 
@@ -3188,34 +3088,15 @@ def graph_ann_nnd_recall_vs_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     gn = _graph_beam_topk(
         emb, nd_edges, entry_beam=eb, entry_checkpointed=True
     ).select("query_id", "neighbor_id")
-    ex = (
-        ann_bruteforce_topk(spark, sf_dir)
-        .filter(F.col("rank") <= _GB_K)
-        .select("query_id", "neighbor_id")
-    )
-    nq = ex.agg(
-        F.countDistinct("query_id").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_exact"),
-    )
-    hc = gc.join(ex, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).alias("hits_cell_index")
-    )
-    hn = gn.join(ex, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).alias("hits_nnd_index")
-    )
-    return (
-        nq.crossJoin(F.broadcast(hc))
-        .crossJoin(F.broadcast(hn))
-        .select(
-            "n_queries",
-            "n_exact",
-            "hits_cell_index",
-            "hits_nnd_index",
-            (F.col("hits_cell_index").cast("double") / F.col("n_exact")).alias(
-                "recall_cell_index"
-            ),
-            (F.col("hits_nnd_index").cast("double") / F.col("n_exact")).alias(
-                "recall_nnd_index"
-            ),
-        )
+    ex = _exact_topk(spark, sf_dir, _GB_K)
+    return _recall_tail(
+        _exact_head(ex),
+        {
+            "hits_cell_index": gc.join(ex, ["query_id", "neighbor_id"]),
+            "hits_nnd_index": gn.join(ex, ["query_id", "neighbor_id"]),
+        },
+        {
+            "recall_cell_index": ("hits_cell_index", "n_exact"),
+            "recall_nnd_index": ("hits_nnd_index", "n_exact"),
+        },
     )
