@@ -963,8 +963,8 @@ def kcore_decomposition_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     A third, algorithmic lever: the peel EARLY-EXITS at its fixed point
     (no node below k ⇒ all later rounds are the identity, so the fixed
     KCORE_ROUNDS oracle unroll and the converging loop provably agree) —
-    the probe is one limit(1) job on the node-sized degree relation, paid
-    before each round's corpus-sized rewrite instead of after."""
+    the probe is one min(d) aggregate on the node-sized degree relation,
+    paid before each round's corpus-sized rewrite instead of after."""
     return kcore_peel_core(spark, sf_dir)
 
 
@@ -1000,9 +1000,12 @@ def kcore_peel_core(
         # KCORE_ROUNDS unroll and the early-exit loop provably agree). On
         # graphs that converge fast — the common case; the m30 stress corpus
         # converges after round 0 — this skips the corpus-sized semi-join +
-        # rewrite entirely, and the probe itself is one limit(1) job on the
-        # node-sized checkpointed degree relation.
-        if deg.filter(F.col("d") < k).limit(1).count() == 0:
+        # rewrite entirely, and the probe itself is one min(d) aggregate on
+        # the node-sized checkpointed degree relation (not a limit(1): a
+        # generated limit stage names its counter from a JVM-wide sequence,
+        # so its class never repeats and compiles again on every run).
+        min_d = deg.agg(F.min("d")).collect()[0][0]
+        if min_d is None or min_d >= k:
             break
         alive = deg.filter(F.col("d") >= k).select("node")
         edges = (

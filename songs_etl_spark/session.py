@@ -33,21 +33,18 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Nested-column pruning for the landing-document schemas.
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
+    # Generated classes are cached by their source text (see the cache size
+    # in get_spark), and by default the whole-stage codegen stage id is part
+    # of the class name. Under AQE a stage's id depends on the order stages
+    # are planned in, so one plan run twice can come back as the same code
+    # under another name and compile again: louvain_one_level kept
+    # compiling 4-34 classes per pass at sf0.001 with a cache that held all
+    # of them. Without the id it compiles 0 from its second run on, and equal
+    # pipelines in different stages share one class (first-run compiles of
+    # the four iterative benchmark queries: 269 -> 198). Only the class name
+    # changes, never the code.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
-
-# Structured Streaming state store provider, env-gated (round-12 verdict
-# item 7). The default HDFS-backed provider keeps every state row on the
-# executor heap — at 100 TB of keyed state (dedup keys, session windows)
-# that is an OOM ceiling; RocksDB spills state to local disk and is the
-# documented remedy. Local A/B on the drained finite sources showed no
-# measurable win (state is tiny and the drains are fixed-cost-bound;
-# numbers in OPTIMIZATION_r12.md), so it stays OFF by default to keep the
-# bench comparable, and production opts in with
-# SPARK_GRAFT_STATE_STORE=rocksdb.
-if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-    RUNTIME_CONF["spark.sql.streaming.stateStore.providerClass"] = (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
 
 
 def default_parallelism() -> int:
@@ -85,6 +82,20 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Compiled generated classes sit in one JVM-wide LRU cache. Spark's
+        # default of 100 entries is below one pass of the registry's hot
+        # sets: the four iterative benchmark queries need ~266 classes
+        # (198 with useIdInClassName off, RUNTIME_CONF) and the ten headline
+        # queries 171 at sf0.01, so every pass evicted what the next one
+        # needed and recompiled all of it. At 1000 both sets compile 0-4
+        # classes per pass from their second pass on. Cost, measured after a
+        # whole-registry oracle sweep at sf0.01 (cache full) against the
+        # 100-entry default: driver metaspace 214 -> 221 MB, heap after a
+        # full GC 2311 -> 2349 MB, peak RSS 9.0 -> 7.9 GB. A static conf:
+        # it only takes effect before the session starts, so it stays out of
+        # RUNTIME_CONF, and a session created elsewhere and handed to
+        # __spark_entry__ keeps Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dderby.system.durability=test")
     )

@@ -6,9 +6,16 @@ Usage:
     python tools/perf_profile.py [--sf DIR] [--reps N] [--explain-dir DIR]
                                  [--no-time] [names...|--all]
 
-Timing protocol mirrors bench.py: one warm-up pass of each query at the
-smallest SF (codegen compile), shingle/persist caches cleared before each
-timed pass so every pass re-does all data work at the SF under test.
+Timing protocol mirrors bench.py: one untimed warm-up pass of each query at
+the smallest SF (JIT, datasource init), shingle/persist caches cleared before
+each timed pass so every pass re-does all data work at the SF under test.
+
+The JSON line's ``compiles`` map holds, per query, the number of classes
+Spark's code generator compiled during the last timed pass (cache misses of
+its generated-class cache). A warm-up does not make it 0: a plan whose
+generated code differs between runs compiles again on every pass, and a
+pass whose working set exceeds ``spark.sql.codegen.cache.maxEntries`` evicts
+what the next pass needs.
 """
 
 from __future__ import annotations
@@ -65,7 +72,10 @@ def main() -> None:
             print(f"explain written: {name}", file=sys.stderr)
 
     if not args.no_time:
-        # Warm-up at the smallest SF (codegen compile), as in bench.py.
+        # Warm-up at the smallest SF, as in bench.py. It compiles only the
+        # generated classes whose source is the same at both SFs; plans AQE
+        # shapes differently at the SF under test still compile in the timed
+        # passes, and the last pass's compiles are reported per query.
         warm_dir = "/root/testdata/sf0.001"
         if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(args.sf):
             for name in names:
@@ -77,13 +87,16 @@ def main() -> None:
                     ).save()
                 except Exception as exc:
                     print(f"warm-up failed for {name}: {exc!r}", file=sys.stderr)
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         passes: list[dict[str, float]] = []
         for _ in range(args.reps):
             clear_shingle_cache()
             clear_tracked_persists()
             per: dict[str, float] = {}
+            compiles: dict[str, int] = {}
             for name in names:
                 spark.sparkContext.setJobDescription(f"profile:{name}")
+                before = codegen.METRIC_COMPILATION_TIME().getCount()
                 start = time.perf_counter()
                 try:
                     df = REGISTRY[name].fn(spark, args.sf)
@@ -92,11 +105,12 @@ def main() -> None:
                 except Exception as exc:
                     per[name] = -1.0
                     print(f"FAILED {name}: {exc!r}", file=sys.stderr)
+                compiles[name] = codegen.METRIC_COMPILATION_TIME().getCount() - before
                 spark.sparkContext.setJobDescription(None)
             passes.append(per)
         timings = {n: min(p[n] for p in passes) for n in names}
         print(json.dumps({"sf": args.sf, "reps": args.reps, "queries": timings,
-                          "passes": passes}))
+                          "compiles": compiles, "passes": passes}))
     spark.stop()
 
 
