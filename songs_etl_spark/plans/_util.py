@@ -3,6 +3,9 @@ policy these helpers implement)."""
 
 from __future__ import annotations
 
+from collections.abc import Callable, Hashable
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,14 +89,15 @@ def ts_lit(value: str) -> Column:
 
 
 #: Session-lifetime registry of relations persisted inside query plans
-#: (SemDeDup assignments, two-level k-means stages, PageRank edge/degree
-#: relations), keyed by the plan's semantic hash so re-invoking a registry
-#: function returns the SAME persisted relation instead of stacking a new
-#: cached copy per call (long-lived sessions run ~190 queries, several of
-#: which rebuild shared relations). Spark's CacheManager evicts under
-#: memory pressure, but explicit release stays the hygiene rule — same as
-#: plans/dedup.clear_shingle_cache.
-_TRACKED_PERSISTS: dict[int, list[DataFrame]] = {}
+#: (the near-dup shingle relation, SemDeDup assignments, two-level k-means
+#: stages, PageRank edge/degree relations, LSH band relations), keyed by the
+#: plan's semantic hash (or an explicit key, persist_keyed) so re-invoking a
+#: registry function returns the SAME persisted relation instead of stacking
+#: a new cached copy per call (long-lived sessions run ~190 queries, several
+#: of which rebuild shared relations). Spark's CacheManager evicts under memory pressure, but
+#: explicit release stays the hygiene rule: clear_tracked_persists() is the
+#: one call that releases every relation a query persisted.
+_TRACKED_PERSISTS: dict[Hashable, list[DataFrame]] = {}
 
 
 def track_persist(df: DataFrame) -> DataFrame:
@@ -123,9 +127,20 @@ def track_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def persist_keyed(key: tuple, build: Callable[[], DataFrame], level: StorageLevel) -> DataFrame:
+    """track_persist under an explicit ``key`` that is looked up before
+    ``build()`` runs — for a relation whose plan is itself slow to build,
+    where a semantic-hash lookup would pay that build on every hit. Same
+    registry, so clear_tracked_persists() releases it too."""
+    bucket = _TRACKED_PERSISTS.setdefault(key, [])
+    if not bucket:
+        bucket.append(build().persist(level))
+    return bucket[0]
+
+
 def clear_tracked_persists() -> None:
-    """Unpersist every tracked relation (bench/stress call this between
-    datasets, together with clear_shingle_cache)."""
+    """Unpersist every tracked relation (bench, tools and tests call this
+    between passes or datasets)."""
     for bucket in _TRACKED_PERSISTS.values():
         for df in bucket:
             try:

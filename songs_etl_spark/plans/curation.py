@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from songs_etl_spark.functions.text import has_min_tokens, has_token, tokens, word_shingles
 from songs_etl_spark.operators.graph import connected_components
-from songs_etl_spark.plans._util import spread, t
+from songs_etl_spark.plans._util import spread, t, track_persist
 from songs_etl_spark.plans.dedup import (
     _CC_ORACLE,
     _ngram_jaccard_pairs,
@@ -269,7 +269,8 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key").persist()
+    ).select("doc_id", "bk.band", "bk.key")
+    bands = track_persist(bands)
     small = (
         bands.groupBy("band", "key").count().filter(F.col("count") <= BUCKET_CAP).select("band", "key")
     )

@@ -22,7 +22,7 @@ from pyspark import StorageLevel
 
 from songs_etl_spark.functions.text import has_min_tokens, tokens, word_shingles
 from songs_etl_spark.operators.graph import connected_components
-from songs_etl_spark.plans._util import spread, t
+from songs_etl_spark.plans._util import clear_tracked_persists, persist_keyed, spread, t, track_persist
 from songs_etl_spark.plans.registry import register
 
 #: Shingles appearing in more than this many docs don't generate candidates.
@@ -44,25 +44,9 @@ _DUCKDB_SHINGLES = """
 """
 
 
-#: One persisted shingle relation per (session, sf_dir): every near-dup query
-#: in a session shares the same materialization instead of re-persisting an
-#: identical plan (which logs a CacheManager warning and re-runs the dominant
-#: tokenize/shingle stage once per query).
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_shingle_cache() -> None:
-    """Unpersist and drop every cached shingle relation. Call between
-    datasets (tests/bench switching sf_dirs, or after regenerating testdata
-    in-place) — long sessions touching many sf_dirs would otherwise
-    accumulate MEMORY_AND_DISK blocks indefinitely, and an in-place refresh
-    of the documents parquet would be served stale from the cache."""
-    for df in _SHINGLE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session may already be stopped; nothing to release
-    _SHINGLE_CACHE.clear()
+#: Kept for callers that release the shingle memo by this name: the
+#: shingle relation is a tracked persist like every other.
+clear_shingle_cache = clear_tracked_persists
 
 
 def _shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,25 +57,27 @@ def _shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle relation is read three times per near-dup query (inverted
     index / signature build, then twice in pair verification) and by several
     registry queries per session, and recomputing the shingling per consumer
-    would multiply the dominant cost.
+    would multiply the dominant cost. One materialization per (session,
+    sf_dir) serves every near-dup query; the memo is keyed explicitly so a
+    hit skips building the plan, whose higher-order expressions take
+    0.2–0.4 s of driver-side analysis at sf0.1.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
-    # has_min_tokens, not size(tokens(..)) >= 3: the size filter is pushed
-    # below the spread exchange with the whole tokenize expression
-    # substituted into the predicate — every doc tokenized twice, the first
-    # time serially in the scan task (see functions/text.has_min_tokens).
-    base = docs.filter(has_min_tokens("text", 3)).select(
-        "doc_id", tokens("text").alias("tok")
-    )
-    sh = base.select(
-        "doc_id", F.array_distinct(word_shingles(F.col("tok"), 3)).alias("shingles")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _SHINGLE_CACHE[key] = sh
-    return sh
+
+    def build() -> DataFrame:
+        docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
+        # has_min_tokens, not size(tokens(..)) >= 3: the size filter is pushed
+        # below the spread exchange with the whole tokenize expression
+        # substituted into the predicate — every doc tokenized twice, the first
+        # time serially in the scan task (see functions/text.has_min_tokens).
+        base = docs.filter(has_min_tokens("text", 3)).select(
+            "doc_id", tokens("text").alias("tok")
+        )
+        return base.select(
+            "doc_id", F.array_distinct(word_shingles(F.col("tok"), 3)).alias("shingles")
+        )
+
+    key = ("shingles", spark.sparkContext.applicationId, sf_dir)
+    return persist_keyed(key, build, StorageLevel.MEMORY_AND_DISK)
 
 
 def _verified_pairs(sh: DataFrame, candidates: DataFrame, threshold: float) -> DataFrame:
@@ -489,7 +475,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Persisted: the band self-join would otherwise evaluate the (interpreted
     # higher-order) MinHash signature expressions once per join side.
-    capped = capped.persist()
+    capped = track_persist(capped)
     a = capped.select("band", "key", F.col("doc_id").alias("da"))
     b = capped.select(
         F.col("band").alias("band2"), F.col("key").alias("key2"), F.col("doc_id").alias("db")

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from songs_etl_spark.functions.text import tokens
-from songs_etl_spark.plans._util import spread, t
+from songs_etl_spark.plans._util import spread, t, track_persist
 from songs_etl_spark.plans.registry import register
 
 #: HLL++ relative standard deviation requested, and the acceptance bound
@@ -1142,7 +1142,7 @@ def misra_gries_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, which is fine (the join keys stay equi)."""
     docs = spread(t(spark, sf_dir, "documents"), key="doc_id")
     tok = docs.select(F.explode(tokens("text")).alias("token"))
-    merged = misra_gries_summaries(tok).persist()
+    merged = track_persist(misra_gries_summaries(tok))
 
     exact = (
         tok.join(F.broadcast(merged.select("token")), "token")

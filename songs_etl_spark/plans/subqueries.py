@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from songs_etl_spark.plans._util import dec2, fmt_date, money, qty, t, ts_lit
+from songs_etl_spark.plans._util import dec2, fmt_date, money, qty, t, track_persist, ts_lit
 from songs_etl_spark.plans.registry import register
 
 
@@ -139,10 +139,8 @@ def important_part_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins back as a broadcast. Exact decimal sums on both levels, compared in
     double on both engines."""
     li = t(spark, sf_dir, "lineitem")
-    per_part = (
-        li.groupBy("l_partkey")
-        .agg(F.sum(money("l_extendedprice") * money("l_quantity")).alias("val"))
-        .persist()
+    per_part = track_persist(
+        li.groupBy("l_partkey").agg(F.sum(money("l_extendedprice") * money("l_quantity")).alias("val"))
     )
     total = per_part.agg(F.sum("val").alias("tot"))
     return (

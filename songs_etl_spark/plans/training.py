@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from songs_etl_spark.functions.text import tokens
-from songs_etl_spark.plans._util import spread, t
+from songs_etl_spark.plans._util import spread, t, track_persist
 from songs_etl_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -412,7 +412,8 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         (F.conv(F.substring(F.md5("tok"), 1, 6), 16, 10).cast("bigint")
          % _DSIR_BUCKETS).alias("bucket"),
-    ).persist()
+    )
+    b = track_persist(b)
     raw = b.groupBy("bucket").agg(F.count("*").alias("rc"))
     tgt = b.filter(F.col("lang") == "en").groupBy("bucket").agg(
         F.count("*").alias("tc")

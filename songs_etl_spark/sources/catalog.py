@@ -71,8 +71,9 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 #: list): every action on the returned DataFrame still reads the parquet
 #: data from disk, so bench/oracle timings keep doing all data work.
 #: Consumers that REWRITE a table path in-place within one session
-#: (tools/scale_stress.py corpus builds) must call clear_table_cache() —
-#: the cached relation would otherwise pin the stale file listing.
+#: (tools/corpus.py builds, as tools/scale_stress.py runs them) must call
+#: clear_table_cache() — the cached relation would otherwise pin the stale
+#: file listing.
 _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 

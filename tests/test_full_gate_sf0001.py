@@ -38,16 +38,13 @@ def duck():
 
 @pytest.fixture(scope="module", autouse=True)
 def _fresh_caches():
-    # Full-registry runs accumulate tracked persists / the shingle cache;
-    # start and end clean so this module neither inherits nor leaks state.
+    # Full-registry runs accumulate tracked persists; start and end clean
+    # so this module neither inherits nor leaks state.
     from songs_etl_spark.plans._util import clear_tracked_persists
-    from songs_etl_spark.plans.dedup import clear_shingle_cache
 
     clear_tracked_persists()
-    clear_shingle_cache()
     yield
     clear_tracked_persists()
-    clear_shingle_cache()
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))

@@ -1,0 +1,45 @@
+"""One persist memo: every relation a registry query persists is released by
+``clear_tracked_persists()`` alone — the near-dup shingle relation and the
+persists of the five queries that used to call ``persist()`` untracked."""
+
+from __future__ import annotations
+
+import pytest
+from conftest import SF_DIR
+
+from songs_etl_spark.plans import REGISTRY
+from songs_etl_spark.plans._util import clear_tracked_persists
+from songs_etl_spark.plans.dedup import _shingle_docs
+
+QUERIES = (
+    "dedup_minhash_lsh",
+    "dsir_importance_weights",
+    "dedup_simhash_hamming",
+    "misra_gries_heavy_tokens",
+    "important_part_stock",
+)
+
+
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("name", QUERIES)
+def test_clear_releases_every_persist(spark, name):
+    clear_tracked_persists()
+    before = _persisted(spark)
+    REGISTRY[name].fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+    assert _persisted(spark) - before, f"{name} persisted nothing; the probe would pass vacuously"
+    clear_tracked_persists()
+    assert not _persisted(spark) - before
+
+
+def test_shingle_memo_is_shared_and_released(spark):
+    clear_tracked_persists()
+    before = _persisted(spark)
+    sh = _shingle_docs(spark, SF_DIR)
+    assert _shingle_docs(spark, SF_DIR) is sh
+    sh.count()
+    assert _persisted(spark) - before
+    clear_tracked_persists()
+    assert not _persisted(spark) - before

@@ -24,10 +24,10 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.clock import now
 from pyspark.sql import functions as F
 
 
@@ -70,16 +70,16 @@ def text_leg(
             if not rows:
                 break
             batch = spark.createDataFrame(rows, "doc_id bigint, text string")
-            t0 = time.perf_counter()
+            t0 = now()
             admit_batch_into(
                 batch, f"{base}/corpus_r", f"{base}/verdicts_r"
             )
-            out["rescan_s"].append(round(time.perf_counter() - t0, 2))
-            t0 = time.perf_counter()
+            out["rescan_s"].append(round(now() - t0, 2))
+            t0 = now()
             admit_text_batch_indexed(
                 batch, f"{base}/corpus_i", f"{base}/state_i", f"{base}/verdicts_i"
             )
-            out["indexed_s"].append(round(time.perf_counter() - t0, 2))
+            out["indexed_s"].append(round(now() - t0, 2))
             out["corpus_docs"].append(
                 spark.read.parquet(f"{base}/corpus_i").count()
             )
@@ -132,7 +132,7 @@ def embedding_leg(spark, sf_dir: str, n_batches: int) -> dict:
                 "vec_id bigint, embedding array<double>",
             )
             for mode, every in (("plain", None), ("compact", 2)):
-                t0 = time.perf_counter()
+                t0 = now()
                 admit_embedding_batch_into(
                     batch,
                     f"{base}/corpus_{mode}",
@@ -145,7 +145,7 @@ def embedding_leg(spark, sf_dir: str, n_batches: int) -> dict:
                         spark, f"{base}/corpus_{mode}", f"{base}/index_{mode}", dim=dim
                     )
                 if mode == "plain":
-                    out["drain_s"].append(round(time.perf_counter() - t0, 2))
+                    out["drain_s"].append(round(now() - t0, 2))
                 out[f"{mode}_index_rows"].append(
                     spark.read.parquet(f"{base}/index_{mode}").count()
                 )

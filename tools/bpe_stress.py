@@ -30,10 +30,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.clock import now
 from pyspark.sql import functions as F
 
 
@@ -89,9 +89,9 @@ def main() -> int:
     results: dict[str, dict] = {}
     seq_rows = None
     if not args.skip_sequential:
-        t0 = time.perf_counter()
+        t0 = now()
         seq_rows, _, seq_barriers = _train_merges(base, args.rounds)
-        secs = round(time.perf_counter() - t0, 2)
+        secs = round(now() - t0, 2)
         results["sequential"] = {
             "secs": secs,
             "barriers": seq_barriers,
@@ -104,19 +104,19 @@ def main() -> int:
     for k in ks:
         for incremental in modes:
             label = f"batched_k{k}" + ("_delta" if incremental else "")
-            t0 = time.perf_counter()
+            t0 = now()
             round_walls: list[float] = []
             last = [t0]
 
             def on_round(barrier_idx, merges_done):
-                now = time.perf_counter()
-                round_walls.append(now - last[0])
-                last[0] = now
+                t = now()
+                round_walls.append(t - last[0])
+                last[0] = t
 
             rows, _, barriers = _train_merges(
                 base, args.rounds, k=k, on_round=on_round, incremental=incremental
             )
-            secs = round(time.perf_counter() - t0, 2)
+            secs = round(now() - t0, 2)
             # Per-round wall curve: quartile means show whether round cost
             # DROPS with merge rank (the delta-maintenance claim: affected-
             # word mass shrinks down the Zipf tail) or stays overhead-bound.

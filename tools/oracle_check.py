@@ -19,18 +19,21 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from songs_etl_spark.sources.catalog import TESTDATA_TABLES as TABLES
+
+#: Physical join nodes that pair every row of one side with every row of the other.
+NESTED_LOOP_NODES = ("BroadcastNestedLoopJoin", "CartesianProduct")
+
+
+def untagged_nested_loop(nested_loop: bool, tags) -> bool:
+    """The scale-quarantine rule, shared by this gate (and so the full-gate
+    pytest), tools/plan_audit.py and the timing loop in tools/perf_profile.py:
+    a plan with a nested-loop join is allowed only when the query's registry
+    tags say why — ``baseline`` (a deliberate O(n²) exactness anchor, never
+    run at scale) or ``bcast-const`` (a constant-size broadcast side: 1-row
+    aggregate or ≤10-row query set, so the loop is a map-side pass, not a
+    pair scan). True means the plan breaks the rule."""
+    return bool(nested_loop) and not {"baseline", "bcast-const"} & set(tags)
 
 
 def duckdb_connection(sf_dir: str):
@@ -84,18 +87,11 @@ def compare(name: str, spark, con, sf_dir: str) -> dict:
     except Exception:
         out["error"] = "spark: " + traceback.format_exc(limit=3)
         return out
-    # Scale-quarantine guard (runs in the full-gate pytest too, so new
-    # queries can't dodge it): a nested-loop join is only allowed when the
-    # registry tags say why — 'baseline' (deliberate O(n²) exactness
-    # anchor) or 'bcast-const' (constant-size broadcast side: 1-row
-    # aggregate / ≤10-row query set — a map-side pass, not a pair scan).
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
     except Exception:
         plan = ""
-    if ("BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan) and not (
-        {"baseline", "bcast-const"} & set(spec.tags)
-    ):
+    if untagged_nested_loop(any(node in plan for node in NESTED_LOOP_NODES), spec.tags):
         out["error"] = (
             "untagged nested-loop join in executed plan — tag the query "
             "'baseline' or 'bcast-const' in the registry, or fix the plan"

@@ -60,26 +60,18 @@ def audit(name: str, spark, sf_dir: str) -> dict | None:
 
 
 def nested_loop_violations(rows: list[dict]) -> list[str]:
-    """The quarantine assertion: every plan that contains a nested-loop join
-    must say WHY in its registry tags — ``baseline`` (a deliberate O(n²)
-    exactness anchor, bench-excluded, never run at scale) or ``bcast-const``
-    (the nested loop's broadcast side is a constant-size relation — a 1-row
-    corpus aggregate or a ≤10-row query set — so the 'loop' is a map-side
-    pass over the big side, the correct 100 TB shape). An untagged
-    CartesianProduct/BroadcastNestedLoopJoin is a scale-killer hiding in
-    the registry and FAILS the audit."""
-    bad = []
-    for r in rows:
-        if (r["nested_loop"] or r["cartesian"]) and not (
-            {"baseline", "bcast-const"} & set(r["tags"])
-        ):
-            bad.append(
-                f"{r['name']}: nested_loop={r['nested_loop']} "
-                f"cartesian={r['cartesian']} tags={r['tags']} — tag it "
-                "'baseline' (quarantined O(n^2)) or 'bcast-const' "
-                "(constant broadcast side), or fix the plan"
-            )
-    return bad
+    """Every audited plan whose nested-loop join breaks the quarantine rule
+    (``oracle_check.untagged_nested_loop``) FAILS the audit."""
+    from tools.oracle_check import untagged_nested_loop
+
+    return [
+        f"{r['name']}: nested_loop={r['nested_loop']} "
+        f"cartesian={r['cartesian']} tags={r['tags']} — tag it "
+        "'baseline' (quarantined O(n^2)) or 'bcast-const' "
+        "(constant broadcast side), or fix the plan"
+        for r in rows
+        if untagged_nested_loop(r["nested_loop"] or r["cartesian"], r["tags"])
+    ]
 
 
 _PY_NODES = (

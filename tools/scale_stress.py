@@ -1,26 +1,12 @@
 """Scale-stress harness for the near-dup / clustering family.
 
-Self-generates corpora at 1x / 3x / 10x the sf0.1 documents+embeddings tables
-with deterministic perturbations and a deliberately skewed hot shingle, then
-times every scale-path near-dup query at each multiplier. The point is a
-measured scaling CURVE (is wall-time growth sub-quadratic? does the hot key
-stall a task?), not another correctness pass — BASELINE.md records the table.
-
-Corpus construction (all Spark-side, deterministic, no RNG):
-
-- replica k of each doc gets ``doc_id + k * n_base``;
-- 10% of replicas (base doc_id % 10 == 0) are TRUE near-dups: a 2-token
-  replica-specific prefix, text otherwise identical — so the true-pair count
-  grows with the corpus and dedup has something to find;
-- the other 90% are hash-scrambled: tokens reordered by xxhash64(token, k),
-  which destroys 3-token shingles — replicas share vocabulary but not
-  shingles, the realistic "same domain, different text" bulk;
-- 20% of ALL docs (doc_id % 5 == 0) get the same appended 3-token phrase →
-  one shingle with document frequency 0.2·n (thousands at 10x), far past
-  DF_CAP: the stop-shingle cap must bound it or the join stalls;
-- embedding replica k: 10% exact-direction copies (scaled 1+k/1000 — cosine
-  1.0, a true near-dup), 90% per-(k,i) deterministic sign-flips (near-zero
-  cosine with everything).
+Builds 1x / 3x / 10x replica corpora of the sf0.1 testdata with
+tools/corpus.py (perturbed replicas plus a hot shingle, a duplicate
+mega-group and a co-purchase hub part), then times every scale-path query at
+each multiplier with perf_profile.time_queries, persisted relations
+released before every rep. The point is a measured scaling CURVE (is
+wall-time growth sub-quadratic? does the hot key stall a task?), not
+another correctness pass — BASELINE.md records the table.
 
 Usage:
     python tools/scale_stress.py [--mults 1,3,10] [--base /root/testdata/sf0.1]
@@ -33,12 +19,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from songs_etl_spark.plans._util import t
 
 QUERIES = (
     "dedup_exact",
@@ -92,13 +78,17 @@ QUERIES = (
 #: the full curve.
 LOWSIM_MAX_MULT = 3
 
-#: Size of the bit-identical duplicate mega-group planted in every stress
-#: corpus (constant across multipliers; see build_corpus).
-MEGA_COPIES = 1000
+
+def _scaled_cells(emb):
+    """(vec_id, cell) from the two-level k-means at the k ∝ N scale
+    contract: k = N/500, so cells hold ~500 vectors at any corpus size."""
+    from songs_etl_spark.operators.clustering import kmeans_assign_twolevel
+
+    k = max(8, emb.count() // 500)
+    return kmeans_assign_twolevel(emb, k=k, n_iter=3).select("vec_id", F.col("cluster").alias("cell"))
 
 
 def rh_neardup_hisim(spark, sf_dir):
-    from songs_etl_spark.plans._util import t
     from songs_etl_spark.plans.similarity import rh_neardup_pairs
 
     return rh_neardup_pairs(t(spark, sf_dir, "embeddings"))
@@ -109,7 +99,6 @@ def semantic_dedup_scaled(spark, sf_dir):
     for the oracle, but the paper's cost model requires k ∝ N so cluster
     size (and hence the within-cluster pair stage) stays constant. Here
     k = N/500 — the measured curve should be ~linear in N."""
-    from songs_etl_spark.plans._util import t
     from songs_etl_spark.plans.similarity import semdedup_keep
 
     emb = t(spark, sf_dir, "embeddings")
@@ -124,14 +113,11 @@ def semantic_dedup_twolevel(spark, sf_dir):
     level, one Arrow map pass for both assignment stages. The flat variant's N·k
     assignment term becomes N·2√k — this row's curve vs
     semantic_dedup_scaled's is the measured payoff."""
-    from songs_etl_spark.operators.clustering import kmeans_assign_twolevel
-    from songs_etl_spark.plans._util import t
     from songs_etl_spark.plans.similarity import semdedup_keep_from_assignment
 
     emb = t(spark, sf_dir, "embeddings")
-    k = max(8, emb.count() // 500)
-    assign = kmeans_assign_twolevel(emb, k=k, n_iter=3).select("vec_id", "cluster")
-    return semdedup_keep_from_assignment(emb, assign)
+    return semdedup_keep_from_assignment(emb, _scaled_cells(emb).withColumnRenamed("cell", "cluster"))
+
 
 def knn_graph_scaled(spark, sf_dir):
     """knn_graph_ivf at its scale contract: the registered query keys cells
@@ -141,16 +127,11 @@ def knn_graph_scaled(spark, sf_dir):
     keeps per-cell size ~constant; this row measures that curve, mega-group
     included (the 1001 bit-identical vectors land in one cell and bound its
     window at ~10⁶ scored rows regardless of multiplier)."""
-    from songs_etl_spark.operators.clustering import kmeans_assign_twolevel
-    from songs_etl_spark.plans._util import t
     from songs_etl_spark.plans.similarity import knn_topk_within_cells
 
     emb = t(spark, sf_dir, "embeddings")
-    k = max(8, emb.count() // 500)
-    assign = kmeans_assign_twolevel(emb, k=k, n_iter=3).select(
-        "vec_id", F.col("cluster").alias("cell")
-    )
-    return knn_topk_within_cells(emb.join(assign, "vec_id").select("vec_id", "cell", "embedding"))
+    cells = _scaled_cells(emb)
+    return knn_topk_within_cells(emb.join(cells, "vec_id").select("vec_id", "cell", "embedding"))
 
 
 def nndescent_build_scaled(spark, sf_dir):
@@ -162,16 +143,10 @@ def nndescent_build_scaled(spark, sf_dir):
     cells, no rounds) isolates what NN-descent's rounds cost on top of a
     bounded init; vs the round-10 label-cell legs it shows the init wall
     removed."""
-    from songs_etl_spark.operators.clustering import kmeans_assign_twolevel
-    from songs_etl_spark.plans._util import t
     from songs_etl_spark.plans.similarity import _GB_ND_K, nndescent_edges
 
     emb = t(spark, sf_dir, "embeddings")
-    k = max(8, emb.count() // 500)
-    assign = kmeans_assign_twolevel(emb, k=k, n_iter=3).select(
-        "vec_id", F.col("cluster").alias("cell")
-    )
-    return nndescent_edges(emb, k=_GB_ND_K, init_cells=assign)
+    return nndescent_edges(emb, k=_GB_ND_K, init_cells=_scaled_cells(emb))
 
 
 def graph_beam_nnd_scaled(spark, sf_dir):
@@ -182,17 +157,11 @@ def graph_beam_nnd_scaled(spark, sf_dir):
     scale-grade one (the registered query keeps label cells for the
     oracle). Compare against the ann_graph_beam_search SOLO legs
     (BASELINE.md round 10: 2.6x per 3x data — the per-cell build term)."""
-    from songs_etl_spark.operators.clustering import kmeans_assign_twolevel
-    from songs_etl_spark.plans._util import t
     from songs_etl_spark.plans.similarity import _graph_beam_topk, _nnd_search_edges
 
     emb = t(spark, sf_dir, "embeddings")
     cands = emb.filter(F.col("vec_id") >= 10)
-    k = max(8, cands.count() // 500)
-    assign = kmeans_assign_twolevel(cands, k=k, n_iter=3).select(
-        "vec_id", F.col("cluster").alias("cell")
-    )
-    edges = _nnd_search_edges(cands, init_cells=assign).localCheckpoint(eager=False)
+    edges = _nnd_search_edges(cands, init_cells=_scaled_cells(cands)).localCheckpoint(eager=False)
     return _graph_beam_topk(emb, edges)
 
 
@@ -212,193 +181,6 @@ def kcore_peel_k120(spark, sf_dir):
 STRESS_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale_stress")
 
 
-def _scrambled(text_col: F.Column, k: int) -> F.Column:
-    """Tokens reordered by a per-replica hash — same vocabulary, disjoint
-    3-shingles."""
-    from songs_etl_spark.functions.text import tokens
-
-    tok = tokens(text_col)
-    ordered = F.transform(
-        F.array_sort(
-            F.transform(tok, lambda t: F.struct(F.xxhash64(t, F.lit(k)).alias("h"), t.alias("t")))
-        ),
-        lambda s: s["t"],
-    )
-    return F.array_join(ordered, " ")
-
-
-def build_corpus(spark: SparkSession, base_dir: str, out_dir: str, mult: int) -> None:
-    docs = spark.read.parquet(f"{base_dir}/documents.parquet")
-    n_base = docs.agg(F.max("doc_id")).first()[0] + 1
-    parts = [docs]
-    for k in range(1, mult):
-        parts.append(
-            docs.select(
-                (F.col("doc_id") + k * n_base).alias("doc_id"),
-                F.when(
-                    F.col("doc_id") % 10 == 0,
-                    F.concat(F.lit(f"r{k}a r{k}b "), F.col("text")),
-                )
-                .otherwise(_scrambled(F.col("text"), k))
-                .alias("text"),
-                "lang",
-                "source",
-                "n_chars",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.col("text"), F.lit(" zzhot zzkey zzval")),
-        ).otherwise(F.col("text")),
-    )
-    out.repartition(32).write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
-
-    emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
-    m_base = emb.agg(F.max("vec_id")).first()[0] + 1
-    eparts = [emb]
-    for k in range(1, mult):
-        flipped = F.transform(
-            F.col("embedding"),
-            lambda x, i: (
-                x
-                * (1 - 2 * F.pmod(F.xxhash64(F.col("vec_id"), i, F.lit(k)), F.lit(2)))
-            ).cast("float"),
-        )
-        scaled = F.transform(
-            F.col("embedding"), lambda x: (x * F.lit(1.0 + k / 1000.0)).cast("float")
-        )
-        eparts.append(
-            emb.select(
-                (F.col("vec_id") + k * m_base).alias("vec_id"),
-                F.when(F.col("vec_id") % 10 == 0, scaled).otherwise(flipped).alias("embedding"),
-                "label",
-            )
-        )
-    eout = eparts[0]
-    for p in eparts[1:]:
-        eout = eout.unionByName(p)
-    # Duplicate-heavy mega-group: MEGA_COPIES bit-identical copies of vector
-    # 0 (constant size at every multiplier — ids far above the replica
-    # range; with vector 0 itself the group has MEGA_COPIES+1 = 1001
-    # members, C(1001,2) = 500,500 within-group pairs). This is the
-    # web-scale norm (boilerplate pages, empty docs) that an uncapped
-    # (band, bval) self-join turns into n_bands·B² candidate rows;
-    # rh_neardup_pairs must collapse the group to one representative
-    # BEFORE banding, leaving only the output-bound intra-group pairs.
-    mega = (
-        spark.range(MEGA_COPIES)
-        .crossJoin(
-            F.broadcast(emb.filter(F.col("vec_id") == 0).select("embedding", "label"))
-        )
-        .select((F.lit(1_000_000_000) + F.col("id")).alias("vec_id"), "embedding", "label")
-    )
-    eout = eout.unionByName(mega)
-    eout.repartition(32).write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet")
-
-    # Lineitem replicas for the graph family (link prediction): replica k
-    # shifts BOTH l_orderkey and l_partkey, so the co-purchase graph grows as
-    # mult disjoint copies — nodes, edges and wedges all ×mult, the honest
-    # linear-scaling base. On top, a planted HUB part is appended to every
-    # 5th order across all replicas: its co-purchase degree is ~the whole
-    # part universe (hundreds of thousands at 10x), so wedges THROUGH it
-    # would number deg² ≈ 10¹² — the harness proves RA_HUB_CAP prunes it
-    # (the hub still appears as a pair endpoint via low-degree
-    # intermediaries, which is bounded).
-    li = spark.read.parquet(f"{base_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{base_dir}/orders.parquet")
-    # The order-key shift base comes from ORDERS (a superset of lineitem's
-    # keys), so replica k of orders and replica k of lineitem stay joinable.
-    o_base = orders.agg(F.max("o_orderkey")).first()[0] + 1
-    c_base = orders.agg(F.max("o_custkey")).first()[0] + 1
-    p_base = li.agg(F.max("l_partkey")).first()[0] + 1
-
-    # Orders replicas: order keys shift with the shared base; CUSTOMER keys
-    # shift too (more customers, same basket sizes — the honest growth axis:
-    # an unshifted customer would accrete mult× the baskets and blow every
-    # hub cap by construction instead of by data).
-    oparts = [orders]
-    for k in range(1, mult):
-        oparts.append(
-            orders.select(
-                (F.col("o_orderkey") + k * o_base).alias("o_orderkey"),
-                (F.col("o_custkey") + k * c_base).alias("o_custkey"),
-                "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority",
-            )
-        )
-    oout = oparts[0]
-    for p in oparts[1:]:
-        oout = oout.unionByName(p)
-    oout.repartition(32).write.mode("overwrite").parquet(f"{out_dir}/orders.parquet")
-    lparts = [li]
-    for k in range(1, mult):
-        lparts.append(
-            li.select(
-                (F.col("l_orderkey") + k * o_base).alias("l_orderkey"),
-                (F.col("l_partkey") + k * p_base).alias("l_partkey"),
-                "l_suppkey", "l_linenumber", "l_quantity", "l_extendedprice",
-                "l_discount", "l_tax", "l_returnflag", "l_linestatus", "l_shipdate",
-            )
-        )
-    lout = lparts[0]
-    for p in lparts[1:]:
-        lout = lout.unionByName(p)
-    hub = (
-        lout.filter(F.col("l_orderkey") % 5 == 0)
-        .groupBy("l_orderkey")
-        .agg(F.min("l_shipdate").alias("l_shipdate"))
-        .select(
-            "l_orderkey",
-            F.lit(999_999_999).cast("long").alias("l_partkey"),
-            F.lit(1).cast("long").alias("l_suppkey"),
-            F.lit(99).cast("int").alias("l_linenumber"),
-            F.lit(1.0).alias("l_quantity"),
-            F.lit(1.0).alias("l_extendedprice"),
-            F.lit(0.0).alias("l_discount"),
-            F.lit(0.0).alias("l_tax"),
-            F.lit("N").alias("l_returnflag"),
-            F.lit("O").alias("l_linestatus"),
-            "l_shipdate",
-        )
-    )
-    lout.unionByName(hub).repartition(32).write.mode("overwrite").parquet(
-        f"{out_dir}/lineitem.parquet"
-    )
-
-    # Events replicas for the temporal/sketch family (sessionization, as-of,
-    # interval overlap, moments/heavy-hitter sketches): replica k shifts
-    # BOTH event_id and user_id — more USERS over the same January-2024
-    # month, per-user event streams identical. That is the honest growth
-    # axis for every per-user window/join (an unshifted user would accrete
-    # mult× the events per partition key and manufacture skew the real
-    # workload doesn't have), while global aggregates (moments, heavy
-    # hitters) see mult× the rows. Round-8's moments legs needed ad-hoc
-    # hand-made replicas precisely because this table wasn't built here.
-    ev = spark.read.parquet(f"{base_dir}/events.parquet")
-    e_base = ev.agg(F.max("event_id")).first()[0] + 1
-    u_base = ev.agg(F.max("user_id")).first()[0] + 1
-    evparts = [ev]
-    for k in range(1, mult):
-        evparts.append(
-            ev.select(
-                (F.col("event_id") + k * e_base).alias("event_id"),
-                "ts",
-                (F.col("user_id") + k * u_base).alias("user_id"),
-                "event_type",
-                "value",
-                "props",
-            )
-        )
-    evout = evparts[0]
-    for p in evparts[1:]:
-        evout = evout.unionByName(p)
-    evout.repartition(32).write.mode("overwrite").parquet(f"{out_dir}/events.parquet")
-
-
 #: Stress-LOCAL legs (globals in this file, not in REGISTRY, so they carry
 #: no tags) whose plans contain the same broadcast-1-row-aggregate cross
 #: joins their registered counterparts quarantine with 'bcast-const':
@@ -409,33 +191,16 @@ def build_corpus(spark: SparkSession, base_dir: str, out_dir: str, mult: int) ->
 _LOCAL_BCAST_CONST = {"nndescent_build_scaled", "graph_beam_nnd_scaled"}
 
 
-def _allows_broadcast_cross(name: str) -> bool:
-    """A BroadcastNestedLoopJoin is allowed exactly when the registry
-    quarantine tag says so ('bcast-const': the broadcast side is a 1-row
-    aggregate / ≤10-row query set — a map-side pass, the correct 100 TB
-    shape). ONE source of truth with oracle_check/plan_audit: deriving from
-    REGISTRY.tags instead of a second hand-kept list means a future tagged
-    query passes here automatically and an untagged one fails everywhere —
-    except the stress-local legs above, which have no registry row to tag.
-    CartesianProduct (a shuffled pair enumeration) stays forbidden even for
-    tagged queries."""
+def stress_rule(name: str, plan: str) -> bool:
+    """The nested-loop tag rule (oracle_check.untagged_nested_loop) plus one
+    stricter clause at stress scale: a CartesianProduct (a shuffled pair
+    enumeration) fails even for tagged queries. The stress-local legs above
+    count as 'bcast-const'; other local legs have no tags."""
     from songs_etl_spark.plans import REGISTRY
+    from tools.oracle_check import untagged_nested_loop
 
-    if name in _LOCAL_BCAST_CONST:
-        return True
-    spec = REGISTRY.get(name)
-    return spec is not None and "bcast-const" in spec.tags
-
-
-def assert_no_nested_loop(df: DataFrame, name: str) -> None:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    bads = ("CartesianProduct",) if _allows_broadcast_cross(name) else (
-        "CartesianProduct",
-        "BroadcastNestedLoopJoin",
-    )
-    for bad in bads:
-        if bad in plan:
-            raise AssertionError(f"{name}: {bad} in physical plan at stress scale")
+    tags = ("bcast-const",) if name in _LOCAL_BCAST_CONST else getattr(REGISTRY.get(name), "tags", ())
+    return "CartesianProduct" in plan or untagged_nested_loop("BroadcastNestedLoopJoin" in plan, tags)
 
 
 def main() -> int:
@@ -446,106 +211,65 @@ def main() -> int:
     ap.add_argument(
         "--reuse",
         action="store_true",
-        help="skip corpus build when the multiplier dir already exists "
-        "(pair with --no-clean across SOLO runs so every per-query session "
-        "measures the identical corpus without paying the build each time)",
+        help="skip the corpus build when the multiplier dir already exists",
     )
-    ap.add_argument(
-        "--no-clean",
-        action="store_true",
-        help="keep the generated corpora on exit (for --reuse follow-ups)",
-    )
+    ap.add_argument("--no-clean", action="store_true", help="keep the corpora on exit (for --reuse)")
     ap.add_argument(
         "--partitions",
         type=int,
         default=0,
-        help="override spark.sql.shuffle.partitions for the timed runs "
-        "(0 = session default). The cluster deployment scales this with "
-        "the data; the partition-scaled m30 legs prove the iterative-graph "
-        "tail is shuffle-layout, not candidate growth (BASELINE.md r7)",
+        help="override spark.sql.shuffle.partitions for the timed runs (0 = session default)",
     )
-    ap.add_argument(
-        "--reps",
-        type=int,
-        default=1,
-        help="time each query REPS times per multiplier and record the MIN "
-        "(single m30 runs vary 2-3x with JVM/GC warmup on this host — the "
-        "round-7 finding; min-of-N isolates the steady-state curve the "
-        "scale claim is about)",
-    )
+    ap.add_argument("--reps", type=int, default=1, help="time each query REPS times, keep the min")
     args = ap.parse_args()
     mults = [int(m) for m in args.mults.split(",")]
     names = args.queries.split(",")
 
     from songs_etl_spark.plans import REGISTRY
-    from songs_etl_spark.plans.dedup import clear_shingle_cache
-    from songs_etl_spark.plans._util import clear_tracked_persists
     from songs_etl_spark.session import get_spark
+    from songs_etl_spark.sources.catalog import clear_table_cache
+    from tools.corpus import build
+    from perfbench.clock import now
+    from tools.perf_profile import time_queries, warm_up
 
     spark = get_spark("scale-stress")
     if args.partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.partitions))
-
-    def query_fn(name):
-        return REGISTRY[name].fn if name in REGISTRY else globals()[name]
-
+    fns = {n: REGISTRY[n].fn if n in REGISTRY else globals()[n] for n in names}
     # Codegen warm-up on the base dir so the 1x timings aren't compile-bound.
-    for name in names:
-        try:
-            query_fn(name)(spark, args.base).write.mode("overwrite").format("noop").save()
-        except Exception as exc:
-            print(f"warm-up failed for {name}: {exc!r}", file=sys.stderr)
-    clear_shingle_cache()
-    clear_tracked_persists()
+    warm_up(spark, fns, args.base)
 
     results: dict[str, dict[str, float]] = {name: {} for name in names}
     sizes: dict[str, dict[str, int]] = {}
     for mult in mults:
         out_dir = os.path.join(STRESS_ROOT, f"m{mult}")
-        t0 = time.perf_counter()
+        t0 = now()
         # events.parquet is the newest table in the corpus — a pre-round-9
         # cached dir without it must be rebuilt even under --reuse
         if not (args.reuse and os.path.isdir(f"{out_dir}/events.parquet")):
-            build_corpus(spark, args.base, out_dir, mult)
+            build(spark, args.base, out_dir, mult)
             # The corpus dir may have just been rewritten in place: drop
             # memoized table handles so reads re-list files/schema.
-            from songs_etl_spark.sources.catalog import clear_table_cache
-
             clear_table_cache()
-        gen_s = time.perf_counter() - t0
+        gen_s = now() - t0
         n_docs = spark.read.parquet(f"{out_dir}/documents.parquet").count()
         n_vecs = spark.read.parquet(f"{out_dir}/embeddings.parquet").count()
         sizes[f"m{mult}"] = {"docs": n_docs, "vecs": n_vecs}
         print(f"-- m{mult}: {n_docs} docs, {n_vecs} vecs (generated in {gen_s:.1f}s)")
-        for name in names:
+        for name, fn in fns.items():
             if name == "embedding_neardup_lsh" and mult > LOWSIM_MAX_MULT:
                 print(
                     f"   {name:38s}  omitted at {mult}x: 0.4-threshold regime is "
                     "unprunable by design; see rh_neardup_hisim for the production curve"
                 )
                 continue
-            times = []
-            for _ in range(max(args.reps, 1)):
-                clear_shingle_cache()
-                clear_tracked_persists()
-                # Timer starts BEFORE plan construction: queries that use
-                # eager localCheckpoint (k-core, pointer doubling, the BPE
-                # trainers) do most of their work while the DataFrame is
-                # being BUILT — timing only the final noop save would let
-                # that work escape the measurement entirely (caught in
-                # round 8: the checkpointed k-core "measured" 0.84 s at m10
-                # vs 23 s for the real computation).
-                start = time.perf_counter()
-                df = query_fn(name)(spark, out_dir)
-                df.write.mode("overwrite").format("noop").save()
-                times.append(round(time.perf_counter() - start, 2))
-                assert_no_nested_loop(df, name)
-            secs = min(times)
-            results[name][f"m{mult}"] = secs
-            reps_note = f"  (reps: {times})" if len(times) > 1 else ""
-            print(f"   {name:38s} {secs:8.2f} s{reps_note}")
-        clear_shingle_cache()
-        clear_tracked_persists()
+            timed = time_queries(spark, {name: fn}, out_dir, max(args.reps, 1), rule=stress_rule)
+            secs = results[name][f"m{mult}"] = timed["queries"][name]
+            reps_note = f"  (reps: {[p[name] for p in timed['passes']]})" if args.reps > 1 else ""
+            print(
+                f"   {name:38s} {secs:8.2f} s  build {timed['build_s'][name]:.2f} "
+                f"/ exec {timed['exec_s'][name]:.2f}{reps_note}"
+            )
     print(json.dumps({"sizes": sizes, "seconds": results}))
 
     # Markdown table for BASELINE.md.
