@@ -33,32 +33,24 @@ def connected_components(
     ``max_iterations`` rounds don't converge (diameter larger than expected —
     switch to large-star/small-star rather than silently truncating).
     """
+    from songs_etl_spark.plans._util import cut, iterate
+
     half = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     edges = half.unionByName(
         half.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).persist()
-    # localCheckpoint per round (not just persist): persist caches data but
-    # the LOGICAL plan still deepens every round, and Catalyst re-optimizes
-    # the whole lineage at each action — at tens of rounds planning goes
-    # superlinear and can exhaust the driver heap. Checkpointing truncates
-    # the lineage so every round plans against a flat scan.
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iterations):
+    labels = cut(edges.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id")))
+
+    def propagate(labels: DataFrame) -> DataFrame | None:
         neighbor_min = (
             edges.join(labels, edges.b == labels.id)
             .groupBy(F.col("a").alias("id"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select("id", F.least("label", "nbr_label").alias("label"))
-            .localCheckpoint(eager=True)
+        new_labels = cut(
+            labels.join(neighbor_min, "id", "left").select(
+                "id", F.least("label", "nbr_label").alias("label")
+            )
         )
         changed = (
             new_labels.alias("n")
@@ -66,10 +58,9 @@ def connected_components(
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
+        return None if changed == 0 else new_labels
+
+    labels, converged = iterate(labels, propagate, max_iterations)
     edges.unpersist()
     if not converged:
         raise RuntimeError(
@@ -114,17 +105,18 @@ def connected_components_twostar(
     xxhash64 sum — order-insensitive, collision odds ~2⁻⁶⁴); the bound
     raises rather than silently truncating.
     """
+    from songs_etl_spark.plans._util import cut, iterate
+
     raw = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = _symmetric(raw).localCheckpoint(eager=True)
+    edges = cut(_symmetric(raw))
     # Vertices come from the RAW pairs, not the symmetrized edges: _symmetric
     # drops self-loops (a != b), so a vertex appearing only as (x, x) would
     # otherwise vanish instead of getting component_id = x via the final
     # left-join coalesce — same contract as connected_components.
-    vertices = (
+    vertices = cut(
         raw.select(F.col("a").alias("id"))
         .unionByName(raw.select(F.col("b").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def fingerprint(e: DataFrame) -> tuple[int, object]:
@@ -151,23 +143,13 @@ def connected_components_twostar(
             ).unionByName(joined.select("a", F.col("m").alias("b")))
         return _symmetric(attach)
 
-    fp = fingerprint(edges)
-    converged = False
-    for _ in range(max_iterations):
-        # localCheckpoint (not persist): an iterative edge rewrite grows the
-        # logical plan 4 shuffles deeper per round, and Catalyst re-optimizes
-        # the FULL lineage at every action — planning time goes superlinear
-        # by round 10. Checkpointing materializes the round's edges and
-        # truncates lineage, so every round plans against a flat scan.
-        new_edges = star_round(star_round(edges, large=True), large=False).localCheckpoint(
-            eager=True
-        )
+    def two_star(state: tuple[DataFrame, tuple]) -> tuple[DataFrame, tuple] | None:
+        edges, fp = state
+        new_edges = cut(star_round(star_round(edges, large=True), large=False))
         new_fp = fingerprint(new_edges)
-        edges = new_edges
-        if new_fp == fp:
-            converged = True
-            break
-        fp = new_fp
+        return None if new_fp == fp else (new_edges, new_fp)
+
+    (edges, _), converged = iterate((edges, fingerprint(edges)), two_star, max_iterations)
     if not converged:
         raise RuntimeError(
             f"connected_components_twostar did not converge in {max_iterations} rounds"

@@ -90,13 +90,14 @@ def ts_lit(value: str) -> Column:
 
 #: Session-lifetime registry of relations persisted inside query plans
 #: (the near-dup shingle relation, SemDeDup assignments, two-level k-means
-#: stages, PageRank edge/degree relations, LSH band relations), keyed by the
-#: plan's semantic hash (or an explicit key, persist_keyed) so re-invoking a
+#: stages, PageRank edge/degree relations, LSH band relations) and of every
+#: cut, keyed by the plan's semantic hash (or an explicit key: persist_keyed,
+#: and (cut, id) for a cut) so re-invoking a
 #: registry function returns the SAME persisted relation instead of stacking
 #: a new cached copy per call (long-lived sessions run ~190 queries, several
 #: of which rebuild shared relations). Spark's CacheManager evicts under memory pressure, but
 #: explicit release stays the hygiene rule: clear_tracked_persists() is the
-#: one call that releases every relation a query persisted.
+#: one call that releases every relation a query persisted or cut.
 _TRACKED_PERSISTS: dict[Hashable, list[DataFrame]] = {}
 
 
@@ -138,13 +139,67 @@ def persist_keyed(key: tuple, build: Callable[[], DataFrame], level: StorageLeve
     return bucket[0]
 
 
+def cut(df: DataFrame) -> DataFrame:
+    """Truncate ``df``'s lineage to a leaf: ``localCheckpoint(eager=False)``,
+    registered in the tracked-persist memo so clear_tracked_persists()
+    releases the checkpoint blocks. The one lineage cut in plans/ and
+    operators/; a cut of a relation this function returned is that
+    relation unchanged.
+
+    Why cut and not persist: persist caches the data but keeps the logical
+    plan, so a relation rebuilt from its predecessor every round chains r
+    plans deep and Catalyst re-analyzes the whole tree on every action and
+    at every AQE stage (measured: BPE rounds grow from ~1 s to 40+ s by
+    round 16, a 4-hop beam search 8 s -> 186 s, a Louvain sweep 98 s on a
+    200-node graph); a relation read twice or more is also recomputed per
+    reader when not materialized. A cut makes every round plan against a
+    scan. Why lazy: under AQE, ``localCheckpoint(eager=False)`` already
+    runs every shuffle stage of the plan when it is called; the checkpoint
+    then fills inside the next action (a fixed-point count or min, the next
+    round's argmax, the caller's sink), so eager would only add one job.
+
+    Released only by clear_tracked_persists(): acting on a cut relation
+    after its blocks are gone fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
+    so nothing here frees early."""
+    if (cut, id(df)) in _TRACKED_PERSISTS:  # the memo keeps df alive, so its id is unique
+        return df
+    out = df.localCheckpoint(eager=False)
+    _TRACKED_PERSISTS[(cut, id(out))] = [out]
+    return out
+
+
+def iterate(
+    state: DataFrame | tuple,
+    step: Callable[[DataFrame | tuple], DataFrame | tuple | None],
+    rounds: int,
+) -> tuple[DataFrame | tuple, bool]:
+    """Run up to ``rounds`` rounds of ``state = step(state)``, where the
+    state is a DataFrame or a tuple holding DataFrames; every DataFrame of
+    each new state goes through :func:`cut`. ``step`` returns None at its
+    fixed point. Returns the last state and whether the fixed point was
+    reached (False when all ``rounds`` ran). Releases nothing and sets no
+    job group: the caller's build group counts the rounds' jobs."""
+    for _ in range(rounds):
+        nxt = step(state)
+        if nxt is None:
+            return state, True
+        if isinstance(nxt, tuple):
+            state = tuple(cut(x) if isinstance(x, DataFrame) else x for x in nxt)
+        else:
+            state = cut(nxt)
+    return state, False
+
+
 def clear_tracked_persists() -> None:
-    """Unpersist every tracked relation (bench, tools and tests call this
-    between passes or datasets)."""
+    """Unpersist every tracked relation and free the blocks of every cut
+    (bench, tools and tests call this between passes or datasets)."""
     for bucket in _TRACKED_PERSISTS.values():
         for df in bucket:
             try:
                 df.unpersist()
+                plan = df._jdf.queryExecution().analyzed()
+                if plan.getClass().getSimpleName() == "LogicalRDD":
+                    plan.rdd().unpersist(False)
             except Exception:
                 pass  # session may already be gone
     _TRACKED_PERSISTS.clear()

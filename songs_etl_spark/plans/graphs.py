@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from songs_etl_spark.plans._util import t, track_persist
+from songs_etl_spark.plans._util import cut, iterate, t, track_persist
 from songs_etl_spark.plans.registry import register
 
 
@@ -115,9 +115,8 @@ def pagerank(edges: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
     keyed by dst aggregates them; the rank update is a fixed scalar chain
     (single IEEE ops — bit-identical on any engine). Graph size never
     touches the driver beyond the node count (loop control, like the
-    k-means round counter). For larger n_iter, interpose
-    ``localCheckpoint`` every ~10 rounds to truncate lineage — the same
-    discipline as operators/graph.py connected components."""
+    k-means round counter). The rounds stay a plain loop: at 3 rounds a
+    per-round ``cut`` would only add AQE stage jobs at build time."""
     edges = track_persist(edges)
     deg = track_persist(edges.groupBy("src").agg(F.count("*").alias("d")))
     n_df = deg.agg(F.count("*").cast("double").alias("n"))
@@ -228,25 +227,24 @@ def part_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id", "parent")
     )
-    state = (
-        nodes.join(links, "id", "left")
-        .select(
+    state = cut(
+        nodes.join(links, "id", "left").select(
             "id",
             F.coalesce("parent", F.col("id")).alias("anc"),
             F.when(F.col("parent").isNotNull(), F.lit(1)).otherwise(F.lit(0)).alias("d"),
         )
-        .localCheckpoint(eager=True)
     )
-    # depth ≤ digits of max key; 4 doubling rounds cover depth 16
-    for _ in range(4):
+
+    def double(state: DataFrame) -> DataFrame:
         hop = state.select(
             F.col("id").alias("hid"), F.col("anc").alias("hanc"), F.col("d").alias("hd")
         )
-        state = (
-            state.join(hop, state.anc == hop.hid)
-            .select("id", F.col("hanc").alias("anc"), (F.col("d") + F.col("hd")).alias("d"))
-            .localCheckpoint(eager=True)
+        return state.join(hop, state.anc == hop.hid).select(
+            "id", F.col("hanc").alias("anc"), (F.col("d") + F.col("hd")).alias("d")
         )
+
+    # depth ≤ digits of max key; 4 doubling rounds cover depth 16
+    state, _ = iterate(state, double, 4)
     return state.select(
         F.col("id").alias("part_key"),
         F.col("anc").cast("bigint").alias("root_key"),
@@ -439,9 +437,9 @@ def ktruss_edge_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     than its O(√m) oriented out-degree), one wedge-close 3-join that
     materializes each triangle once, one canonical-pair count for support,
     and one equi-semi-join filtering the half-sized (u < v) edge state.
-    The oriented relation is checkpointed per round (consumed by all three
-    triangle slots); the edge state is checkpointed per round (the k-core
-    discipline: lineage truncation + measured-size layout). The peel
+    The oriented relation is cut per round (consumed by all three
+    triangle slots); the edge state is cut per round with the k-core
+    measured-size layout. The peel
     EARLY-EXITS at its fixed point — edge count unchanged means no support
     can change, so remaining rounds are the identity, exactly matching the
     oracle's fixed KTRUSS_ROUNDS unroll."""
@@ -452,7 +450,7 @@ def ktruss_edge_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg = sym.groupBy("u").agg(F.count("*").alias("d"))
         du = deg.select(F.col("u").alias("su"), F.col("d").alias("du"))
         dv = deg.select(F.col("u").alias("sv"), F.col("d").alias("dv"))
-        ori = (
+        ori = cut(  # consumed by all three tri slots
             sym.join(du, sym.u == du.su)
             .join(dv, sym.v == dv.sv)
             .filter(
@@ -460,7 +458,6 @@ def ktruss_edge_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
             )
             .select("u", "v")
-            .localCheckpoint(eager=True)  # consumed by all three tri slots
         )
         e1 = ori.select(F.col("u").alias("a"), F.col("v").alias("b"))
         e2 = ori.select(F.col("u").alias("b2"), F.col("v").alias("c"))
@@ -481,17 +478,15 @@ def ktruss_edge_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("s"))
         )
 
-    for _ in range(KTRUSS_ROUNDS):
+    def peel(state: tuple[DataFrame, int]) -> tuple[DataFrame, int] | None:
+        edges, n_edges = state
         strong = edge_support(edges).filter(F.col("s") >= KTRUSS_K - 2).select("u", "v")
-        edges = (
-            edges.join(strong, ["u", "v"], "left_semi")
-            .repartition(parts, "u")
-            .localCheckpoint(eager=True)
-        )
-        n_next = edges.count()
-        if n_next == n_edges:  # fixed point: no edge dropped, supports frozen
-            break
-        n_edges = n_next
+        kept = cut(edges.join(strong, ["u", "v"], "left_semi").repartition(parts, "u"))
+        n_kept = kept.count()
+        # fixed point: no edge dropped, supports frozen
+        return None if n_kept == n_edges else (kept, n_kept)
+
+    (edges, _), _ = iterate((edges, n_edges), peel, KTRUSS_ROUNDS)
     return (
         edges.select(F.explode(F.array("u", "v")).alias("part_key"))
         .groupBy("part_key")
@@ -713,15 +708,16 @@ def modularity_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("e_in", F.lit(0)).alias("e_in"),
     )
     n_nodes = labels.agg(F.count("*").alias("n_nodes"))
+    # grouped by m like the oracle's GROUP BY mm.m: no community, no row
     return (
         comm.crossJoin(F.broadcast(mm))
+        .groupBy("m")
         .agg(
             F.count("*").alias("n_communities"),
             F.max("n_nodes").cast("bigint").alias("largest_community"),
             F.sum(
                 F.lit(4) * F.col("m") * F.col("e_in") - F.col("d_c") * F.col("d_c")
             ).alias("num"),
-            F.first("m").alias("m"),
         )
         .crossJoin(F.broadcast(n_nodes))
         .select(
@@ -856,7 +852,7 @@ def link_prediction_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFram
 KCORE_K = 4
 KCORE_ROUNDS = 3
 
-#: Target rows per partition for the per-round checkpointed edge state: each
+#: Target rows per partition for the per-round cut edge state: each
 #: row is two BIGINTs, so ~250k rows is a ~6 MB block. Deliberately FINE
 #: granularity, for two measured reasons (BASELINE.md round-8): (1) at 1M
 #: rows/partition the m30 stress corpus landed at 37 partitions on 32 cores
@@ -874,7 +870,7 @@ def _peel_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int]:
     undirected edge relation, counted once, laid out as ``parts`` hash
     partitions on ``u`` (the measured size over
     KCORE_EDGE_ROWS_PER_PARTITION, clamped to [shuffle.partitions, 4096])
-    and eagerly checkpointed. Returns (edges, edge count, parts)."""
+    and cut. Returns (edges, edge count, parts)."""
     und = track_persist(_und_edges(spark, sf_dir))
     n_und = und.count()
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -882,7 +878,7 @@ def _peel_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int]:
         shuffle_parts,
         min(4096, -(-n_und // KCORE_EDGE_ROWS_PER_PARTITION)),
     )
-    return und.repartition(parts, "u").localCheckpoint(eager=True), n_und, parts
+    return cut(und.repartition(parts, "u")), n_und, parts
 
 
 def _kcore_oracle() -> str:
@@ -944,19 +940,16 @@ def kcore_decomposition_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
        before the shuffle). Every per-round exchange, semi-join and
        checkpoint write therefore moves HALF the bytes of the symmetrized
        formulation the peel shipped through round 7.
-    2. **Per-round state is ``repartition(parts, "u") + eager
-       localCheckpoint``, not a lazy persist chain**: the round-7 legs
-       proved the shrinking edge state outgrows a fixed 32-partition layout
-       (169.9 s -> 93.8 s at m30 just from 32 -> 96 partitions), so
-       ``parts`` scales with the MEASURED edge count (~250k rows/partition
-       — see ``KCORE_EDGE_ROWS_PER_PARTITION``; 1M left heavy legs at a
-       single straggly task wave on local[32], so the constant was sized
-       down to land ≥4 waves of small tasks),
-       clamped to [shuffle.partitions, 4096]) — the knob a cluster
-       deployment turns — and the checkpoint truncates lineage per round
-       (the BPE-trainer discipline, text.py) so no round recomputes a
-       predecessor under cache eviction. Hash-partitioning by ``u``
-       survives the checkpoint, so the u-side semi-join reads the state
+    2. **Per-round state is ``repartition(parts, "u")`` + ``cut``, not
+       a persist chain**: the round-7 legs proved the shrinking edge
+       state outgrows a fixed 32-partition layout (169.9 s -> 93.8 s at
+       m30 just from 32 -> 96 partitions), so ``parts`` scales with the
+       MEASURED edge count (~250k rows/partition — see
+       ``KCORE_EDGE_ROWS_PER_PARTITION``; 1M left heavy legs at a single
+       straggly task wave on local[32], so the constant was sized down to
+       land ≥4 waves of small tasks), clamped to [shuffle.partitions,
+       4096]) — the knob a cluster deployment turns. Hash-partitioning by
+       ``u`` survives the cut, so the u-side semi-join reads the state
        with no exchange; each round pays one half-sized v-side exchange
        plus the half-sized repartition back to the u layout.
 
@@ -988,12 +981,12 @@ def kcore_peel_core(
             .agg(F.count("*").alias("d"))
         )
 
-    for _ in range(rounds):
+    def peel(edges: DataFrame) -> DataFrame | None:
         # deg is NODE-sized and consumed twice (the fixed-point probe and
         # both semi-joins) — materialize it once per round or each consumer
         # re-runs the corpus-sized degree aggregation (measured: the
         # unmaterialized form cost ~30% more wall at m10).
-        deg = endpoint_degrees(edges).localCheckpoint(eager=True)
+        deg = cut(endpoint_degrees(edges))
         # Fixed-point probe BEFORE paying the round: the peel converges the
         # moment no node falls below k (removing zero nodes removes zero
         # edges, so every later round is the identity — the oracle's fixed
@@ -1001,19 +994,20 @@ def kcore_peel_core(
         # graphs that converge fast — the common case; the m30 stress corpus
         # converges after round 0 — this skips the corpus-sized semi-join +
         # rewrite entirely, and the probe itself is one min(d) aggregate on
-        # the node-sized checkpointed degree relation (not a limit(1): a
-        # generated limit stage names its counter from a JVM-wide sequence,
-        # so its class never repeats and compiles again on every run).
+        # the node-sized cut degree relation (not a limit(1): a generated
+        # limit stage names its counter from a JVM-wide sequence, so its
+        # class never repeats and compiles again on every run).
         min_d = deg.agg(F.min("d")).collect()[0][0]
         if min_d is None or min_d >= k:
-            break
+            return None
         alive = deg.filter(F.col("d") >= k).select("node")
-        edges = (
+        return (
             edges.join(alive.select(F.col("node").alias("u")), "u", "left_semi")
             .join(alive.select(F.col("node").alias("v")), "v", "left_semi")
             .repartition(parts, "u")
-            .localCheckpoint(eager=True)
         )
+
+    edges, _ = iterate(edges, peel, rounds)
     return (
         edges.select(F.explode(F.array("u", "v")).alias("part_key"))
         .groupBy("part_key")
@@ -1105,31 +1099,26 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = e.select("c").distinct().select(
         "c", F.lit(HITS_SCALE).cast("bigint").alias("h")
     )
-    a = None
-    for _ in range(HITS_ITER):
-        # Each round's aggregate is referenced twice (its own max for the
-        # normalize, then the scaled relation) and the next round chains on
-        # top — unpersisted, reference counts double per round and every
-        # AQE stage job re-analyzes the whole history. localCheckpoint the
-        # node-sized per-round relations (the louvain/_wl_sweep rule).
-        ar = (
-            e.join(h, "c")
-            .groupBy("p")
-            .agg(F.sum("h").cast("bigint").alias("a"))
-        ).localCheckpoint(eager=False)
+
+    def half_steps(state: tuple[DataFrame, DataFrame | None]) -> tuple[DataFrame, DataFrame]:
+        # Each aggregate is read twice (its own max for the normalize, then
+        # the scaled relation), so it is cut too.
+        h, _ = state
+        ar = cut(e.join(h, "c").groupBy("p").agg(F.sum("h").cast("bigint").alias("a")))
         amax = ar.agg(F.max("a").alias("m"))
-        a = ar.crossJoin(F.broadcast(amax)).select(
-            "p", F.expr(f"a * {HITS_SCALE} DIV m").alias("a")
-        ).localCheckpoint(eager=False)
-        hr = (
-            e.join(a, "p")
-            .groupBy("c")
-            .agg(F.sum("a").cast("bigint").alias("h"))
-        ).localCheckpoint(eager=False)
+        a = cut(
+            ar.crossJoin(F.broadcast(amax)).select(
+                "p", F.expr(f"a * {HITS_SCALE} DIV m").alias("a")
+            )
+        )
+        hr = cut(e.join(a, "p").groupBy("c").agg(F.sum("a").cast("bigint").alias("h")))
         hmax = hr.agg(F.max("h").alias("m"))
         h = hr.crossJoin(F.broadcast(hmax)).select(
             "c", F.expr(f"h * {HITS_SCALE} DIV m").alias("h")
-        ).localCheckpoint(eager=False)
+        )
+        return h, a
+
+    (_, a), _ = iterate((h, None), half_steps, HITS_ITER)
     w = Window.orderBy(F.col("a").desc(), "p")
     return (
         a.withColumn("rn", F.row_number().over(w))
@@ -1207,8 +1196,9 @@ def ppr_part_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer iteration (the textrank_keywords discipline): the walk
     mass is BIGINT pico-units, per-edge transfer is r // deg, damping is
     (85·x) // 100, and the 15% restart mass returns to the seed via a
-    broadcast 1-row relation — bit-stable in any partition order, no
-    quantization step needed. Per round: one edges⋈rank equi-join (the
+    full outer join with the 1-row seed relation (Spark cannot broadcast
+    either side of a full outer join, so no hint) — bit-stable in any
+    partition order, no quantization step needed. Per round: one edges⋈rank equi-join (the
     rank frontier is sparse — only reached nodes carry rows) + one
     map-side-combining integer sum; the co-purchase edge relation is
     built once, persisted, and shared with pagerank/LPA via the
@@ -1230,7 +1220,7 @@ def ppr_part_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.sum("t").cast("bigint").alias("cc"))
         )
-        sd = F.broadcast(seed.select("node", F.lit(base).cast("bigint").alias("sb")))
+        sd = seed.select("node", F.lit(base).cast("bigint").alias("sb"))
         r = (
             contrib.join(sd, "node", "full_outer")
             .select(
@@ -1389,11 +1379,10 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per round one equi-join (frontier ⋈ edges on node) + one
     min-groupBy — the canonical BSP/Pregel step, linear in edges with fixed
     rounds (same cost model as the PageRank/HITS/k-core family). The
-    frontier relation is persisted per round so branch reuse doesn't
-    re-expand the join; distances are bounded by R, so the state relation
-    never exceeds the reachable set. Fixed rounds (not run-to-convergence)
-    keep the oracle unrollable — production BFS iterates until the frontier
-    empties, checkpointing every ~5 rounds to cut lineage."""
+    distance state is cut per round; distances are bounded by R, so the
+    state relation never exceeds the reachable set. Fixed rounds (not
+    run-to-convergence) keep the oracle unrollable — production BFS
+    iterates until the frontier empties."""
     und = _und_edges(spark, sf_dir)
     sym = track_persist(
         und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1405,14 +1394,14 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("node")
         .limit(3)
     )
-    dist = track_persist(seeds.select("node", F.lit(0).alias("dist")))
-    for _ in range(BFS_ROUNDS):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = dist.join(sym, dist["node"] == sym["u"]).select(
             F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        dist = track_persist(
-            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
-        )
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    dist, _ = iterate(cut(seeds.select("node", F.lit(0).alias("dist"))), relax, BFS_ROUNDS)
     return dist.select(F.col("node").alias("part_key"), F.col("dist").cast("bigint").alias("dist"))
 
 
@@ -1697,18 +1686,17 @@ def closeness_centrality_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("seed")
         .limit(_HC_SEEDS)
     )
-    dist = track_persist(
-        seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-    )
-    frontier = dist
-    for _ in range(BFS_ROUNDS):
+    dist = cut(seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist")))
+
+    def relax(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        dist, frontier = state
         cand = (
             frontier.join(sym, frontier["node"] == sym["u"])
             .select("seed", F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
             .groupBy("seed", "node")
             .agg(F.min("dist").alias("dist"))
         )
-        improved = track_persist(
+        improved = cut(  # read by the new state and as the next frontier
             cand.join(
                 dist.select("seed", "node", F.col("dist").alias("old")),
                 ["seed", "node"],
@@ -1717,12 +1705,10 @@ def closeness_centrality_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .select("seed", "node", "dist")
         )
-        dist = track_persist(
-            dist.unionByName(improved)
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        frontier = improved
+        dist = dist.unionByName(improved).groupBy("seed", "node").agg(F.min("dist").alias("dist"))
+        return dist, improved
+
+    (dist, _), _ = iterate((dist, dist), relax, BFS_ROUNDS)
     contrib = F.floor(F.lit(_HC_LCM) / F.col("dist")).cast("bigint")
     return (
         dist.filter(F.col("dist") > 0)
@@ -1968,10 +1954,8 @@ def _wl_sweep(
     # The sweep's cost is dominated by AQE stage-materialization jobs
     # re-analyzing and re-serializing the deep move-machinery tree (126
     # jobs / 92 s wall for ~3 s of task time at sf0.01 before truncation),
-    # so every node-sized intermediate that a later stage reads is
-    # localCheckpoint-ed: kuc, best, pref, gsel, kept and newlab (the
-    # d403d3f NN-descent precedent). They are per-sweep relations, so
-    # cross-query persist memoization has no value here. dsum is NOT
+    # so every node-sized intermediate that a later stage reads is cut:
+    # kuc, best, pref, gsel, kept and newlab. dsum is NOT
     # materialized: it is a community-sized aggregate over the persisted
     # labels and deg, cheap to recompute for each of its three readers
     # (both cand joins and the before-numerator).
@@ -1980,14 +1964,14 @@ def _wl_sweep(
         .groupBy(F.col("label").alias("comm"))
         .agg(F.sum("d").alias("dc"))
     )
-    kuc = (
+    kuc = cut(
         pairs.join(
             labels.select(F.col("node").alias("dst"), F.col("label").alias("comm")),
             "dst",
         )
         .groupBy(F.col("src").alias("node"), "comm")
         .agg(F.sum("w").alias("k"))
-    ).localCheckpoint(eager=False)
+    )
     cand = (
         kuc.join(labels, "node")
         .filter(F.col("comm") != F.col("label"))
@@ -2024,7 +2008,7 @@ def _wl_sweep(
         )
         .filter(F.col("gain") > 0)
     )
-    best = (
+    best = cut(
         gains.groupBy("node")
         .agg(
             F.min(
@@ -2041,14 +2025,14 @@ def _wl_sweep(
             F.col("b.tgt").alias("tgt_c"),
             (-F.col("b.negg")).alias("gain"),
         )
-    ).localCheckpoint(eager=False)
+    )
     w1 = (
         Window.partitionBy("src_c", "tgt_c")
         .orderBy(F.col("gain").desc(), "node")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w1r = Window.partitionBy("src_c", "tgt_c").orderBy(F.col("gain").desc(), "node")
-    pref = (
+    pref = cut(
         best.join(deg, "node").select(
             "node",
             "src_c",
@@ -2059,11 +2043,11 @@ def _wl_sweep(
             F.sum(F.col("d") * F.col("d")).over(w1).alias("cd2"),
             F.row_number().over(w1r).alias("j"),
         )
-    ).localCheckpoint(eager=False)
+    )
     bound_expr = F.col("cg") - F.lit(2) * (
         F.col("cdeg") * F.col("cdeg") - F.col("cd2")
     )
-    gsel = (
+    gsel = cut(
         pref.groupBy("src_c", "tgt_c")
         .agg(
             F.min(
@@ -2077,7 +2061,7 @@ def _wl_sweep(
             (-F.col("gb.negb")).alias("bound"),
         )
         .filter(F.col("bound") > 0)
-    ).localCheckpoint(eager=False)
+    )
     touch = gsel.select(
         "bound", "src_c", "tgt_c", F.col("src_c").alias("comm")
     ).unionByName(gsel.select("bound", "src_c", "tgt_c", F.col("tgt_c").alias("comm")))
@@ -2115,15 +2099,15 @@ def _wl_sweep(
         )
         .select("src_c", "tgt_c", "jstar")
     )
-    kept = (
+    kept = cut(
         pref.join(keptg, ["src_c", "tgt_c"])
         .filter(F.col("j") <= F.col("jstar"))
         .select("node", "tgt_c")
-    ).localCheckpoint(eager=False)
-    newlab = (
-        labels.join(kept, "node", "left")
-        .select("node", F.coalesce("tgt_c", F.col("label")).alias("label"))
-        .localCheckpoint(eager=False)
+    )
+    newlab = cut(
+        labels.join(kept, "node", "left").select(
+            "node", F.coalesce("tgt_c", F.col("label")).alias("label")
+        )
     )
     intra = (
         kuc.join(labels, "node")
@@ -2440,16 +2424,12 @@ def louvain_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: coarsening is one edge→label→label equi-join + one groupBy on
     label pairs; every sweep shuffles like an LPA round on its level's
     (shrinking) graph. No collects anywhere. Each sweep's output labels
-    are ``localCheckpoint``-ed inside :func:`_wl_sweep` (the BPE-trainer
-    precedent, text.py:1034): each sweep's plan chains ~10 joins/windows,
-    so without truncation sweep r re-analyzes and re-schedules every prior
-    sweep's tree — measured 98 s for sweep 2 alone on a 200-node sf0.001
-    graph, pure overhead. The checkpointed relations are NODE-sized (one
-    label per node, then one per supernode), never edge-sized."""
-    labels = (
-        label_propagation_communities(spark, sf_dir)
-        .select(F.col("part_key").alias("node"), F.col("community").alias("label"))
-        .localCheckpoint(eager=False)
+    are cut inside :func:`_wl_sweep`; the cut relations are NODE-sized
+    (one label per node, then one per supernode), never edge-sized."""
+    labels = cut(
+        label_propagation_communities(spark, sf_dir).select(
+            F.col("part_key").alias("node"), F.col("community").alias("label")
+        )
     )
     und, pairs_o, deg_o, mm = _unit_graph(spark, sf_dir)
     sweep_a = _wl_sweep(pairs_o, deg_o, mm, labels)

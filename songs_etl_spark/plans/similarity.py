@@ -21,7 +21,7 @@ from songs_etl_spark.functions.vectors import (
     random_hyperplanes,
     rh_band_signature,
 )
-from songs_etl_spark.plans._util import spread, t
+from songs_etl_spark.plans._util import cut, iterate, spread, t
 from songs_etl_spark.plans.registry import register
 
 _DUCK_COS = (
@@ -2112,7 +2112,6 @@ def _graph_beam_topk(
     emb: DataFrame,
     edges: DataFrame,
     entry_beam: DataFrame | None = None,
-    entry_checkpointed: bool = False,
 ) -> DataFrame:
     """The search half of graph ANN, independent of how the index was
     built: H-hop beam search over an arbitrary ``(src, dst)`` edge relation
@@ -2127,9 +2126,8 @@ def _graph_beam_topk(
     is INDEX-INDEPENDENT (it scores only the per-cell entry nodes), so a
     contract that runs two searches over different edge lists can compute
     it once and pass it to both — the same shared ``beam0`` the DuckDB
-    oracle uses (:func:`_gb_prelude`). Pass ``entry_checkpointed=True``
-    when the caller already localCheckpoint-ed it, so hop 1 does not
-    re-checkpoint the same |queries|·B-row relation.
+    oracle uses (:func:`_gb_prelude`); pass it :func:`cut`, so the searches
+    share one materialized beam.
 
     Per-hop plan shape (guide §2.4/§3.1 — round-12 rework): the index is
     materialized ONCE as ``edges3`` = (src, node, c_emb, c_norm) with the
@@ -2166,19 +2164,11 @@ def _graph_beam_topk(
     )
     parts = default_parallelism()
     wb = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "node")
-    beam = entry_beam if entry_beam is not None else _gb_entry_beam(emb)
-    for hop in range(_GB_HOPS):
-        # The carried beam is referenced TWICE per hop (frontier expansion
-        # and the merge union): unpersisted, the hop-h subtree re-executes
-        # ~2^(H-h) times; persisted, the logical tree still grows per hop
-        # and the driver re-analyzes it (with the full index lineage
-        # inlined) at every broadcast — measured 186 s for the H=4 search
-        # over the NN-descent index at sf0.001 vs 8 s with the plan
-        # truncated. localCheckpoint (the BPE-trainer precedent) cuts the
-        # |queries|·B-row beam to a leaf; the search stays one declarative
-        # pipeline, no collects.
-        if hop > 0 or not entry_checkpointed:
-            beam = beam.localCheckpoint(eager=False)
+    beam = cut(entry_beam if entry_beam is not None else _gb_entry_beam(emb))
+
+    def hop(beam: DataFrame) -> DataFrame:
+        # The carried beam is read TWICE per hop (frontier expansion and
+        # the merge union), so each hop's |queries|·B-row beam is cut.
         scored = (
             F.broadcast(
                 beam.select(
@@ -2202,11 +2192,13 @@ def _graph_beam_topk(
         merged = (
             beam.unionByName(scored).repartition(parts, "query_id").distinct()
         )
-        beam = (
+        return (
             merged.withColumn("rn", F.row_number().over(wb))
             .filter(F.col("rn") <= _GB_BEAM)
             .drop("rn")
         )
+
+    beam, _ = iterate(beam, hop, _GB_HOPS)
     return (
         beam.withColumn("rank", F.row_number().over(wb))
         .filter(F.col("rank") <= _GB_K)
@@ -2652,18 +2644,13 @@ def nndescent_edges(
     nv = vp.select(
         F.col("vec_id").alias("nb"), F.col("v").alias("nv"), F.col("nrm").alias("nn")
     )
-    ranked = None
-    for _ in range(rounds):
-        # Each round references the carried graph THREE times (reverse-cap,
-        # symmetrized propose sides, candidate union): unpersisted, the
-        # round-r subtree (and the init's per-cell kernel plus the
-        # init_cells assignment behind it) re-executes ~3^r times, and even
-        # persisted, the LOGICAL tree keeps growing and the driver
-        # re-analyzes it at every downstream reference. localCheckpoint
-        # truncates the plan to a leaf (the BPE-trainer precedent,
-        # text.py:1034) — the relation is N·k rows. Measured on the m1
-        # stress corpus: 171 s -> ~30 s for the degree-8 build.
-        pairs = pairs.localCheckpoint(eager=False)
+
+    def descend(ranked: DataFrame) -> DataFrame:
+        # The carried N·k-row graph is read THREE times per round
+        # (reverse-cap, symmetrized propose sides, candidate union), so it
+        # is cut (measured on the m1 stress corpus: 171 s -> ~30 s for the
+        # degree-8 build).
+        pairs = ranked.select("q", "nb")
         wrev = Window.partitionBy("nb").orderBy("q")
         rev = (
             pairs.withColumn("rr", F.row_number().over(wrev))
@@ -2705,11 +2692,9 @@ def nndescent_edges(
             )
         )
         wq = Window.partitionBy("q").orderBy(F.col("cos_sim").desc(), "nb")
-        ranked = (
-            scored.withColumn("rank", F.row_number().over(wq))
-            .filter(F.col("rank") <= k)
-        )
-        pairs = ranked.select("q", "nb")
+        return scored.withColumn("rank", F.row_number().over(wq)).filter(F.col("rank") <= k)
+
+    ranked, _ = iterate(cut(pairs), descend, rounds)
     return ranked.select(
         F.col("q").alias("query_id"),
         F.col("nb").alias("neighbor_id"),
@@ -2915,10 +2900,8 @@ def _nnd_search_edges(
     nd = nndescent_edges(
         cands, k=_GB_ND_K, init_cells=init_cells, init_topk=init_topk
     ).select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-    # Both directions via ONE generated-column explode: a union of two
-    # selects over ``nd`` duplicates the final round's unpersisted
-    # score+rank subtree in the physical plan (the build's per-round
-    # checkpoints truncate everything BEFORE it, not the last stage).
+    # Both directions via ONE generated-column explode: one read of ``nd``
+    # instead of a union of two selects over it.
     return (
         nd.select(
             F.explode(
@@ -2966,9 +2949,9 @@ def ann_graph_beam_search_nnd(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     cands = spread(emb.filter(F.col("vec_id") >= 10), key="vec_id")
     # The index is a materialized artifact by definition (production
-    # writes this table at ingest): checkpoint it so the H hop joins and
-    # the driver's per-hop analysis see a leaf, not the build lineage.
-    edges = _nnd_search_edges(cands).localCheckpoint(eager=False)
+    # writes this table at ingest): cut it so the H hop joins and the
+    # driver's per-hop analysis see a leaf, not the build lineage.
+    edges = cut(_nnd_search_edges(cands))
     return _graph_beam_topk(emb, edges)
 
 
@@ -3076,17 +3059,17 @@ def graph_ann_nnd_recall_vs_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell_edges = cell8.filter(F.col("rank") <= _GB_K).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
     )
-    nd_edges = _nnd_search_edges(cands, init_topk=cell8).localCheckpoint(eager=False)
+    nd_edges = cut(_nnd_search_edges(cands, init_topk=cell8))
     # ONE entry beam for both searches: it is index-independent (it scores
     # only the per-cell entry nodes), exactly the oracle's shared beam0 —
-    # checkpointed so the second search reads |queries|·B rows instead of
+    # cut so the second search reads |queries|·B rows instead of
     # re-running the entry scoring.
-    eb = _gb_entry_beam(emb).localCheckpoint(eager=False)
+    eb = cut(_gb_entry_beam(emb))
     gc = _graph_beam_topk(
-        emb, cell_edges, entry_beam=eb, entry_checkpointed=True
+        emb, cell_edges, entry_beam=eb
     ).select("query_id", "neighbor_id")
     gn = _graph_beam_topk(
-        emb, nd_edges, entry_beam=eb, entry_checkpointed=True
+        emb, nd_edges, entry_beam=eb
     ).select("query_id", "neighbor_id")
     ex = _exact_topk(spark, sf_dir, _GB_K)
     return _recall_tail(

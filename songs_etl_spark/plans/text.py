@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from songs_etl_spark.functions.text import has_min_tokens, has_token, tokens, word_shingles
-from songs_etl_spark.plans._util import spread, t, track_persist
+from songs_etl_spark.plans._util import cut, iterate, spread, t, track_persist
 from songs_etl_spark.plans.registry import register
 
 #: Tiny per-language stopword inventories for the n-gram/stopword langid
@@ -1128,16 +1128,10 @@ def _train_merges(
     count criterion only, as does the delta fold below, so a score-ranked
     trainer (WordPiece) runs at k=1 without ``incremental``.
 
-    The per-round words relation is materialized with ``localCheckpoint``,
-    not persist: persist keeps the full logical lineage, so round r's plan
-    chains r projections and Catalyst re-analyzes the whole tree on every
-    action — measured on a 20k-word vocabulary, per-round wall time grows
-    from ~1 s to 40+ s by round 16 and the trainer can never reach
-    production round counts (30k merges). Checkpointing truncates the plan
-    to a leaf, making per-round cost CONSTANT in r (tools/bpe_stress.py
-    measures the R=512 curve). ``eager=False`` lets the checkpoint
-    materialize inside the next round's argmax job (or the caller's first
-    action), so each round is one Spark job instead of two.
+    The rounds run under :func:`iterate`, so the per-round words relation
+    is cut and per-round cost stays CONSTANT in r (tools/bpe_stress.py
+    measures the R=512 curve); the cut fills inside the next round's
+    argmax job (or the caller's first action).
 
     ``incremental`` selects the pair-count strategy; BOTH are exact and
     produce identical merge tables (asserted head-to-head in
@@ -1150,8 +1144,8 @@ def _train_merges(
     - ``True``: delta maintenance — filter words to those CONTAINING a
       just-merged pair (literal ``contains``), recount only those before/
       after the merges, fold (negated-old + new) deltas into a
-      checkpointed count state. Saves the unaffected-word explode but
-      pays a pair-vocabulary-sized state fold + checkpoint per round and
+      cut count state. Saves the unaffected-word explode but
+      pays a pair-vocabulary-sized state fold + cut per round and
       one extra driver barrier. Measured at R=512 on a 94k-word Zipf
       vocabulary (BASELINE.md round 8): 151.9 s vs 100.6 s for the
       recount — SLOWER, because per-round wall is dominated by fixed
@@ -1166,16 +1160,19 @@ def _train_merges(
     assert rank == "cnt" or (k == 1 and not incremental), (
         "batching and delta counts are exact for the count criterion only"
     )
-    words = base
-    counts = candidates(base).localCheckpoint(eager=False) if incremental else None
     out_rows: list = []
     n_barriers = 0
-    while len(out_rows) < rounds:
+
+    def merge_round(state: tuple[DataFrame, DataFrame | None]):
+        nonlocal n_barriers
+        words, counts = state
+        if len(out_rows) >= rounds:
+            return None
         ranked = (counts if incremental else candidates(words)).orderBy(F.desc(rank), "a", "b")
         cands = ranked.limit(k + 1).collect()
         n_barriers += 1
         if not cands:  # vocabulary fully merged (degenerate tiny corpora)
-            break
+            return None
         batch = _conflict_free_batch(cands, k)[: rounds - len(out_rows)]
         col = F.col("p")
         for row in batch:
@@ -1192,11 +1189,13 @@ def _train_merges(
                 .groupBy("a", "b")
                 .agg(F.sum("cnt").alias("cnt"))
                 .filter(F.col("cnt") != 0)
-                .localCheckpoint(eager=False)
             )
-        words = words.select("word", "freq", col.alias("p")).localCheckpoint(eager=False)
         if on_round is not None:
             on_round(n_barriers, len(out_rows))
+        return words.select("word", "freq", col.alias("p")), counts
+
+    counts = cut(candidates(base)) if incremental else None
+    (words, _), _ = iterate((base, counts), merge_round, rounds)
     return out_rows, words, n_barriers
 
 
@@ -1324,7 +1323,7 @@ def _wordpiece_scores(words: DataFrame) -> DataFrame:
     """WordPiece candidate relation: (a, b, cnt, ca, cb, score) with score =
     cnt / (ca · cb). ONE vocabulary-sized explode + aggregation tallies
     adjacent pairs and symbol occurrences together (a pair row is (a, b), a
-    symbol row is (a, NULL) — disjoint key spaces, one shuffle), checkpointed
+    symbol row is (a, NULL) — disjoint key spaces, one shuffle), cut
     so the score join's two broadcast reads of the symbol slice do not each
     re-run the explode. Counts are exact integer sums; the score is one
     correctly-rounded division."""
@@ -1333,11 +1332,11 @@ def _wordpiece_scores(words: DataFrame) -> DataFrame:
     singles = F.transform(
         syms, lambda s: F.struct(s.alias("a"), F.lit(None).cast("string").alias("b"))
     )
-    tallies = (
+    tallies = cut(
         words.select("freq", F.explode(F.concat(pairs, singles)).alias("pr"))
         .groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
         .agg(F.sum("freq").alias("cnt"))
-    ).localCheckpoint(eager=False)
+    )
     sc = tallies.filter(F.col("b").isNull())
     score = F.col("cnt").cast("double") / (F.col("ca") * F.col("cb")).cast("double")
     return (

@@ -1,6 +1,7 @@
-"""One persist memo: every relation a registry query persists is released by
-``clear_tracked_persists()`` alone — the near-dup shingle relation and the
-persists of the five queries that used to call ``persist()`` untracked."""
+"""One persist memo: every relation a registry query persists or cuts is
+released by ``clear_tracked_persists()`` alone — the near-dup shingle
+relation, the persists of the five queries that used to call ``persist()``
+untracked, and the local checkpoints of four iterative queries."""
 
 from __future__ import annotations
 
@@ -17,6 +18,10 @@ QUERIES = (
     "dedup_simhash_hamming",
     "misra_gries_heavy_tokens",
     "important_part_stock",
+    "part_hierarchy_rollup",
+    "ktruss_edge_peel",
+    "hits_hubs_authorities",
+    "dedup_connected_components",
 )
 
 

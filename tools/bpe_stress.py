@@ -78,6 +78,7 @@ def main() -> int:
     args = ap.parse_args()
     ks = [int(k) for k in args.ks.split(",")]
 
+    from songs_etl_spark.plans._util import clear_tracked_persists
     from songs_etl_spark.plans.text import _train_merges, bpe_encode_base
     from songs_etl_spark.session import get_spark
 
@@ -92,6 +93,7 @@ def main() -> int:
         t0 = now()
         seq_rows, _, seq_barriers = _train_merges(base, args.rounds)
         secs = round(now() - t0, 2)
+        clear_tracked_persists()  # every round's cut words relation
         results["sequential"] = {
             "secs": secs,
             "barriers": seq_barriers,
@@ -117,6 +119,7 @@ def main() -> int:
                 base, args.rounds, k=k, on_round=on_round, incremental=incremental
             )
             secs = round(now() - t0, 2)
+            clear_tracked_persists()
             # Per-round wall curve: quartile means show whether round cost
             # DROPS with merge rank (the delta-maintenance claim: affected-
             # word mass shrinks down the Zipf tail) or stays overhead-bound.

@@ -101,10 +101,16 @@ def compare(name: str, spark, con, sf_dir: str) -> dict:
         out.update(ok=True, mode="rows-only", n=len(sdf))
         return out
     try:
-        ddf = con.execute(spec.oracle).fetchdf()
+        res = con.execute(spec.oracle)
+        ddf = res.fetchdf()
     except Exception:
         out["error"] = "duckdb: " + traceback.format_exc(limit=3)
         return out
+    # DuckDB's pandas bridge turns a NULL BOOLEAN into NaN, Spark's into
+    # None: only in a BOOLEAN column does NaN mean NULL.
+    for col, type_code, *_ in res.description:
+        if type_code == "bool":
+            ddf[col] = [None if isinstance(v, float) and math.isnan(v) else v for v in ddf[col]]
     s_cols, s_rows = frame_to_rows(sdf)
     d_cols, d_rows = frame_to_rows(ddf)
     out.update(n_spark=len(s_rows), n_duck=len(d_rows))

@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from songs_etl_spark.plans._util import t
+from songs_etl_spark.plans._util import cut, t
 
 QUERIES = (
     "dedup_exact",
@@ -161,7 +161,7 @@ def graph_beam_nnd_scaled(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     cands = emb.filter(F.col("vec_id") >= 10)
-    edges = _nnd_search_edges(cands, init_cells=_scaled_cells(cands)).localCheckpoint(eager=False)
+    edges = cut(_nnd_search_edges(cands, init_cells=_scaled_cells(cands)))
     return _graph_beam_topk(emb, edges)
 
 
