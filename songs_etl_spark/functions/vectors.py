@@ -26,6 +26,14 @@ def dot(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
 
 
+def sq_l2(a: Column | str, b: Column | str) -> Column:
+    """Σ (aᵢ−bᵢ)² accumulated left-to-right in double precision — the
+    squared-distance fold the oracles write as ``list_reduce(list_transform(
+    list_zip(a, b), p -> (p[1] - p[2]) * (p[1] - p[2])), (acc, x) -> acc + x)``."""
+    sq = F.zip_with(_as_double_array(a), _as_double_array(b), lambda x, y: (x - y) * (x - y))
+    return F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
+
+
 def l2_norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 

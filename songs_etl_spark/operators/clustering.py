@@ -1,36 +1,32 @@
-"""Distributed Lloyd's k-means over an embedding column — the clustering
-primitive behind IVF index builds (plans/similarity.py ann_ivf_probe is a
-coarse quantizer of this shape) and corpus organization (topic bucketing,
-stratified eval splits).
+"""Lloyd's k-means over an embedding column, the one owner of Lloyd's
+algorithm: flat k-means (``kmeans_assign``), spherical k-means
+(``cosine=True``: label by argmax of dot(v, μ_c)/||μ_c||), the PQ codebooks of plans/pq.py (``subspaces=M``) and the
+coarse level of the two-level IVF path all train with ``train_centroids``
+and label with ``assign_arrow`` — IVF index builds, corpus organization.
 
-Spark-first design — per iteration:
+Spark-first design — per round (``_lloyd_round``):
 
-1. **Assign**: one Arrow map pass (``assign_arrow``): the k×d centroid
-   matrix (model state, the same k rows a broadcast join would ship) rides
-   the task closure; each batch computes the fold-order distance matrix in
-   numpy and takes the (dist, cluster)-lexicographic argmin. No shuffle,
-   no join, and ~100× the throughput of the interpreted-evaluator
-   ``zip_with``/``aggregate`` fold it replaces — with bit-identical
-   results (``_fold_d2`` reproduces the fold's IEEE op sequence exactly).
-2. **Update**: ``posexplode`` assigned vectors to (cluster, dim, value)
-   triples and take per-(cluster, dim) means in one shuffle keyed by
-   (cluster, dim) — k×d result rows, collected to the driver as the next
-   round's model (the standard Lloyd-on-Spark shape: model on the driver,
-   data distributed; the k×d round-trip is bit-preserving IEEE doubles).
+1. **Stats pass**: one Arrow map pass; the model (the k centroids per
+   subspace, the rows a broadcast join would ship) rides the task closure,
+   each batch labels every subspace with ``_nearest`` and emits its
+   ``(sub, cluster, dim, Σv, n)`` partials — at most k·d rows. No shuffle
+   of the corpus, no join.
+2. **Update**: one small (sub, cluster, dim)-keyed aggregation of the
+   partials, collected to the driver as the next round's model (model on
+   the driver, data distributed); each component is one IEEE division Σv/n.
 
-Driver-side state is model-sized (k×d), never data-sized; the per-vector
-stages are map-side and scale with the vector count.
+The final labelling is one more Arrow map pass with the same kernel.
 
 Reproducibility design (what makes a distributed iterative float algorithm a
 pure function of its input): components are quantized to integer MICRO-UNITS
 (``floor(x · 10⁶)``) up front. Integers of this size are exactly
 representable in doubles, so every partial sum in the centroid means is
-exact and therefore independent of partition order — the one place float
-addition order could leak in. Distances fold in array order (deterministic
-IEEE sequence), seeds are the k smallest vector ids, and the iteration count
-is fixed, so results are bit-identical across runs, partitionings, and
-engines. (A fixed 1e-6 input quantization is far below any embedding's
-meaningful precision.)
+exact and therefore independent of partition order and batch boundaries —
+the one place float addition order could leak in. Distances fold in array
+order (deterministic IEEE sequence, ``_fold_d2``), seeds are the k smallest
+vector ids, and the iteration count is fixed, so results are bit-identical
+across runs, partitionings, and engines. (A fixed 1e-6 input quantization
+is far below any embedding's meaningful precision.)
 """
 
 from __future__ import annotations
@@ -46,13 +42,14 @@ def quantize_micro(vec_col: str) -> F.Column:
     return F.transform(vec_col, lambda x: F.floor(x.cast("double") * 1e6).cast("double"))
 
 
-def _fold_d2(pts, cents):
+def _fold_d2(pts, cents, dot: bool = False):
     """(n, k) squared-L2 matrix accumulated dimension-by-dimension: each
     element's op sequence is ``acc + (p_j − c_j)²`` left-to-right — the
     exact IEEE chain of the SQL ``list_reduce`` fold and Spark's
     ``F.aggregate``, so distances computed here are bit-identical to the
     unrolled oracles. (A BLAS matmul or ``.sum(axis)`` pairwise reduction
-    would diverge by ulps and could flip near-tie argmins.)"""
+    would diverge by ulps and could flip near-tie argmins.) ``dot=True``
+    folds ``acc + p_j·c_j`` instead: the dot-product chain."""
     import numpy as np
 
     d2 = np.zeros((pts.shape[0], cents.shape[0]))
@@ -60,60 +57,90 @@ def _fold_d2(pts, cents):
     for j in range(pts.shape[1]):
         # preallocated out= buffers: same IEEE ops per element, no per-dim
         # allocation churn (the matrix is touched d times)
-        np.subtract(pts[:, j, None], cents[None, :, j], out=tmp)
-        np.multiply(tmp, tmp, out=tmp)
+        if dot:
+            np.multiply(pts[:, j, None], cents[None, :, j], out=tmp)
+        else:
+            np.subtract(pts[:, j, None], cents[None, :, j], out=tmp)
+            np.multiply(tmp, tmp, out=tmp)
         np.add(d2, tmp, out=d2)
     return d2
 
 
+def _nearest(pts, cents, cosine: bool = False):
+    """The labelling kernel of every Lloyd pass: per row of ``pts``, the
+    index of its centroid row in ``cents`` and the score there. Euclidean:
+    the first argmin of the fold-order squared L2. Cosine: the first argmax
+    of the fold-order dot over the centroid's fold-order norm (a vector's
+    own norm is constant per row and cannot change its argmax). Over
+    centroids in ascending cluster id, the first index IS the oracles'
+    (score, cluster) struct-min tie rule."""
+    import numpy as np
+
+    if cosine:
+        norm = np.sqrt(_fold_d2(cents, np.zeros((1, cents.shape[1])))[:, 0])
+        score = _fold_d2(pts, cents, dot=True) / norm[None, :]
+        lab = score.argmax(axis=1)
+    else:
+        score = _fold_d2(pts, cents)
+        lab = score.argmin(axis=1)
+    return lab, score[np.arange(len(lab)), lab]
+
+
+def _models(books: list[list[tuple[int, list[float]]]]) -> list:
+    """Per codebook, (cluster ids, centroid matrix) as numpy arrays — the
+    form the model rides the task closure in."""
+    import numpy as np
+
+    return [
+        (np.array([c for c, _ in b], dtype=np.int64), np.array([v for _, v in b], dtype=np.float64))
+        for b in books
+    ]
+
+
+def _points(batch: "pd.DataFrame"):
+    """An Arrow batch's ``emb`` column as an (n, d) float64 matrix."""
+    import numpy as np
+
+    return np.array([np.asarray(e, dtype=np.float64) for e in batch["emb"]])
+
+
 def assign_arrow(
     vecs: DataFrame,
-    cent_pairs: list[tuple[int, list[float]]],
-    id_col: str,
-    keep_emb: bool = False,
+    books: list[list[tuple[int, list[float]]]],
+    id_col: str = "vec_id",
+    cosine: bool = False,
 ) -> DataFrame:
-    """Nearest-centroid assignment as ONE Arrow map pass: the k×d centroid
-    matrix ships in the task closure (model state, bounded by k — the same
-    budget a broadcast join of the centroid relation would need); each
-    batch computes the fold-order distance matrix in numpy and takes the
-    (dist, cluster)-lexicographic argmin. Replaces the crossJoin +
-    interpreted-HOF fold (zip_with/aggregate run on Spark's interpreted
-    evaluator — measured ~100× slower per row than the Arrow batch) with
-    bit-identical results: ``_fold_d2`` reproduces the fold's IEEE op
-    sequence, and numpy's first-minimum argmin over ascending cluster ids
-    IS the struct-min tie-break. Map-side only: no shuffle, no join.
-
-    ``keep_emb=True`` passes the input vector through to the output so a
-    consumer that needs (cluster, emb) — the Lloyd update — reads it off
-    this same pass instead of joining the assignment back to ``vecs`` by
-    id (two exchanges per training round, provably 1:1)."""
-    import numpy as np
+    """Label every vector of an (id_col, emb) relation in ONE Arrow map
+    pass: the codebooks ride the task closure; each batch splits its
+    vectors into ``len(books)`` equal-width subspaces and labels each with
+    ``_nearest``. Map-side only: no shuffle, no join. One codebook gives
+    (id_col, cluster, dist), or (id_col, cluster, sim) with ``cosine``:
+    the chosen centroid and its score. M codebooks (PQ) give (id_col,
+    code_0, …, code_{M-1})."""
     import pandas as pd
 
-    ids = [int(c) for c, _ in cent_pairs]
-    cmat = np.array([v for _, v in cent_pairs], dtype=np.float64)
-    id_arr = np.array(ids, dtype=np.int64)
+    models = _models(books)
+    single = len(models) == 1
+    score = "sim" if cosine else "dist"
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for batch in batches:
             if not len(batch):
                 continue
-            pts = np.array([np.asarray(e, dtype=np.float64) for e in batch["emb"]])
-            d2 = _fold_d2(pts, cmat)
-            lab = d2.argmin(axis=1)
-            out = {
-                id_col: batch[id_col].astype("int64"),
-                "cluster": id_arr[lab].astype("int32"),
-                "dist": d2[np.arange(len(lab)), lab],
-            }
-            if keep_emb:
-                out["emb"] = batch["emb"]
+            pts = _points(batch)
+            w = pts.shape[1] // len(models)
+            out = {id_col: batch[id_col].astype("int64")}
+            for j, (ids, cents) in enumerate(models):
+                lab, val = _nearest(pts[:, j * w : (j + 1) * w], cents, cosine)
+                out["cluster" if single else f"code_{j}"] = ids[lab].astype("int32")
+            if single:
+                out[score] = val
             yield pd.DataFrame(out)
 
-    schema = f"{id_col} long, cluster int, dist double"
-    if keep_emb:
-        schema += ", emb array<double>"
-    return vecs.select(id_col, "emb").mapInPandas(run, schema)
+    cols = [f"code_{j} int" for j in range(len(books))]
+    if single:
+        cols = ["cluster int", f"{score} double"]
+    return vecs.select(id_col, "emb").mapInPandas(run, ", ".join([f"{id_col} long", *cols]))
 
 
 def kmeans_assign(
@@ -128,24 +155,65 @@ def kmeans_assign(
     vectors with the smallest ids) and return (id_col, cluster, dist): each
     vector's final cluster and squared-L2 distance (micro-units²) to its
     centroid. Clusters that lose all members simply drop out (k shrinks) —
-    same behavior on any engine.
-
-    Per round: one Arrow map pass for assignment (``assign_arrow`` — the
-    k-row centroid model rides the closure; the N-row relation never
-    shuffles for assignment) plus one (cluster, dim)-keyed aggregation for
-    the update, whose k×d result is COLLECTED to the driver — the standard
-    Lloyd-on-Spark shape: model state (k×d doubles, tiny and k-bounded)
-    lives on the driver between rounds, data stays distributed. The
-    driver round-trip is bit-preserving (IEEE doubles), so results remain
-    identical to the fully-relational formulation the DuckDB oracle
-    unrolls."""
+    same behavior on any engine. The driver round-trip of the model is
+    bit-preserving (IEEE doubles), so results remain identical to the
+    fully-relational formulation the DuckDB oracle unrolls."""
     from songs_etl_spark.plans._util import track_persist
 
     vecs = track_persist(vectors.select(id_col, quantize_micro(vec_col).alias("emb")))
-    cent_pairs = train_centroids(
-        vecs, k=k, n_iter=n_iter, id_col=id_col, seed_ids=seed_ids
+    return assign_arrow(vecs, train_centroids(vecs, k, n_iter, id_col, seed_ids), id_col)
+
+
+def _lloyd_round(
+    vecs: DataFrame, books: list[list[tuple[int, list[float]]]], cosine: bool = False
+) -> list[list[tuple[int, list[float]]]]:
+    """One Lloyd round for every subspace at once: ONE Arrow stats pass over
+    the (…, emb) relation labels each subspace with ``_nearest`` and emits
+    per-batch (sub, cluster, dim, Σv, n) partials, then one small
+    aggregation and a model-sized collect give each surviving cluster's
+    mean Σv/n. Every training input is integer-valued doubles (micro-units,
+    their differences, or the ×25 integer OPQ rotation), so the partial
+    sums are exact in any order below 2^53 and the mean is the one IEEE
+    division the oracles write as ``SUM(v) / COUNT(*)``. Clusters that lose
+    all members drop out; survivors keep their ids."""
+    import numpy as np
+    import pandas as pd
+
+    models = _models(books)
+
+    def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for batch in batches:
+            if not len(batch):
+                continue
+            pts = _points(batch)
+            w = pts.shape[1] // len(models)
+            for j, (ids, cents) in enumerate(models):
+                sub = pts[:, j * w : (j + 1) * w]
+                lab, _ = _nearest(sub, cents, cosine)
+                n = np.bincount(lab, minlength=len(ids))
+                s = np.zeros((len(ids), w))
+                np.add.at(s, lab, sub)
+                live = np.flatnonzero(n)
+                yield pd.DataFrame({
+                    "sub": j, "cluster": np.repeat(ids[live], w),
+                    "dim": np.tile(np.arange(w), len(live)),
+                    "s": s[live].ravel(), "n": np.repeat(n[live], w),
+                })
+
+    rows = (
+        vecs.select("emb")
+        .mapInPandas(stats, "sub int, cluster int, dim int, s double, n long")
+        .groupBy("sub", "cluster", "dim")
+        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+        .collect()
     )
-    return assign_arrow(vecs, cent_pairs, id_col)
+    means: dict[tuple[int, int], dict[int, float]] = {}
+    for r in rows:
+        means.setdefault((r["sub"], r["cluster"]), {})[r["dim"]] = r["s"] / r["n"]
+    return [
+        [(c, [dims[d] for d in sorted(dims)]) for (sj, c), dims in sorted(means.items()) if sj == j]
+        for j in range(len(books))
+    ]
 
 
 def train_centroids(
@@ -154,23 +222,24 @@ def train_centroids(
     n_iter: int,
     id_col: str = "vec_id",
     seed_ids: list[int] | None = None,
-) -> list[tuple[int, list[float]]]:
-    """The Lloyd trainer of :func:`kmeans_assign`, factored out so other
-    quantizers (e.g. per-subspace PQ codebooks, plans/pq.py) can learn a
-    codebook over any pre-quantized (id, emb) relation and keep the model.
-    Same reproducibility contract: seeds = k smallest ids, Arrow fold-order
-    assignment, exact integer-sum means collected driver-side (k×d model
-    rows per round — never data-sized). Returns the final [(cluster_id,
-    centroid), ...]; clusters that lose all members drop out (ids keep
-    their seed numbering, no renumbering — matching the unrolled SQL
-    oracles)."""
+    subspaces: int = 1,
+    cosine: bool = False,
+) -> list[list[tuple[int, list[float]]]]:
+    """The Lloyd trainer over any pre-quantized (id_col, emb) relation:
+    one codebook per subspace — ``subspaces`` equal-width slices of the
+    vector (1 for k-means, M for PQ), all trained together by ``n_iter``
+    rounds of ``_lloyd_round``. Seeds are the k smallest ids, or the
+    caller's ``seed_ids`` in list order (e.g.
+    plans/clustering.kmeans_scalable_seeding — the k-means‖ pass; seed
+    order defines cluster numbering). Returns per subspace the final
+    [(cluster_id, centroid), ...]; clusters that lose all members drop out
+    (ids keep their seed numbering, no renumbering — matching the unrolled
+    SQL oracles). Model size subspaces·k·width doubles on the driver —
+    bounded by geometry, never by data; an empty relation gives empty
+    codebooks."""
     if seed_ids is None:
-        seeds = vecs.orderBy(id_col).limit(k).select("emb").collect()
-        cent_pairs = [(i + 1, list(r["emb"])) for i, r in enumerate(seeds)]
+        seeds = [list(r["emb"]) for r in vecs.orderBy(id_col).limit(k).select("emb").collect()]
     else:
-        # Caller-supplied seeds (e.g. plans/clustering.kmeans_scalable_seeding
-        # — the k-means‖ pass): seed ORDER defines cluster numbering, so
-        # preserve the list order, not id order.
         picked = {
             r[id_col]: list(r["emb"])
             for r in vecs.filter(F.col(id_col).isin(list(seed_ids))).collect()
@@ -178,26 +247,14 @@ def train_centroids(
         missing = [s for s in seed_ids if s not in picked]
         if missing:
             raise ValueError(f"train_centroids: seed ids absent from input: {missing}")
-        cent_pairs = [(i + 1, picked[s]) for i, s in enumerate(seed_ids)]
+        seeds = [picked[s] for s in seed_ids]
+    w = len(seeds[0]) // subspaces if seeds else 0
+    books = [
+        [(i + 1, s[j * w : (j + 1) * w]) for i, s in enumerate(seeds)] for j in range(subspaces)
+    ]
     for _ in range(n_iter):
-        # keep_emb threads the vector through the assignment pass; the old
-        # assigned ⋈ vecs re-join (1:1 on id) cost two exchanges per round.
-        assigned = assign_arrow(vecs, cent_pairs, id_col, keep_emb=True)
-        components = (
-            assigned
-            .select("cluster", F.posexplode("emb").alias("dim", "v"))
-            .groupBy("cluster", "dim")
-            # exact: integer-valued doubles sum without rounding, so the
-            # mean is partition-order-independent
-            .agg((F.sum("v") / F.count("*")).alias("m"))
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for row in components.collect():
-            by_cluster.setdefault(row["cluster"], {})[row["dim"]] = row["m"]
-        cent_pairs = [
-            (c, [dims[d] for d in sorted(dims)]) for c, dims in sorted(by_cluster.items())
-        ]
-    return cent_pairs
+        books = _lloyd_round(vecs, books, cosine)
+    return books
 
 
 def _lloyd_numpy(pts, k: int, n_iter: int):
@@ -218,7 +275,7 @@ def _lloyd_numpy(pts, k: int, n_iter: int):
 
     cents = pts[:k].copy()
     for _ in range(n_iter):
-        lab = _fold_d2(pts, cents).argmin(axis=1)  # first-min == struct-min (d, sub)
+        lab = _nearest(pts, cents)[0]  # first-min == struct-min (d, sub)
         new = []
         for c in range(cents.shape[0]):
             members = pts[lab == c]
@@ -248,9 +305,10 @@ def kmeans_assign_twolevel(
     1. **Sample** ~``sample_mult·k`` training points by deterministic hash
        coin on the id (md5 low-32-bits mod denom — reproducible, no RNG,
        the cross-engine discipline of plans/sampling.py).
-    2. **Coarse train**: flat Lloyd (``kmeans_assign``) with k_c = ceil(√k)
+    2. **Coarse train**: flat Lloyd (``train_centroids``) with k_c = ceil(√k)
        centroids ON THE SAMPLE ONLY — cost |S|·√k, independent of N's
-       quadratic term.
+       quadratic term; the cell centroids are the means of the sample's
+       final coarse assignment (one more ``_lloyd_round``).
     3. **Fine train**: group the sample by coarse cell; per cell, a numpy
        Lloyd (Arrow ``applyInPandas``, rows sorted by id, seeds = lowest
        ids) produces ~k/k_c sub-centroids — per-cell cost |cell|·k_f with
@@ -298,64 +356,35 @@ def kmeans_assign_twolevel(
         % F.lit(denom)
         == 0
     )
-    sample = vecs.filter(coin)
+    sample = track_persist(vecs.filter(coin))
 
-    # Coarse training sees the RAW vectors: kmeans_assign quantizes
-    # internally, and feeding it the already-quantized relation would
-    # re-scale components to ~1e12, collapsing the exact-integer-sum
-    # headroom its determinism contract relies on.
-    sample_raw = vectors.filter(coin).select(
-        F.col(id_col), F.col(vec_col).alias("e")
-    )
-    coarse = (
-        kmeans_assign(sample_raw, id_col=id_col, vec_col="e", k=k_c, n_iter=n_iter)
+    # Coarse level: flat Lloyd on the sample; the cells are the sample's
+    # final assignment, and the cell centroids their per-cell means — one
+    # more Lloyd round over the trained codebook.
+    (coarse_book,) = train_centroids(sample, k_c, n_iter, id_col)
+    # Persisted: a second two-level run over the same corpus in the session
+    # (semantic_dedup_twolevel after kmeans_twolevel_assign) reuses it.
+    coarse = track_persist(
+        assign_arrow(sample, [coarse_book], id_col)
         .select(id_col, F.col("cluster").alias("cell"))
         .join(sample, id_col)
     )
-    # Persisted: coarse feeds BOTH coarse_cents and the Arrow fine-training
-    # branch — unpersisted, the whole sample+coarse-Lloyd DAG re-executes
-    # per branch (the multi-branch recompute class semdedup also hit).
-    coarse = track_persist(coarse)
-    # Re-derive the trained coarse centroids as per-cell means of the sample
-    # members (identical to the last Lloyd update the training run produced).
-    coarse_cents = (
-        coarse.select("cell", F.posexplode("emb").alias("dim", "v"))
-        .groupBy("cell", "dim")
-        .agg((F.sum("v") / F.count("*")).alias("m"))
-        .select("cell", F.struct("dim", "m").alias("dm"))
-        .groupBy("cell")
-        .agg(F.transform(F.array_sort(F.collect_list("dm")), lambda x: x["m"]).alias("centroid"))
-    )
-    coarse_cents = track_persist(coarse_cents)
+    (cell_book,) = _lloyd_round(sample, [coarse_book])
 
     fine_schema = "cell int, sub int, centroid array<double>"
 
     def train_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
         cell = int(pdf["cell"].iloc[0])
-        pdf = pdf.sort_values("__id")
-        pts = np.array([np.asarray(e, dtype=np.float64) for e in pdf["emb"]])
+        pts = _points(pdf.sort_values("__id"))
         cents = _lloyd_numpy(pts, min(k_f, len(pts)), n_iter)
         return pd.DataFrame(
             {"cell": cell, "sub": range(len(cents)), "centroid": [list(c) for c in cents]}
         )
 
-    # Persisted: fine_cents appears on both sides of the fallback union
-    # below — unpersisted, the per-cell Arrow Lloyd would execute twice.
-    fine_cents = track_persist(
+    fine_cents = (
         coarse.select(F.col("cell"), F.col(id_col).alias("__id"), "emb")
         .groupBy("cell")
         .applyInPandas(train_cell, schema=fine_schema)
-    )
-    # Fallback rows ONLY for cells with no fine centroids (anti-join).
-    # Every assignable cell comes from coarse_cents, and every trained
-    # coarse cell has ≥1 sample member, so this is normally empty — it is
-    # a guard, and it must not compete with the fine centroids in covered
-    # cells (an unconditional union would let the cell mean beat them and
-    # silently deviate from the IVF fine assignment).
-    fine_all = fine_cents.unionByName(
-        coarse_cents.join(
-            fine_cents.select("cell").distinct(), "cell", "left_anti"
-        ).select("cell", F.lit(k_f).alias("sub"), "centroid")
     )
 
     # Both assignment stages in ONE Arrow map pass over the N-row relation:
@@ -365,18 +394,20 @@ def kmeans_assign_twolevel(
     # cell-group takes its fold-order (d, sub) argmin over that cell's
     # sub-centroids only. No join, no shuffle, bit-identical to the
     # relational formulation the DuckDB oracle unrolls (_fold_d2 docstring).
-    coarse_rows = sorted(
-        ((int(r["cell"]), list(r["centroid"])) for r in coarse_cents.collect())
-    )
-    cell_ids = np.array([c for c, _ in coarse_rows], dtype=np.int64)
-    cmat = np.array([v for _, v in coarse_rows], dtype=np.float64)
+    ((cell_ids, cmat),) = _models([cell_book])
     fine_by_cell: dict[int, tuple] = {}
-    for r in sorted(
-        ((int(r["cell"]), int(r["sub"]), list(r["centroid"])) for r in fine_all.collect())
+    for cell, sub, cent in sorted(
+        (int(r["cell"]), int(r["sub"]), list(r["centroid"])) for r in fine_cents.collect()
     ):
-        subs, cents = fine_by_cell.setdefault(r[0], ([], []))
-        subs.append(r[1])
-        cents.append(r[2])
+        subs, cents = fine_by_cell.setdefault(cell, ([], []))
+        subs.append(sub)
+        cents.append(cent)
+    # Fallback ONLY for cells with no fine centroids: every trained coarse
+    # cell has ≥1 sample member, so this is normally a no-op guard, and it
+    # must not compete with the fine centroids in covered cells (the cell
+    # mean would beat them and silently deviate from the IVF assignment).
+    for cell, cent in cell_book:
+        fine_by_cell.setdefault(cell, ([k_f], [cent]))
     fine_np = {
         cell: (np.array(subs, dtype=np.int64), np.array(cents, dtype=np.float64))
         for cell, (subs, cents) in fine_by_cell.items()
@@ -386,18 +417,16 @@ def kmeans_assign_twolevel(
         for batch in batches:
             if not len(batch):
                 continue
-            pts = np.array([np.asarray(e, dtype=np.float64) for e in batch["emb"]])
+            pts = _points(batch)
             ids = batch[id_col].astype("int64").to_numpy()
-            cells = cell_ids[_fold_d2(pts, cmat).argmin(axis=1)]
+            cells = cell_ids[_nearest(pts, cmat)[0]]
             out_cluster = np.empty(len(ids), dtype=np.int64)
             out_dist = np.empty(len(ids), dtype=np.float64)
             for cell in np.unique(cells):
                 mask = cells == cell
                 subs, fmat = fine_np[int(cell)]
-                d2 = _fold_d2(pts[mask], fmat)
-                pick = d2.argmin(axis=1)  # first-min == struct-min (d, sub)
+                pick, out_dist[mask] = _nearest(pts[mask], fmat)
                 out_cluster[mask] = int(cell) * (k_f + 1) + subs[pick]
-                out_dist[mask] = d2[np.arange(len(pick)), pick]
             yield pd.DataFrame(
                 {id_col: ids, "cluster": out_cluster.astype("int32"), "dist": out_dist}
             )

@@ -196,10 +196,17 @@ def clear_tracked_persists() -> None:
     for bucket in _TRACKED_PERSISTS.values():
         for df in bucket:
             try:
-                df.unpersist()
-                plan = df._jdf.queryExecution().analyzed()
-                if plan.getClass().getSimpleName() == "LogicalRDD":
-                    plan.rdd().unpersist(False)
+                release(df)
             except Exception:
                 pass  # session may already be gone
     _TRACKED_PERSISTS.clear()
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist ``df`` and, when it is a local checkpoint, the checkpoint
+    RDD behind its ``LogicalRDD`` leaf (``DataFrame.unpersist`` alone leaves
+    those blocks until the ContextCleaner sees the RDD collected)."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

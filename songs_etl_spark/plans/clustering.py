@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from songs_etl_spark.functions.vectors import sq_l2
 from songs_etl_spark.operators.clustering import kmeans_assign, kmeans_assign_twolevel
 from songs_etl_spark.plans._util import t
 from songs_etl_spark.plans.registry import register
@@ -354,7 +355,8 @@ def embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flat.join(F.broadcast(stats), "dim").select(
         "vec_id",
         F.col("dim").cast("int").alias("dim"),
-        ((F.col("q") - F.col("mu")) / F.col("sigma")).alias("z"),
+        # σ = 0 (one row, or a constant dim): NULL, as DuckDB's division
+        F.try_divide(F.col("q") - F.col("mu"), F.col("sigma")).alias("z"),
     )
 
 
@@ -438,13 +440,8 @@ def embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>"),
         lambda x: F.floor(x * 1e6).cast("double"),
     )
-    d2 = F.aggregate(
-        F.zip_with(qvec, F.col("cent"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     scored = emb.join(F.broadcast(cents), "label").select(
-        "vec_id", "label", d2.alias("d2")
+        "vec_id", "label", sq_l2(qvec, "cent").alias("d2")
     )
     w = Window.partitionBy("label").orderBy(F.col("d2").desc(), "vec_id")
     return (
@@ -530,51 +527,6 @@ def _duckdb_spherical_sql(k: int = _K, n_iter: int = _N_ITER) -> str:
     return "".join(parts)
 
 
-def _spherical_assign_arrow(
-    vecs: DataFrame, cent_pairs: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Spherical assignment as one Arrow map pass (assign_arrow's cosine
-    twin): sim matrix accumulated dimension-by-dimension as
-    ``acc + p_j·c_j`` (the list_reduce fold's IEEE chain), divided by each
-    centroid's fold-order norm, argmax with numpy's first-maximum tie rule
-    — which over ascending cluster ids IS the oracle's (−sim, cluster)
-    struct-min. Emits (vec_id, cluster, sim)."""
-    import numpy as np
-    import pandas as pd
-
-    ids = np.array([int(c) for c, _ in cent_pairs], dtype=np.int64)
-    cmat = np.array([v for _, v in cent_pairs], dtype=np.float64)
-    k, d = cmat.shape
-    cnorm = np.zeros(k)
-    for j in range(d):
-        cnorm += cmat[:, j] * cmat[:, j]
-    cnorm = np.sqrt(cnorm)
-
-    def run(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            pts = np.array([np.asarray(e, dtype=np.float64) for e in batch["emb"]])
-            dot = np.zeros((pts.shape[0], k))
-            tmp = np.empty_like(dot)
-            for j in range(d):
-                np.multiply(pts[:, j, None], cmat[None, :, j], out=tmp)
-                np.add(dot, tmp, out=dot)
-            sim = dot / cnorm[None, :]
-            lab = sim.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": batch["vec_id"].astype("int64"),
-                    "cluster": ids[lab].astype("int32"),
-                    "sim": sim[np.arange(len(lab)), lab],
-                }
-            )
-
-    return vecs.select("vec_id", "emb").mapInPandas(
-        run, "vec_id long, cluster int, sim double"
-    )
-
-
 @register(
     "spherical_kmeans_assign",
     doc="iterative algorithm: spherical k-means (Dhillon-Modha) — Lloyd "
@@ -592,38 +544,21 @@ def spherical_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds, deterministic smallest-id seeds; output (vec_id, cluster,
     sim).
 
-    Scale shape identical to kmeans_embeddings: the k×d centroid model
-    rides the Arrow task closure (map-side assignment, no shuffle of the
-    corpus), one (cluster, dim)-keyed exact-integer aggregation per round,
-    k×d driver state. Exactness: micro-quantized components, fold-order
-    dot/norm chains, first-maximum tie rule — bit-equal to the unrolled
-    oracle at every round."""
-    from songs_etl_spark.operators.clustering import quantize_micro
+    Scale shape identical to kmeans_embeddings — the same trainer and
+    labelling pass with the cosine labeller (``cosine=True``): the k×d
+    centroid model rides the Arrow task closure (map-side assignment,
+    no shuffle of the corpus), one small exact-integer aggregation per
+    round, k×d driver state. Exactness: micro-quantized components,
+    fold-order dot/norm chains, first-maximum tie rule — bit-equal to the
+    unrolled oracle at every round."""
+    from songs_etl_spark.operators.clustering import assign_arrow, quantize_micro, train_centroids
     from songs_etl_spark.plans._util import spread, track_persist
 
     emb = t(spark, sf_dir, "embeddings")
     v = track_persist(
         spread(emb.select("vec_id", quantize_micro("embedding").alias("emb")), key="vec_id")
     )
-    seed_rows = sorted(
-        v.orderBy("vec_id").limit(_K).collect(), key=lambda r: r["vec_id"]
-    )
-    cents = [(i + 1, list(r["emb"])) for i, r in enumerate(seed_rows)]
-    for _ in range(_N_ITER):
-        assign = _spherical_assign_arrow(v, cents).select("vec_id", "cluster")
-        comp = (
-            assign.join(v, "vec_id")
-            .select("cluster", F.posexplode("emb").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg((F.sum("val") / F.count("*")).alias("m"))
-        )
-        rows = comp.groupBy("cluster").agg(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("ms")
-        ).collect()
-        cents = sorted(
-            (int(r["cluster"]), [p["m"] for p in r["ms"]]) for r in rows
-        )
-    return _spherical_assign_arrow(v, cents)
+    return assign_arrow(v, train_centroids(v, _K, _N_ITER, cosine=True), cosine=True)
 
 
 #: k-center coreset geometry: greedy-farthest-point (Gonzalez) picks after
@@ -698,40 +633,32 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (Lloyd discipline): per pick, ONE map-side distance update
     against the 1-vector broadcast pick (bcast-const) plus ONE global
-    argmax — the running min-distance column rides a persisted relation,
-    so pick r costs one pass regardless of r; driver state is the pick
-    list. Exactness: micro-int fold distances are exact integers, LEAST
-    and the (d DESC, vec_id) argmax are integer comparisons — bit-equal to
-    the unrolled oracle at every pick."""
+    argmax — the running min-distance column rides a relation cut each
+    pick (plans/_util.iterate), so pick r costs one pass regardless of r;
+    driver state is the pick list. An empty corpus picks nothing.
+    Exactness: micro-int fold distances are exact integers, LEAST and the
+    (d DESC, vec_id) argmax are integer comparisons — bit-equal to the
+    unrolled oracle at every pick."""
     from songs_etl_spark.operators.clustering import quantize_micro
-    from songs_etl_spark.plans._util import spread, track_persist
+    from songs_etl_spark.plans._util import cut, iterate, spread
 
     emb = t(spark, sf_dir, "embeddings")
     v = spread(emb.select("vec_id", quantize_micro("embedding").alias("emb")), key="vec_id")
-    seed = v.orderBy("vec_id").limit(1).collect()[0]
-    out = [(0, int(seed["vec_id"]), 0.0)]
+    out: list[tuple[int, int, float]] = []
 
     def d2_to(vec: list[float]) -> F.Column:
-        arr = F.array(*[F.lit(float(x)) for x in vec])
-        return F.aggregate(
-            F.zip_with("emb", arr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        return sq_l2("emb", F.array(*[F.lit(float(x)) for x in vec]))
 
-    cur = track_persist(v.select("vec_id", "emb", d2_to(list(seed["emb"])).alias("d")))
-    cur.count()
-    for r in range(1, _KC_PICKS + 1):
-        pick = cur.orderBy(F.col("d").desc(), "vec_id").limit(1).collect()[0]
-        out.append((r, int(pick["vec_id"]), float(pick["d"])))
-        nxt = track_persist(
-            cur.select(
-                "vec_id", "emb", F.least(F.col("d"), d2_to(list(pick["emb"]))).alias("d")
-            )
-        )
-        nxt.count()
-        cur.unpersist()
-        cur = nxt
+    def pick(cur: DataFrame) -> DataFrame:
+        (p,) = cur.orderBy(F.col("d").desc(), "vec_id").limit(1).collect()
+        out.append((len(out), int(p["vec_id"]), float(p["d"])))
+        return cur.select("vec_id", "emb", F.least(F.col("d"), d2_to(list(p["emb"]))).alias("d"))
+
+    seed = v.orderBy("vec_id").limit(1).collect()
+    if seed:  # an empty corpus picks nothing
+        out.append((0, int(seed[0]["vec_id"]), 0.0))
+        start = v.select("vec_id", "emb", d2_to(list(seed[0]["emb"])).alias("d"))
+        iterate(cut(start), pick, _KC_PICKS)
     return spark.createDataFrame(out, "pick_round int, vec_id bigint, d2_to_set double")
 
 
@@ -897,13 +824,6 @@ def kmeans_scalable_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", quantize_micro("embedding").alias("emb"))
 
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     dec = "decimal(38,0)"
     cand = (
         vecs.orderBy("vec_id")
@@ -913,7 +833,7 @@ def kmeans_scalable_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in range(1, rounds + 1):
         dmin = (
             vecs.crossJoin(F.broadcast(cand))
-            .select("vec_id", d2(F.col("emb"), F.col("cvec")).alias("dd"))
+            .select("vec_id", sq_l2("emb", "cvec").alias("dd"))
             .groupBy("vec_id")
             .agg(F.min("dd").cast("bigint").alias("d2"))
         )
@@ -973,7 +893,7 @@ def kmeans_scalable_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
         vecs.crossJoin(F.broadcast(cand))
         .select(
             "vec_id",
-            F.struct(d2(F.col("emb"), F.col("cvec")).alias("d2"), F.col("cid").alias("cid")).alias("s"),
+            F.struct(sq_l2("emb", "cvec").alias("d2"), F.col("cid").alias("cid")).alias("s"),
         )
         .groupBy("vec_id")
         .agg(F.min("s").alias("m"))
@@ -999,8 +919,8 @@ def kmeans_scalable_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc += (x - y) * (x - y)
         return acc
 
-    first = min(model.items(), key=lambda kv: (-kv[1][1], kv[0]))[0]
-    order = [first]
+    # An empty corpus has no candidates and yields no seeds.
+    order = [min(model, key=lambda c: (-model[c][1], c))] if model else []
     while len(order) < k and len(order) < len(model):
         best = None
         for cid, (vec, w) in model.items():

@@ -9,9 +9,11 @@ lookups summed — no float vector ever touched at query time.
 
 Exactness discipline (same contract as the k-means family,
 operators/clustering.py): components quantize to integer micro-units up
-front; per-subspace codebooks train with the shared Lloyd trainer
-(train_centroids — Arrow fold-order assignment, exact integer-sum means);
-distances fold dimension-by-dimension in array order; the ADC total sums
+front; the M subspace codebooks train together with the one Lloyd trainer
+(``train_centroids(subspaces=M)``: per round one Arrow stats pass labels
+every subspace, exact integer-sum means) and vectors encode in one
+``assign_arrow`` pass; distances fold dimension-by-dimension in array
+order; the ADC total sums
 the M partials left-to-right. Every float op sequence is reproduced
 verbatim by the unrolled DuckDB oracle, so the registered query is
 value-checked end to end — codebook training, encoding, and ADC ranking.
@@ -25,9 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from songs_etl_spark.functions.vectors import sq_l2
 from songs_etl_spark.operators.clustering import (
     _fold_d2,
+    assign_arrow,
     quantize_micro,
+    train_centroids,
 )
 from songs_etl_spark.plans._util import spread, t, track_persist
 from songs_etl_spark.plans.registry import register
@@ -166,129 +171,6 @@ def _duckdb_pq_sql(final_select: str | None = None, base_v: str | None = None) -
     return "".join(parts)
 
 
-def train_pq_codebooks(
-    emb: DataFrame, m: int = _PQ_M, dsub: int = _PQ_DSUB, k: int = _PQ_KS,
-    n_iter: int = _PQ_ITER,
-) -> list[list[tuple[int, list[float]]]]:
-    """Per-subspace PQ codebooks over a (vec_id, emb) relation already in
-    micro-units: subspace j trains on dims [j·dsub, (j+1)·dsub). Model size
-    m·k·dsub doubles on the driver — bounded by geometry, never by data.
-
-    All m subspaces train TOGETHER: one seed collect (the k smallest
-    vec_ids' full vectors, sliced driver-side) and then, per Lloyd round,
-    ONE Arrow stats pass over the corpus that assigns every subspace and
-    emits per-batch (sub, cluster, dim, Σv, n) partials — m·k·dsub rows a
-    batch — followed by one tiny aggregation + model-sized collect. The
-    per-subspace formulation (m separate ``train_centroids`` runs) scanned
-    the corpus m·n_iter times and paid m·(n_iter+1) driver round-trips;
-    this scans it n_iter times with n_iter round-trips. Results are
-    bit-identical: every training input is integer-valued doubles
-    (micro-units, their differences, or the ×25 integer OPQ rotation), so
-    partial sums are exact in any order below the same 2^53 envelope the
-    single ``F.sum`` already relied on, and the final mean is the same one
-    IEEE division Σv/n; assignment per subspace uses the same ``_fold_d2``
-    matrix and first-minimum argmin as ``assign_arrow``."""
-    import numpy as np
-    import pandas as pd
-
-    seed_rows = emb.orderBy("vec_id").limit(k).select("emb").collect()
-    books: list[list[tuple[int, list[float]]]] = [
-        [
-            (i + 1, [float(x) for x in r["emb"]][j * dsub : (j + 1) * dsub])
-            for i, r in enumerate(seed_rows)
-        ]
-        for j in range(m)
-    ]
-    for _ in range(n_iter):
-        cmats = [np.array([c for _, c in b], dtype=np.float64) for b in books]
-        cids = [[cid for cid, _ in b] for b in books]
-
-        def stats(
-            batches: Iterator["pd.DataFrame"], _cmats=cmats, _cids=cids
-        ) -> Iterator["pd.DataFrame"]:
-            for batch in batches:
-                if not len(batch):
-                    continue
-                pts = np.array(
-                    [np.asarray(e, dtype=np.float64) for e in batch["emb"]]
-                )
-                subs: list[int] = []
-                clus: list[int] = []
-                dims: list[int] = []
-                sums: list[float] = []
-                cnts: list[int] = []
-                for j in range(len(_cmats)):
-                    sp = pts[:, j * dsub : (j + 1) * dsub]
-                    lab = _fold_d2(sp, _cmats[j]).argmin(axis=1)
-                    for li, cid in enumerate(_cids[j]):
-                        mask = lab == li
-                        n = int(mask.sum())
-                        if not n:
-                            continue
-                        # exact: integer-valued doubles sum without rounding
-                        s = sp[mask].sum(axis=0)
-                        subs.extend([j] * dsub)
-                        clus.extend([int(cid)] * dsub)
-                        dims.extend(range(dsub))
-                        sums.extend(float(x) for x in s)
-                        cnts.extend([n] * dsub)
-                yield pd.DataFrame(
-                    {"sub": subs, "cluster": clus, "dim": dims, "s": sums, "n": cnts}
-                )
-
-        rows = (
-            emb.select("emb")
-            .mapInPandas(stats, "sub int, cluster int, dim int, s double, n long")
-            .groupBy("sub", "cluster", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        acc: dict[tuple[int, int], dict[int, tuple[float, int]]] = {}
-        for r in rows:
-            acc.setdefault((r["sub"], r["cluster"]), {})[r["dim"]] = (r["s"], r["n"])
-        books = []
-        for j in range(m):
-            sub_acc = {c: d for (sj, c), d in acc.items() if sj == j}
-            books.append(
-                [
-                    (c, [sub_acc[c][d][0] / sub_acc[c][d][1] for d in range(dsub)])
-                    for c in sorted(sub_acc)
-                ]
-            )
-    return books
-
-
-def pq_encode_arrow(
-    emb: DataFrame, books: list[list[tuple[int, list[float]]]], dsub: int = _PQ_DSUB
-) -> DataFrame:
-    """Encode every vector as M codeword ids in ONE Arrow map pass — the
-    codebooks ride the task closure (model-in-closure, the assign_arrow
-    pattern), each batch computes the fold-order distance matrix per
-    subspace and takes the (dist, cluster)-lexicographic argmin. Map-side
-    only: no shuffle, no join; output is (vec_id, code_0..code_{M-1})."""
-    import numpy as np
-    import pandas as pd
-
-    mats = [np.array([c for _, c in b], dtype=np.float64) for b in books]
-    ids = [np.array([cid for cid, _ in b], dtype=np.int64) for b in books]
-    m = len(books)
-    schema = "vec_id long, " + ", ".join(f"code_{j} int" for j in range(m))
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            pts = np.array([np.asarray(e, dtype=np.float64) for e in batch["emb"]])
-            out = {"vec_id": batch["vec_id"].astype("int64")}
-            for j in range(m):
-                subpts = pts[:, j * dsub : (j + 1) * dsub]
-                lab = _fold_d2(subpts, mats[j]).argmin(axis=1)
-                out[f"code_{j}"] = ids[j][lab].astype("int32")
-            yield pd.DataFrame(out)
-
-    return emb.select("vec_id", "emb").mapInPandas(run, schema)
-
-
 @register(
     "ann_pq_adc_topk",
     doc="similarity search, memory-scale path: product-quantization codes "
@@ -343,8 +225,8 @@ def pq_adc_topk(
     import numpy as np
     import pandas as pd
 
-    books = train_pq_codebooks(emb)
-    codes = pq_encode_arrow(emb.filter(F.col("vec_id") >= query_max_id), books)
+    books = train_centroids(emb, _PQ_KS, _PQ_ITER, subspaces=_PQ_M)
+    codes = assign_arrow(emb.filter(F.col("vec_id") >= query_max_id), books)
 
     q_rows = _query_rows(emb, query_max_id)
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
@@ -481,7 +363,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ — the index layout a billion-vector deployment actually
     ships: (1) each query picks its coarse cell against the broadcast
     one-representative-per-label table (:func:`_ivf_probes`, raw-float
-    cosine); (2) candidates carry their M PQ codes (pq_encode_arrow — at
+    cosine); (2) candidates carry their M PQ codes (``assign_arrow`` — at
     rest, the 64×-compressed index); (3) ADC here is JOIN-based
     (:func:`_ivf_adc_scored`), the JVM twin of ann_pq_adc_topk's
     closure-based scoring. Cell probe + broadcast lookups means per-query
@@ -494,10 +376,10 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both are exact-value-checked against the same unrolled training SQL."""
     probes = _ivf_probes(t(spark, sf_dir, "embeddings"), 1).select("query_id", "probe_label")
     emb = _micro_emb(spark, sf_dir, "label")
-    books = train_pq_codebooks(emb.select("vec_id", "emb"))
-    codes = pq_encode_arrow(
-        emb.filter(F.col("vec_id") >= 10).select("vec_id", "emb"), books
-    ).join(emb.select("vec_id", "label"), "vec_id")
+    books = train_centroids(emb, _PQ_KS, _PQ_ITER, subspaces=_PQ_M)
+    codes = assign_arrow(emb.filter(F.col("vec_id") >= 10), books).join(
+        emb.select("vec_id", "label"), "vec_id"
+    )
     q_rows = _query_rows(emb)
     tabs = _adc_tables(books, [r["emb"] for r in q_rows])
     return _top_k(
@@ -691,10 +573,10 @@ def _ivfpq_residual_scored(spark: SparkSession, sf_dir: str):
             F.zip_with("emb", "rep_emb", lambda a, b: a - b).alias("emb"),
         )
     )
-    books = train_pq_codebooks(res.select("vec_id", "emb"))
-    codes = pq_encode_arrow(
-        res.filter(F.col("vec_id") >= 10).select("vec_id", "emb"), books
-    ).join(emb.select("vec_id", "label"), "vec_id")
+    books = train_centroids(res, _PQ_KS, _PQ_ITER, subspaces=_PQ_M)
+    codes = assign_arrow(res.filter(F.col("vec_id") >= 10), books).join(
+        emb.select("vec_id", "label"), "vec_id"
+    )
 
     # Per-(query, probed-cell) residuals: ≤ |queries| rows of driver state.
     probe_map = {r["query_id"]: r["probe_label"] for r in probes.collect()}
@@ -787,15 +669,12 @@ def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
     nvec = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("n_emb"))
-    exact = F.aggregate(
-        F.zip_with("q_emb", "n_emb", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     refined = (
         nvec.join(F.broadcast(topc), "neighbor_id")
         .join(F.broadcast(qvec), "query_id")
-        .select("query_id", "probe_label", "neighbor_id", exact.alias("exact_dist"))
+        .select(
+            "query_id", "probe_label", "neighbor_id", sq_l2("q_emb", "n_emb").alias("exact_dist")
+        )
     )
     return _top_k(refined, _PQ_TOPK, "exact_dist", "neighbor_id").select(
         "query_id", "probe_label", "neighbor_id", "exact_dist", "rank"

@@ -15,10 +15,32 @@ watermarks both bound state and define late-data semantics.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from songs_etl_spark.plans._util import money
+from songs_etl_spark.plans._util import money, release
+
+
+@contextmanager
+def _checkpoints() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Eager local checkpoints scoped to one sink body: ``take(df)``
+    materializes ``df`` now (a plan that reads a path the sink later
+    overwrites must not re-run after the write), and every checkpoint
+    taken is released when the block exits, its writes done."""
+    held: list[DataFrame] = []
+
+    def take(df: DataFrame) -> DataFrame:
+        held.append(df.localCheckpoint(eager=True))
+        return held[-1]
+
+    try:
+        yield take
+    finally:
+        for df in held:
+            release(df)
 
 
 def hourly_events_watermarked(
@@ -96,7 +118,8 @@ def merge_batch_into(batch_df: DataFrame, target_path: str, keys: list[str]) -> 
         merged = merge_upsert(target, batch_df.select(*target.columns), keys)
     else:
         merged = batch_df
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
+    with _checkpoints() as take:
+        take(merged).write.mode("overwrite").parquet(target_path)
 
 
 def _hadoop_path_exists(spark, path: str) -> bool:
@@ -239,14 +262,13 @@ def admit_batch_into(
     # Materialize verdicts BEFORE the corpus merge overwrites the parquet
     # this plan reads — a lazy verdict plan would otherwise re-read the
     # already-updated corpus when the log merge evaluates it.
-    verdicts = admit_against_corpus(batch_df, corpus, threshold).localCheckpoint(
-        eager=True
-    )
-    admitted = batch_df.join(
-        verdicts.filter("is_new").select("doc_id"), "doc_id"
-    )
-    merge_batch_into(admitted, corpus_path, ["doc_id"])
-    merge_batch_into(verdicts, verdicts_path, ["doc_id"])
+    with _checkpoints() as take:
+        verdicts = take(admit_against_corpus(batch_df, corpus, threshold))
+        admitted = batch_df.join(
+            verdicts.filter("is_new").select("doc_id"), "doc_id"
+        )
+        merge_batch_into(admitted, corpus_path, ["doc_id"])
+        merge_batch_into(verdicts, verdicts_path, ["doc_id"])
 
 
 def admit_embedding_batch_into(
@@ -287,42 +309,41 @@ def admit_embedding_batch_into(
     else:
         corpus = spark.createDataFrame([], batch_df.schema)
     index_reps = corpus.select(F.col("vec_id").alias("rep"), "embedding")
-    if _hadoop_path_exists(spark, index_path):
-        index_sigs = (
-            spark.read.parquet(index_path)
-            .join(batch_ids.withColumnRenamed("vec_id", "rep"), "rep", "left_anti")
+    with _checkpoints() as take:
+        if _hadoop_path_exists(spark, index_path):
+            index_sigs = (
+                spark.read.parquet(index_path)
+                .join(batch_ids.withColumnRenamed("vec_id", "rep"), "rep", "left_anti")
+            )
+        else:
+            index_sigs = take(embedding_band_index(
+                index_reps, bits_per_band=bits_per_band, n_bands=n_bands, dim=dim
+            ))
+            # Bootstrap with an externally-seeded corpus (corpus_path exists but
+            # index_path does not): persist the corpus-derived signatures NOW,
+            # not just the admitted batch's, or the next drain reads an index
+            # that silently omits the seeded corpus and wrongly admits its
+            # near-duplicates. Checkpointed first so the probe below and this
+            # write share one materialization of the corpus scan.
+            if not corpus.isEmpty():
+                merge_batch_into(index_sigs, index_path, ["rep", "band"])
+        mb, rb = collapse_exact_duplicates(batch_df)
+        batch_sigs = embedding_band_index(
+            rb, bits_per_band=bits_per_band, n_bands=n_bands, dim=dim
         )
-    else:
-        index_sigs = embedding_band_index(
-            index_reps, bits_per_band=bits_per_band, n_bands=n_bands, dim=dim
-        ).localCheckpoint(eager=True)
-        # Bootstrap with an externally-seeded corpus (corpus_path exists but
-        # index_path does not): persist the corpus-derived signatures NOW,
-        # not just the admitted batch's, or the next drain reads an index
-        # that silently omits the seeded corpus and wrongly admits its
-        # near-duplicates. Checkpointed first so the probe below and this
-        # write share one materialization of the corpus scan.
-        if not corpus.isEmpty():
-            merge_batch_into(index_sigs, index_path, ["rep", "band"])
-    mb, rb = collapse_exact_duplicates(batch_df)
-    batch_sigs = embedding_band_index(
-        rb, bits_per_band=bits_per_band, n_bands=n_bands, dim=dim
-    )
-    # Materialize verdicts BEFORE any merge overwrites the parquet this
-    # plan reads (same discipline as admit_batch_into).
-    verdicts = _admission_verdicts(
-        mb, rb, batch_sigs, index_reps, index_sigs, threshold
-    ).localCheckpoint(eager=True)
-    admitted = batch_df.join(verdicts.filter("is_new").select("vec_id"), "vec_id")
-    admitted_sigs = embedding_band_index(
-        admitted.select(F.col("vec_id").alias("rep"), "embedding"),
-        bits_per_band=bits_per_band,
-        n_bands=n_bands,
-        dim=dim,
-    ).localCheckpoint(eager=True)
-    merge_batch_into(admitted, corpus_path, ["vec_id"])
-    merge_batch_into(admitted_sigs, index_path, ["rep", "band"])
-    merge_batch_into(verdicts, verdicts_path, ["vec_id"])
+        # Materialize verdicts BEFORE any merge overwrites the parquet this
+        # plan reads (same discipline as admit_batch_into).
+        verdicts = take(
+            _admission_verdicts(mb, rb, batch_sigs, index_reps, index_sigs, threshold)
+        )
+        admitted = batch_df.join(verdicts.filter("is_new").select("vec_id"), "vec_id")
+        admitted_sigs = take(embedding_band_index(
+            admitted.select(F.col("vec_id").alias("rep"), "embedding"),
+            bits_per_band=bits_per_band, n_bands=n_bands, dim=dim,
+        ))
+        merge_batch_into(admitted, corpus_path, ["vec_id"])
+        merge_batch_into(admitted_sigs, index_path, ["rep", "band"])
+        merge_batch_into(verdicts, verdicts_path, ["vec_id"])
 
 
 def compact_embedding_admission_state(
@@ -389,17 +410,14 @@ def compact_embedding_admission_state(
         n_bands=n_bands,
         dim=dim,
     )
-    survivors = corpus.join(
-        verdicts.filter("is_new").select("vec_id"), "vec_id"
-    ).localCheckpoint(eager=True)
-    sigs = embedding_band_index(
-        survivors.select(F.col("vec_id").alias("rep"), "embedding"),
-        bits_per_band=bits_per_band,
-        n_bands=n_bands,
-        dim=dim,
-    ).localCheckpoint(eager=True)
-    survivors.write.mode("overwrite").parquet(corpus_path)
-    sigs.write.mode("overwrite").parquet(index_path)
+    with _checkpoints() as take:
+        survivors = take(corpus.join(verdicts.filter("is_new").select("vec_id"), "vec_id"))
+        sigs = take(embedding_band_index(
+            survivors.select(F.col("vec_id").alias("rep"), "embedding"),
+            bits_per_band=bits_per_band, n_bands=n_bands, dim=dim,
+        ))
+        survivors.write.mode("overwrite").parquet(corpus_path)
+        sigs.write.mode("overwrite").parquet(index_path)
 
 
 def admit_embeddings_stream(
@@ -684,51 +702,50 @@ def admit_text_batch_indexed(
         .groupBy("db")
         .agg(F.min("da").alias("duplicate_of"))
     )
-    verdicts = (
-        batch_ids.join(dups.withColumnRenamed("db", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id", "duplicate_of", F.col("duplicate_of").isNull().alias("is_new")
+    with _checkpoints() as take:
+        verdicts = take(
+            batch_ids.join(dups.withColumnRenamed("db", "doc_id"), "doc_id", "left").select(
+                "doc_id", "duplicate_of", F.col("duplicate_of").isNull().alias("is_new")
+            )
         )
-        .localCheckpoint(eager=True)
-    )
 
-    # State update — BATCH-SIZED segment appends only (never a corpus-sized
-    # rewrite): the admitted docs' postings (while rare), their df deltas,
-    # their size rows, and negative size deltas for docs whose shingles
-    # this admission flipped hot.
-    admitted_ids = verdicts.filter("is_new").select("doc_id")
-    admitted_sh = bsh.join(admitted_ids, "doc_id")
-    adm_cnt = admitted_sh.groupBy("s").agg(F.count("*").alias("ac"))
-    counts_upd = counts.join(adm_cnt, "s", "full").select(
-        "s",
-        F.coalesce("df", F.lit(0)).alias("df0"),
-        (F.coalesce("df", F.lit(0)) + F.coalesce("ac", F.lit(0))).alias("df"),
-    )
-    flips = counts_upd.filter((F.col("df0") <= cap) & (F.col("df") > cap)).select("s")
-    rare_new = counts_upd.filter(F.col("df") <= cap).select("s")
-    dec = postings.join(flips, "s").groupBy("doc_id").agg(F.count("*").alias("d"))
-    seg_postings = admitted_sh.join(rare_new, "s").select("s", "doc_id")
-    seg_counts = adm_cnt.select("s", F.col("ac").alias("d"))
-    seg_sizes = (
-        admitted_sh.join(rare_new, "s")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("d"))
-        .unionByName(dec.select("doc_id", (-F.col("d")).alias("d")))
-    )
-    # Corpus and verdict log are segment-written too (admitted docs and a
-    # batch's verdicts are immutable and disjoint across batches; a replay
-    # overwrites exactly its own segment) — NO write in this sink scales
-    # with the corpus.
-    for seg_df, path in (
-        (seg_postings, postings_path),
-        (seg_counts, counts_path),
-        (seg_sizes, sizes_path),
-        (batch_df.join(admitted_ids, "doc_id"), corpus_path),
-        (verdicts, verdicts_path),
-    ):
-        seg_df = seg_df.localCheckpoint(eager=True)
-        if not seg_df.isEmpty():
-            seg_df.write.mode("overwrite").parquet(f"{path}/seg={seg_id}")
+        # State update — BATCH-SIZED segment appends only (never a corpus-sized
+        # rewrite): the admitted docs' postings (while rare), their df deltas,
+        # their size rows, and negative size deltas for docs whose shingles
+        # this admission flipped hot.
+        admitted_ids = verdicts.filter("is_new").select("doc_id")
+        admitted_sh = bsh.join(admitted_ids, "doc_id")
+        adm_cnt = admitted_sh.groupBy("s").agg(F.count("*").alias("ac"))
+        counts_upd = counts.join(adm_cnt, "s", "full").select(
+            "s",
+            F.coalesce("df", F.lit(0)).alias("df0"),
+            (F.coalesce("df", F.lit(0)) + F.coalesce("ac", F.lit(0))).alias("df"),
+        )
+        flips = counts_upd.filter((F.col("df0") <= cap) & (F.col("df") > cap)).select("s")
+        rare_new = counts_upd.filter(F.col("df") <= cap).select("s")
+        dec = postings.join(flips, "s").groupBy("doc_id").agg(F.count("*").alias("d"))
+        seg_postings = admitted_sh.join(rare_new, "s").select("s", "doc_id")
+        seg_counts = adm_cnt.select("s", F.col("ac").alias("d"))
+        seg_sizes = (
+            admitted_sh.join(rare_new, "s")
+            .groupBy("doc_id")
+            .agg(F.count("*").alias("d"))
+            .unionByName(dec.select("doc_id", (-F.col("d")).alias("d")))
+        )
+        # Corpus and verdict log are segment-written too (admitted docs and a
+        # batch's verdicts are immutable and disjoint across batches; a replay
+        # overwrites exactly its own segment) — NO write in this sink scales
+        # with the corpus.
+        for seg_df, path in (
+            (seg_postings, postings_path),
+            (seg_counts, counts_path),
+            (seg_sizes, sizes_path),
+            (batch_df.join(admitted_ids, "doc_id"), corpus_path),
+            (verdicts, verdicts_path),
+        ):
+            seg_df = take(seg_df)
+            if not seg_df.isEmpty():
+                seg_df.write.mode("overwrite").parquet(f"{path}/seg={seg_id}")
     bsh.unpersist()
 
 
@@ -759,35 +776,33 @@ def compact_text_admission_state(
     postings_path = state_dir + "/postings"
     if not _hadoop_path_exists(spark, postings_path):
         return
-    counts = (
-        spark.read.parquet(state_dir + "/counts")
-        .groupBy("s")
-        .agg(F.sum("d").alias("d"))
-        .filter(F.col("d") > 0)
-        .localCheckpoint(eager=True)
-    )
-    postings = (
-        spark.read.parquet(postings_path)
-        .join(counts.filter(F.col("d") <= cap).select("s"), "s")
-        .select("s", "doc_id")
-        .localCheckpoint(eager=True)
-    )
-    sizes = (
-        spark.read.parquet(state_dir + "/sizes")
-        .groupBy("doc_id")
-        .agg(F.sum("d").alias("d"))
-        .filter(F.col("d") > 0)
-        .localCheckpoint(eager=True)
-    )
-    for name, df in (("postings", postings), ("counts", counts), ("sizes", sizes)):
-        path = f"{state_dir}/{name}"
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-        tmp_path = spark._jvm.org.apache.hadoop.fs.Path(path + ".__compact__")
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(tmp_path, True)
-        df.write.mode("overwrite").parquet(f"{path}.__compact__/seg=0")
-        fs.delete(jvm_path, True)
-        fs.rename(tmp_path, jvm_path)
+    with _checkpoints() as take:
+        counts = take(
+            spark.read.parquet(state_dir + "/counts")
+            .groupBy("s")
+            .agg(F.sum("d").alias("d"))
+            .filter(F.col("d") > 0)
+        )
+        postings = take(
+            spark.read.parquet(postings_path)
+            .join(counts.filter(F.col("d") <= cap).select("s"), "s")
+            .select("s", "doc_id")
+        )
+        sizes = take(
+            spark.read.parquet(state_dir + "/sizes")
+            .groupBy("doc_id")
+            .agg(F.sum("d").alias("d"))
+            .filter(F.col("d") > 0)
+        )
+        for name, df in (("postings", postings), ("counts", counts), ("sizes", sizes)):
+            path = f"{state_dir}/{name}"
+            jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
+            tmp_path = spark._jvm.org.apache.hadoop.fs.Path(path + ".__compact__")
+            fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+            fs.delete(tmp_path, True)
+            df.write.mode("overwrite").parquet(f"{path}.__compact__/seg=0")
+            fs.delete(jvm_path, True)
+            fs.rename(tmp_path, jvm_path)
 
 
 def admit_documents_stream_indexed(

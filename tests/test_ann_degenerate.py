@@ -1,5 +1,5 @@
-"""Degenerate-input leg for the vector-search family (plans/similarity.py and
-plans/pq.py): every query must match its DuckDB oracle — and raise nothing —
+"""Degenerate-input leg for the vector-search and clustering families
+(plans/similarity.py, plans/pq.py and plans/clustering.py): every query must match its DuckDB oracle — and raise nothing —
 when the embeddings table is empty, has no query rows (vec_id < 10), or holds
 a single row. The other tables are the sf0.001 originals."""
 
@@ -28,7 +28,7 @@ if not hasattr(oracle_check, "compare"):
 ANN_QUERIES = sorted(
     name
     for name, spec in REGISTRY.items()
-    if spec.fn.__module__.rsplit(".", 1)[-1] in ("similarity", "pq")
+    if spec.fn.__module__.rsplit(".", 1)[-1] in ("similarity", "pq", "clustering")
 )
 
 VARIANTS = {

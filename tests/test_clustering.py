@@ -4,7 +4,12 @@ hand-built vectors where the right answer is obvious)."""
 
 from __future__ import annotations
 
-from songs_etl_spark.operators.clustering import kmeans_assign
+from songs_etl_spark.operators.clustering import (
+    assign_arrow,
+    kmeans_assign,
+    quantize_micro,
+    train_centroids,
+)
 
 
 def _toy(spark):
@@ -27,15 +32,19 @@ def test_kmeans_separates_blobs(spark):
     assert got[0] != got[1]
 
 
+def _spherical(df, k, n_iter):
+    """spherical_kmeans_assign's trainer and labelling pass over ``df``."""
+    vecs = df.select("vec_id", quantize_micro("embedding").alias("emb"))
+    return assign_arrow(vecs, train_centroids(vecs, k, n_iter, cosine=True), cosine=True)
+
+
 def test_kmeans_covers_every_vector_and_is_deterministic(spark):
     df = _toy(spark)
-    a = sorted((r.vec_id, r.cluster, r.dist) for r in kmeans_assign(df, k=2, n_iter=3).collect())
-    b = sorted(
-        (r.vec_id, r.cluster, r.dist)
-        for r in kmeans_assign(df.repartition(5), k=2, n_iter=3).collect()
-    )
-    assert a == b  # bit-identical under different partitioning
-    assert len(a) == 6
+    for run in (kmeans_assign, _spherical):
+        a = sorted(tuple(r) for r in run(df, k=2, n_iter=3).collect())
+        b = sorted(tuple(r) for r in run(df.repartition(5), k=2, n_iter=3).collect())
+        assert a == b  # bit-identical under different partitioning
+        assert len(a) == 6
 
 
 def test_kmeans_distance_is_to_own_centroid(spark):

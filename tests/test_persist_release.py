@@ -48,3 +48,22 @@ def test_shingle_memo_is_shared_and_released(spark):
     assert _persisted(spark) - before
     clear_tracked_persists()
     assert not _persisted(spark) - before
+
+
+STREAMING = (
+    "streaming_foreachbatch_upsert",
+    "streaming_dedup_admission",
+    "streaming_indexed_admission",
+)
+
+
+@pytest.mark.parametrize("name", STREAMING)
+def test_streaming_sinks_release_their_checkpoints(spark, name):
+    """The foreachBatch sinks checkpoint eagerly and release each checkpoint
+    once their batch's writes are done: none outlives the query."""
+    clear_tracked_persists()
+    before = _persisted(spark)
+    REGISTRY[name].fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    left = [i for i in _persisted(spark) - before if rdds.get(i).rdd().isLocallyCheckpointed()]
+    assert not left, f"{name} left checkpoint RDDs {left}"

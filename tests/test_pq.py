@@ -7,16 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from songs_etl_spark.operators.clustering import quantize_micro
+from songs_etl_spark.operators.clustering import assign_arrow, quantize_micro, train_centroids
 from songs_etl_spark.plans import REGISTRY
 from songs_etl_spark.plans._util import t
-from songs_etl_spark.plans.pq import (
-    _PQ_DSUB,
-    _PQ_KS,
-    _PQ_M,
-    pq_encode_arrow,
-    train_pq_codebooks,
-)
+from songs_etl_spark.plans.pq import _PQ_DSUB, _PQ_ITER, _PQ_KS, _PQ_M
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,8 +22,12 @@ def emb(spark):
     )
 
 
+def _books(emb):
+    return train_centroids(emb, _PQ_KS, _PQ_ITER, subspaces=_PQ_M)
+
+
 def test_codebook_geometry(emb):
-    books = train_pq_codebooks(emb)
+    books = _books(emb)
     assert len(books) == _PQ_M
     for book in books:
         assert 1 <= len(book) <= _PQ_KS
@@ -38,12 +36,12 @@ def test_codebook_geometry(emb):
 
 
 def test_encode_is_deterministic_and_total(spark, emb):
-    books = train_pq_codebooks(emb)
+    books = _books(emb)
     n = emb.count()
     a = {r.vec_id: tuple(r[f"code_{j}"] for j in range(_PQ_M))
-         for r in pq_encode_arrow(emb, books).collect()}
+         for r in assign_arrow(emb, books).collect()}
     b = {r.vec_id: tuple(r[f"code_{j}"] for j in range(_PQ_M))
-         for r in pq_encode_arrow(emb.repartition(7), books).collect()}
+         for r in assign_arrow(emb.repartition(7), books).collect()}
     assert len(a) == n and a == b  # partitioning-independent
     valid = {cid for book in books for cid, _ in book}
     assert all(c in valid for codes in a.values() for c in codes)
