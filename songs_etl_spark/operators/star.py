@@ -13,11 +13,15 @@ Reference trace per step (file:line in /root/reference/cloud-functions):
 - fact_songs: cf_transform/main.py:98-176 (J1-J5 + A1 + C1 + C4 + P4)
 
 Scale design: every flatten is a generated-column ``explode`` (no
-materialized intermediate), every dim join is broadcast (dims are orders of
-magnitude smaller than the fact), the only repartitioning operation is the
+materialized intermediate). The fact resolves its artist and track keys by
+recomputing the deterministic surrogate (C2) from the natural key instead of
+joining the dims, and its playlist key rides on the owner lookup (J1); the
+only joins left are two broadcasts (owners and ``dim_user``), so the fact
+needs no dim to be written first. The only repartitioning operation is the
 full-row dedup A1 (one shuffle keyed by all fact columns), and the fact is
 written partitioned by ``ingest_date`` and sorted on the declared clustering
-keys (terraform/bigquery.tf:13) so downstream scans prune.
+keys (terraform/bigquery.tf:13) so downstream scans prune. Every table the
+pipeline writes is re-read with its declared schema: no footer-inference job.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+from pyspark.util import inheritable_thread_target
 
 from songs_etl_spark import schemas
 from songs_etl_spark.functions.casts import try_iso_timestamp
@@ -64,7 +69,18 @@ def ingest_landing_to_parquet(
         "ingest_date", F.lit(ingest_date)
     )
     df.write.mode("overwrite").partitionBy("ingest_date").parquet(out_path)
-    return spark.read.parquet(out_path).filter(F.col("ingest_date") == ingest_date)
+    return _read_day(spark, out_path, schema, ingest_date)
+
+
+def _read_day(
+    spark: SparkSession, path: str, schema: T.StructType, ingest_date: str
+) -> DataFrame:
+    """One ``ingest_date`` partition of a table written partitioned by that
+    column, read with its declared schema: no footer-inference job, and a
+    day that wrote no rows (hence no partition directory) reads as empty
+    instead of failing to infer a schema."""
+    dated = T.StructType([*schema.fields, T.StructField("ingest_date", T.DateType())])
+    return spark.read.schema(dated).parquet(path).filter(F.col("ingest_date") == ingest_date)
 
 
 # ---------------------------------------------------------------------------
@@ -144,19 +160,21 @@ def playlist_owner(raw_playlists: DataFrame) -> DataFrame:
 
 
 def build_fact_songs(
-    raw_playlists: DataFrame,
-    raw_tracks: DataFrame,
-    dim_user: DataFrame,
-    dim_playlist: DataFrame,
-    dim_artist: DataFrame,
-    dim_track: DataFrame,
+    raw_playlists: DataFrame, raw_tracks: DataFrame, dim_user: DataFrame
 ) -> DataFrame:
     """The star-join 'query': flatten to one row per (playlist, track, artist)
     (F2+F3, cf_transform/main.py:136-151), attach the platform literal (C4),
-    resolve the owning user (J1), dedup full rows (A1), resolve natural→
-    surrogate keys against all four dims (J2-J5, left joins, unmatched→NULL),
-    cast added_at with NULL-on-error (C1), and project the declared fact
-    columns in order (P4). All dim joins are broadcast."""
+    resolve the owning user and the playlist key (J1), dedup full rows (A1),
+    resolve natural→surrogate keys (J2-J5, unmatched→NULL), cast added_at
+    with NULL-on-error (C1), and project the declared fact columns in order
+    (P4).
+
+    J2-J4 need no dim: ``dim_artist`` and ``dim_track`` are built from the
+    same ``raw_tracks`` explode, so every non-NULL artist or track id here is
+    in its dim and its surrogate is ``surrogate_key`` of the id. The playlist
+    key rides on the owner lookup, whose key set is exactly
+    ``dim_playlist``'s (the same explode of ``raw_playlists``), so an orphan
+    playlist still gets NULL. Owners and ``dim_user`` are broadcast."""
     flat = (
         raw_tracks.select("playlist_id", F.explode("tracks").alias("t"))
         .select(
@@ -174,7 +192,9 @@ def build_fact_songs(
             F.col("a.id").alias("artist_id"),
         )
     )
-    owners = playlist_owner(raw_playlists)
+    owners = playlist_owner(raw_playlists).withColumn(
+        "dim_playlist_id", surrogate_key("playlist_id")
+    )
     fact = (
         flat.join(F.broadcast(owners), "playlist_id", "left")
         .withColumn("dim_platform_id", F.lit(PLATFORM_ID))
@@ -189,9 +209,13 @@ def build_fact_songs(
                 "is_local",
             ]
         )
-        .join(F.broadcast(dim_playlist.select("dim_playlist_id", "playlist_id")), "playlist_id", "left")
-        .join(F.broadcast(dim_artist.select("dim_artist_id", "artist_id")), "artist_id", "left")
-        .join(F.broadcast(dim_track.select("dim_track_id", "track_id")), "track_id", "left")
+        # J3/J4: the dim's own surrogate; a NULL id is in no dim (P5).
+        .withColumns(
+            {
+                f"dim_{k}_id": F.when(F.col(f"{k}_id").isNotNull(), surrogate_key(f"{k}_id"))
+                for k in ("artist", "track")
+            }
+        )
         .join(F.broadcast(dim_user.select("dim_user_id", "spotify_id")), "spotify_id", "left")
         .withColumn("added_at", try_iso_timestamp("added_at_raw"))
     )
@@ -212,77 +236,82 @@ def run_pipeline(
     ingest_date: str,
     incremental: bool = False,
 ) -> dict[str, DataFrame]:
-    """The whole daily batch (terraform/workflow.tf:11-70) as one lazy Spark
-    program: extract → four PARALLEL dimension builds → fact, with every
-    write an idempotent overwrite (O5). Returns the written tables re-read
-    from the warehouse.
+    """The whole daily batch (terraform/workflow.tf:11-70) as one Spark
+    program in two phases, with every write an idempotent overwrite (O5).
+    Returns the written tables re-read from the warehouse with their
+    declared schemas.
 
-    O2 parallelism: the reference workflow runs the four dimension builds as
-    concurrent branches (workflow.tf:26-59). Here each branch is a thread
-    submitting its write job to the shared SparkSession — SparkContext job
-    submission is thread-safe, the four jobs run simultaneously under the
-    FIFO scheduler and share executors, so a small dim (platform: 1 literal
-    row) never serializes behind a big one. Threads carry no data — only job
-    submission — all real work stays on the executors."""
-    raw_playlists = ingest_landing_to_parquet(
-        spark,
-        playlists_json,
-        schemas.RAW_PLAYLISTS_SCHEMA,
-        os.path.join(warehouse_dir, "raw", "playlists"),
-        ingest_date,
-    )
-    raw_tracks = ingest_landing_to_parquet(
-        spark,
-        tracks_json,
-        schemas.RAW_TRACKS_SCHEMA,
-        os.path.join(warehouse_dir, "raw", "tracks"),
-        ingest_date,
-    )
+    O2 parallelism: the reference workflow runs extract, then four
+    concurrent dimension branches, then the transform (workflow.tf:26-59).
+    Here the only real data dependency is raw Parquet → everything else, so
+    phase 1 runs the two ingests concurrently and phase 2 runs the four dim
+    writes and the fact write concurrently: the fact recomputes the dims'
+    deterministic surrogate keys instead of joining the written dims (see
+    ``build_fact_songs``), so it has nothing to wait for. Each branch is a
+    thread of one pool submitting its write job to the shared SparkSession —
+    job submission is thread-safe, the jobs run simultaneously and share
+    executors, and no branch waits on another branch's future. Threads carry
+    no data, only job submission, and inherit the caller's job group and
+    other local properties."""
+    fact_path = os.path.join(warehouse_dir, "fact_songs")
+    with ThreadPoolExecutor(max_workers=5) as pool:  # phase 2: four dims + fact
 
-    dims = {
-        "dim_platform": (build_dim_platform(spark), schemas.DIM_PLATFORM_SCHEMA),
-        "dim_playlist": (build_dim_playlist(raw_playlists), schemas.DIM_PLAYLIST_SCHEMA),
-        "dim_artist": (build_dim_artist(raw_tracks), schemas.DIM_ARTIST_SCHEMA),
-        "dim_track": (build_dim_track(raw_tracks), schemas.DIM_TRACK_SCHEMA),
-    }
-    def write_dim(name: str, df: DataFrame, schema) -> tuple[str, str]:
-        path = os.path.join(warehouse_dir, name)
-        overwrite_table(df, path, schema=schema)
-        return name, path
+        def run(fn, *args, **kwargs):
+            return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
 
-    out: dict[str, DataFrame] = {}
-    with ThreadPoolExecutor(max_workers=len(dims)) as pool:
-        futures = [
-            pool.submit(write_dim, name, df, schema)
+        # Phase 1: both landing blobs → raw Parquet.
+        ingests = [
+            run(
+                ingest_landing_to_parquet,
+                spark,
+                path,
+                schema,
+                os.path.join(warehouse_dir, "raw", entity),
+                ingest_date,
+            )
+            for entity, path, schema in (
+                ("playlists", playlists_json, schemas.RAW_PLAYLISTS_SCHEMA),
+                ("tracks", tracks_json, schemas.RAW_TRACKS_SCHEMA),
+            )
+        ]
+        raw_playlists, raw_tracks = (ingest.result() for ingest in ingests)
+
+        # Phase 2: the fact and the four dims, all from raw Parquet. The fact
+        # is the longest branch, so it is submitted first.
+        fact = build_fact_songs(raw_playlists, raw_tracks, dim_user).withColumn(
+            "ingest_date", F.lit(ingest_date)
+        )
+        # Mirror the BigQuery clustering declaration (terraform/bigquery.tf:13).
+        # Default (reference parity, cf_transform/main.py:72-75): WRITE_TRUNCATE
+        # full refresh. incremental=True is the multi-day warehouse mode — a
+        # dynamic partition overwrite rewrites ONLY this run's ingest_date
+        # partition, so day N's load is O(day N) and prior days survive; the
+        # O5 semantic that actually holds at 100× data.
+        writes = [
+            run(
+                overwrite_partitions if incremental else overwrite_table,
+                fact,
+                fact_path,
+                partition_by=["ingest_date"],
+                sort_within_partitions=["dim_platform_id", "dim_playlist_id", "dim_user_id"],
+            )
+        ]
+        dims = {
+            "dim_platform": (build_dim_platform(spark), schemas.DIM_PLATFORM_SCHEMA),
+            "dim_playlist": (build_dim_playlist(raw_playlists), schemas.DIM_PLAYLIST_SCHEMA),
+            "dim_artist": (build_dim_artist(raw_tracks), schemas.DIM_ARTIST_SCHEMA),
+            "dim_track": (build_dim_track(raw_tracks), schemas.DIM_TRACK_SCHEMA),
+        }
+        writes += [
+            run(overwrite_table, df, os.path.join(warehouse_dir, name), schema=schema)
             for name, (df, schema) in dims.items()
         ]
-        for future in futures:
-            name, path = future.result()  # re-raises any branch failure
-            out[name] = spark.read.parquet(path)
+        for write in writes:
+            write.result()  # re-raises any branch failure
 
-    fact = build_fact_songs(
-        raw_playlists,
-        raw_tracks,
-        dim_user,
-        out["dim_playlist"],
-        out["dim_artist"],
-        out["dim_track"],
-    ).withColumn("ingest_date", F.lit(ingest_date))
-    fact_path = os.path.join(warehouse_dir, "fact_songs")
-    # Mirror the BigQuery clustering declaration (terraform/bigquery.tf:13).
-    # Default (reference parity, cf_transform/main.py:72-75): WRITE_TRUNCATE
-    # full refresh. incremental=True is the multi-day warehouse mode — a
-    # dynamic partition overwrite rewrites ONLY this run's ingest_date
-    # partition, so day N's load is O(day N) and prior days survive; the
-    # O5 semantic that actually holds at 100× data.
-    write = overwrite_partitions if incremental else overwrite_table
-    write(
-        fact,
-        fact_path,
-        partition_by=["ingest_date"],
-        sort_within_partitions=["dim_platform_id", "dim_playlist_id", "dim_user_id"],
-    )
-    out["fact_songs"] = spark.read.parquet(fact_path).filter(
-        F.col("ingest_date") == ingest_date
-    )
+    out = {
+        name: spark.read.schema(schema).parquet(os.path.join(warehouse_dir, name))
+        for name, (_, schema) in dims.items()
+    }
+    out["fact_songs"] = _read_day(spark, fact_path, schemas.FACT_SONGS_SCHEMA, ingest_date)
     return out

@@ -85,14 +85,7 @@ def test_fact_cardinality_bound(spark, docs):
     dim_user = spark.createDataFrame(
         [("k1", "User", "u1")], schema=schemas.DIM_USER_SCHEMA
     )
-    fact = star.build_fact_songs(
-        playlists,
-        spark_df,
-        dim_user,
-        star.build_dim_playlist(playlists),
-        star.build_dim_artist(spark_df),
-        star.build_dim_track(spark_df),
-    )
+    fact = star.build_fact_songs(playlists, spark_df, dim_user)
     raw_pairs = sum(len(t["artists"]) for d in docs for t in d["tracks"])
     assert fact.count() <= raw_pairs
 

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from songs_etl_spark import schemas
+from songs_etl_spark.functions.casts import try_iso_timestamp
 from songs_etl_spark.functions.keys import surrogate_key
 from songs_etl_spark.operators import star
 from songs_etl_spark.sources.json_source import read_landing_json
@@ -111,6 +113,42 @@ def test_fact_fk_integrity(warehouse, dim_user):
     assert len(orphan) == 1
     assert orphan[0].dim_playlist_id is None
     assert orphan[0].dim_user_id is None
+
+
+def test_fact_equals_old_star_join(raw, warehouse, dim_user):
+    """The fact resolves J2-J4 without the dims. The star join it replaces,
+    left joins of its natural keys against the written dims, gives the same
+    row multiset, including the orphan playlist (no dim_playlist row), the
+    NULL-id artist and the local track (NULL track id)."""
+    from collections import Counter
+
+    flat = (
+        raw["tracks"]
+        .select("playlist_id", F.explode("tracks").alias("t"))
+        .select(
+            "playlist_id",
+            F.col("t.id").alias("track_id"),
+            F.col("t.added_at").alias("added_at_raw"),
+            F.col("t.is_local").alias("is_local"),
+            F.explode("t.artists.id").alias("artist_id"),
+        )
+    )
+    old = (
+        flat.join(star.playlist_owner(raw["playlists"]), "playlist_id", "left")
+        .withColumn("dim_platform_id", F.lit(star.PLATFORM_ID))
+        .dropDuplicates()
+        .join(warehouse["dim_playlist"].drop("name"), "playlist_id", "left")
+        .join(warehouse["dim_artist"].drop("name"), "artist_id", "left")
+        .join(warehouse["dim_track"].drop("name"), "track_id", "left")
+        .join(dim_user.drop("name"), "spotify_id", "left")
+        .withColumn("added_at", try_iso_timestamp("added_at_raw"))
+        .select(*schemas.FACT_SONGS_COLUMNS)
+        .collect()
+    )
+    new = warehouse["fact_songs"].select(*schemas.FACT_SONGS_COLUMNS).collect()
+    assert Counter(map(tuple, old)) == Counter(map(tuple, new))
+    for key in ("dim_playlist_id", "dim_artist_id", "dim_track_id"):
+        assert any(r[key] is None for r in old), key
 
 
 def test_fact_added_at_coerced(warehouse):
@@ -252,3 +290,67 @@ def test_incremental_fact_load_preserves_prior_days(
     star.run_pipeline(*args, ingest_date="2024-05-03")
     only = {str(r[0]) for r in spark.read.parquet(fact_path).select("ingest_date").distinct().collect()}
     assert only == {"2024-05-03"}
+
+
+@pytest.mark.parametrize(
+    "playlists, tracks, counts",
+    [
+        # An empty landing day: both blobs are empty arrays.
+        ([], [], (1, 0, 0, 0, 0)),
+        # A day whose only playlist has no tracks gives a 0-row fact.
+        (
+            [{"spotify_id": "u", "playlists": [{"id": "p", "name": "P"}]}],
+            [{"playlist_id": "p", "tracks": []}],
+            (1, 1, 0, 0, 0),
+        ),
+    ],
+    ids=["empty_blobs", "no_fact_rows"],
+)
+def test_empty_day(spark, dim_user, tmp_path, playlists, tracks, counts):
+    """A 0-row partitioned write leaves no partition directory; the declared
+    re-read schema reads it as empty instead of failing to infer one."""
+    import json
+
+    (tmp_path / "playlists.json").write_text(json.dumps(playlists))
+    (tmp_path / "tracks.json").write_text(json.dumps(tracks))
+    out = star.run_pipeline(
+        spark,
+        str(tmp_path / "playlists.json"),
+        str(tmp_path / "tracks.json"),
+        dim_user,
+        str(tmp_path / "warehouse"),
+        ingest_date="2024-05-02",
+    )
+    names = ("dim_platform", "dim_playlist", "dim_artist", "dim_track", "fact_songs")
+    assert tuple(out[name].count() for name in names) == counts
+    assert out["fact_songs"].schema["ingest_date"].dataType == T.DateType()
+
+
+#: Spark jobs one pipeline run over the fixture takes: 7 writes (2 ingests,
+#: 4 dims, the fact), the map stages adaptive execution runs as their own
+#: jobs, and the 2 fact broadcasts. Every re-read has a declared schema and
+#: runs none.
+PIPELINE_JOBS = 14
+
+
+def test_pipeline_jobs_run_in_callers_group(spark, landing_dir, dim_user, tmp_path):
+    """Every job of the pipeline, including those its pool threads submit,
+    runs under the caller's job group, and the run takes no schema-inference
+    job: at least one job per write, at most ``PIPELINE_JOBS``."""
+    sc = spark.sparkContext
+    group = "star:pipeline-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        star.run_pipeline(
+            spark,
+            str(landing_dir / "playlists.json"),
+            str(landing_dir / "tracks.json"),
+            dim_user,
+            str(tmp_path / "warehouse"),
+            ingest_date="2024-05-02",
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 7 <= n_jobs <= PIPELINE_JOBS, n_jobs
